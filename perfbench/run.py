@@ -1,6 +1,6 @@
 """The repo benchmark: one run of one workload, closed loop, one client.
 
-    python3 perfbench/run.py --workload analyst-sf0.01 --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload analyst-sf0.01 --seed 1 --seconds 5 --trace 0
 
 Run from the repo root. The last line of stdout is one JSON object:
 ``{"correct", "attempted", "failed", "metrics"}``. With ``--trace 0`` the
@@ -25,6 +25,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import signal
 import statistics
 import subprocess
 import sys
@@ -33,8 +34,7 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 SPEC = os.path.join(ROOT, "BENCHMARK.json")
-SETUPS = 3  # set-ups per run; setup_s is their median
-CALIB_SAMPLES = 2  # calibrations before the first pass and after each
+SETUPS = 5  # set-ups per run; setup_s is their median
 DRIVER_HEAP = "1g"
 
 
@@ -76,20 +76,83 @@ def _warm_page_cache(sf_dir: str) -> None:
                 pass
 
 
-def calibrate(spark, cpus: int) -> float:
-    """Seconds for a fixed CPU job on this host right now: a one-thread
-    Python loop plus an all-core Spark job. Taken between passes, it is
-    the unit of the host-normalized metrics: on a shared VM whose speed
-    drifts by tens of percent over minutes, pass time over calibration
-    time stays put while both move."""
-    t0 = time.perf_counter()
-    x = 0
-    for i in range(1_000_000):
-        x += i * i
-    spark.range(0, 200_000_000, 1, 2 * cpus).selectExpr(
-        "bit_xor(xxhash64(id)) AS s"
-    ).collect()
-    return time.perf_counter() - t0
+def _descendants() -> set[int]:
+    """Pids of every process below this one, read from /proc."""
+    children: dict[int, list[int]] = {}
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/stat") as f:
+                ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+        except (OSError, IndexError, ValueError):
+            continue
+        children.setdefault(ppid, []).append(int(entry))
+    out, todo = set(), [os.getpid()]
+    while todo:
+        for child in children.get(todo.pop(), []):
+            out.add(child)
+            todo.append(child)
+    return out
+
+
+def _running(pid: int) -> bool:
+    """Whether ``pid`` is still a live process (a zombie has ended)."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return f.read().rsplit(")", 1)[1].split()[0] not in ("Z", "X")
+    except (OSError, IndexError):
+        return False
+
+
+def _wait_gone(pids, timeout_s: float) -> set[int]:
+    deadline = time.monotonic() + timeout_s
+    left = {p for p in pids if _running(p)}
+    while left and time.monotonic() < deadline:
+        time.sleep(0.05)
+        left = {p for p in left if _running(p)}
+    return left
+
+
+def shutdown() -> None:
+    """Stop the Spark session and the driver JVM behind it, and wait until
+    every process this run started (the JVM, its Python workers) has ended.
+    Without it the JVM outlives this process by seconds: it only exits when
+    it sees its stdin close."""
+    from pyspark import SparkContext
+
+    pids = _descendants()
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        try:
+            sc.stop()
+        except Exception:  # noqa: BLE001 — the JVM is stopped below anyway
+            pass
+    gateway = SparkContext._gateway
+    if gateway is not None:
+        try:
+            gateway.shutdown()
+        except Exception:  # noqa: BLE001
+            pass
+        proc = getattr(gateway, "proc", None)
+        if proc is not None:
+            try:
+                proc.stdin.close()  # the JVM exits on EOF
+            except OSError:
+                pass
+            try:
+                proc.wait(timeout=60)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+                proc.wait()
+        SparkContext._gateway = None
+        SparkContext._jvm = None
+    for pid in _wait_gone(pids, 30):
+        try:
+            os.kill(pid, signal.SIGKILL)
+        except OSError:
+            pass
+    _wait_gone(pids, 30)
 
 
 def fingerprint(spark, cpus: int) -> dict:
@@ -139,7 +202,6 @@ def run(workload: str, seed: int, seconds: float, trace: bool,
         spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
         setups.append({"s": time.perf_counter() - t0, "session_s": t1 - t0,
                        "fixture_s": time.perf_counter() - t1})
-    calibrate(spark, cpus)  # compiles the calibration job, untimed
 
     wl = (
         workloads.Analyst(sf_dir)
@@ -163,7 +225,6 @@ def run(workload: str, seed: int, seconds: float, trace: bool,
 
     rng = np.random.default_rng(seed)
     passes = []
-    calib = [calibrate(spark, cpus) for _ in range(CALIB_SAMPLES)]
     t_loop = time.perf_counter()
     while not passes or time.perf_counter() - t_loop < seconds:
         p = len(passes)
@@ -189,7 +250,6 @@ def run(workload: str, seed: int, seconds: float, trace: bool,
             bench.hygiene(spark)
             ops.append(op)
         passes.append({"s": time.perf_counter() - t_pass, "ops": ops})
-        calib += [calibrate(spark, cpus) for _ in range(CALIB_SAMPLES)]
 
     if kind != "analyst":
         checks += wl.check(spark)
@@ -202,27 +262,22 @@ def run(workload: str, seed: int, seconds: float, trace: bool,
     attempted = len(all_ops) + len(checks)
     failed = len(failed_ops) + len(failed_checks)
     op_s = tracing.percentile_summary([op["s"] for op in all_ops])
-    pass_s = statistics.median(ps["s"] for ps in passes)
     record.update({
         "setups": setups,
         "warmup_s": warmup_s,
         "checks": [{"layer": c[0], "name": c[1], "ok": c[2], "detail": c[3]}
                    for c in checks],
         "passes": passes,
-        "calib_s": calib,
         "op_s": op_s,
         "failed_ratio": {"value": failed / attempted, "failed": failed,
                          "attempted": attempted},
     })
-    unit = statistics.median(calib)
     record["end_to_end"] = {
         "setup_s": statistics.median(s["s"] for s in setups),
-        "pass_s": pass_s,
+        "pass_s": statistics.median(ps["s"] for ps in passes),
         "op_s.p50": op_s["p50"],
         "op_s.tail": op_s["tail"],
         "peak_rss_mb": tracing.peak_rss_mb(spark),
-        "pass_norm": pass_s / unit,
-        "op_p50_norm": op_s["p50"] / unit,
     }
     if tracer:
         record["spans"] = tracer.spans
@@ -231,7 +286,6 @@ def run(workload: str, seed: int, seconds: float, trace: bool,
             passes, failed_ops, failed_checks, setups, warmup_s, cpus,
             tracing.heap_peak_mb(spark),
         )
-    spark.stop()
     return {
         "correct": not failed,
         "attempted": attempted,
@@ -327,7 +381,7 @@ def per_layer(passes, failed_ops, failed_checks, setups, warmup_s, cpus,
 WORKLOADS = {
     # name: (workload kind, fixture scale factor)
     "analyst-sf0.01": ("analyst", 0.01),
-    "daily-churn": ("daily", 0.01),
+    "daily-churn": ("daily", 0.001),
 }
 
 
@@ -338,7 +392,7 @@ def _spec() -> dict:
 
 def summary_line(record: dict) -> str:
     """Every end-to-end figure with its unit and sample count, including
-    the unbounded ones (raw seconds, the op tail, failed_ratio)."""
+    the unbounded ones (the op latencies and failed_ratio)."""
     e, op = record["end_to_end"], record["op_s"]
     return json.dumps({
         "workload": record["workload"],
@@ -348,10 +402,6 @@ def summary_line(record: dict) -> str:
         "op_s.tail": {"value": op["tail"], "unit": "s", "pct": op["tail_pct"], "n": op["n"]},
         "failed_ratio": {"unit": "ratio", **record["failed_ratio"]},
         "peak_rss_mb": {"value": e["peak_rss_mb"], "unit": "MB", "n": 1},
-        "calib_s": {"value": statistics.median(record["calib_s"]), "unit": "s",
-                    "n": len(record["calib_s"])},
-        "pass_norm": {"value": e["pass_norm"], "unit": "x"},
-        "op_p50_norm": {"value": e["op_p50_norm"], "unit": "x"},
     })
 
 
@@ -372,8 +422,15 @@ def _subrun(workload: str, seed: int, seconds: float, trace: int,
     cmd = [sys.executable, os.path.join(HERE, "run.py"), "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace),
            "--record", record, *extra]
-    out = subprocess.run(cmd, cwd=ROOT, check=True, stdout=subprocess.PIPE,
-                         text=True, timeout=900).stdout
+    with subprocess.Popen(cmd, cwd=ROOT, stdout=subprocess.PIPE, text=True) as proc:
+        try:
+            out, _ = proc.communicate(timeout=900)
+        except subprocess.TimeoutExpired:
+            proc.terminate()  # the child stops its JVM on SIGTERM
+            proc.communicate()
+            raise
+    if proc.returncode:
+        raise subprocess.CalledProcessError(proc.returncode, cmd)
     return json.loads(out.strip().splitlines()[-1])
 
 
@@ -512,8 +569,13 @@ def main(argv=None) -> int:
         return compare(*args.compare)
     if args.workload not in WORKLOADS:
         ap.error(f"--workload must be one of {sorted(WORKLOADS)}")
-    result = run(args.workload, args.seed, seconds, bool(args.trace),
-                 sf=args.sf, probe=args.probe)
+    # a SIGTERM unwinds through the finally below like any other exit
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
+    try:
+        result = run(args.workload, args.seed, seconds, bool(args.trace),
+                     sf=args.sf, probe=args.probe)
+    finally:
+        shutdown()
     if args.record:
         with open(args.record, "w") as f:
             json.dump(result["record"], f, indent=1, default=str)
