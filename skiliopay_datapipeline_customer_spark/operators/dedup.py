@@ -472,7 +472,8 @@ def simhash_signatures(
         )
         .select(F.col(id_col), F.xxhash64("sh").alias("h"))
     )
-    # SQL-text aggregates, same trees (see simhash_signatures_md5 — r13)
+    # SQL-text aggregates: one JVM parse instead of ~10 py4j round trips
+    # per bit (r13, see simhash_signatures_md5)
     agg = hashed.groupBy(id_col).agg(
         *[
             F.expr(
@@ -489,26 +490,18 @@ def simhash_signatures(
     return agg.select(F.col(id_col), F.expr(fp_sql).alias("simhash"))
 
 
-def portable_hash64(col, seed: int):
-    """Engine-portable 60-bit hash: first 15 hex chars of md5(tok + '#' + seed).
+def _portable_hash64_sql(col_sql: str, seed: int) -> str:
+    """Engine-portable 60-bit hash as SQL text: first 15 hex chars of
+    md5(tok + '#' + seed).
 
     xxhash64 is Spark-only; md5 exists in every engine (DuckDB:
-    CAST('0x'||substr(md5(x),1,15) AS BIGINT) is bit-identical), which makes
-    minhash/simhash signatures ORACLE-CHECKABLE. ~3× slower than xxhash64 —
-    the xxhash64 variants above remain the production tier; these portable
-    twins are the verification tier.
-    """
-    return F.conv(
-        F.substring(F.md5(F.concat(col, F.lit(f"#{seed}"))), 1, 15), 16, 10
-    ).cast("long")
-
-
-def _portable_hash64_sql(col_sql: str, seed: int) -> str:
-    """SQL text of :func:`portable_hash64` — the identical Catalyst tree
-    parsed JVM-side in one py4j round trip (r13: the signature builders
-    below construct 8-32 of these per call; the Column form's py4j
-    round trips were the dominant per-query cost at sf0.1 — see
-    similarity._bucket_fold_sql for the measurement)."""
+    CAST('0x'||substr(md5(x),1,15) AS BIGINT) is bit-identical), which
+    makes minhash/simhash signatures ORACLE-CHECKABLE. ~3× slower than
+    xxhash64 — the xxhash64 signatures above are the production tier,
+    the md5 ones the verification tier. SQL text parses JVM-side in one
+    py4j round trip (r13: the signature builders below construct 8-32 of
+    these per call; Column builders' py4j round trips were the dominant
+    per-query construction cost at sf0.1)."""
     return (
         f"CAST(conv(substring(md5(concat({col_sql}, '#{seed}')), 1, 15), "
         "16, 10) AS BIGINT)"
@@ -542,9 +535,9 @@ def minhash_signatures_md5(
                 ).alias("tok"),
             )
         )
-    # each min(portable-hash) agg is built as SQL text: the identical
-    # tree, one JVM parse per hash instead of ~10 py4j round trips each
-    # (plan-construction cost, not execution — see _portable_hash64_sql)
+    # each min(portable-hash) agg is built as SQL text: one JVM parse per
+    # hash instead of ~10 py4j round trips each (plan-construction cost,
+    # not execution — see _portable_hash64_sql)
     return toks.groupBy(id_col).agg(
         *[
             F.expr(f"min({_portable_hash64_sql('tok', j)})").alias(f"mh_{j}")
@@ -639,12 +632,12 @@ def simhash_signatures_md5(
         fan_out(df.select(F.col(id_col), F.col(text_col)))
         .select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
         .select(F.col(id_col), F.explode(grams).alias("tok"))
-        .select(F.col(id_col), portable_hash64(F.col("tok"), 0).alias("hv"))
+        .select(F.col(id_col), F.expr(_portable_hash64_sql("tok", 0)).alias("hv"))
     )
     # the per-bit sums and the fingerprint reassembly are built as SQL
-    # text (identical trees, exact integer arithmetic; r13 — the Column
-    # form issued ~10 py4j round trips per bit at construction time,
-    # ~0.4 s of the query's sf0.1 wall for bits=32)
+    # text (exact integer arithmetic; r13 — the Column form issued ~10
+    # py4j round trips per bit at construction time, ~0.4 s of the
+    # query's sf0.1 wall for bits=32)
     agg = hashed.groupBy(id_col).agg(
         *[
             F.expr(

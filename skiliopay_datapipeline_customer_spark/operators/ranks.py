@@ -44,9 +44,13 @@ stay balanced even when the leading key is low-cardinality or skewed.
 from __future__ import annotations
 
 import functools
+import itertools
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
+
+from .sqltext import LITERAL_TYPES, sql_literal
 
 # ---------------------------------------------------------------------------
 # Order specs: [(column-or-name, "asc"|"desc"), ...]; a bare column/name
@@ -122,24 +126,52 @@ def _cmp_tuples(norm):
     return cmp_t
 
 
-# (logical-plan semanticHash, spec, nparts) → boundaries. SAFE BY
-# CONSTRUCTION: boundaries only decide bucket BALANCE — any boundary set
-# yields exact ranks (monotonicity is data-independent), so a stale or
-# even colliding cache entry can never produce a wrong result, only a
-# less even split. The cache exists to amortize the per-call sample job:
-# repeated identical rank calls (bench warm runs, a driver re-running a
-# query, iterative sessions) skip straight to the lazy plan.
+# (logical-plan semanticHash, spec, nparts) → (boundaries, key types).
+# SAFE BY CONSTRUCTION: boundaries only decide bucket BALANCE — any
+# boundary set yields exact ranks (monotonicity is data-independent), so
+# a stale or even colliding cache entry can never produce a wrong result,
+# only a less even split. The cache exists to amortize the per-call
+# sample job and schema read: repeated identical rank calls (bench warm
+# runs, a driver re-running a query, iterative sessions) skip straight to
+# the lazy plan.
 _BOUNDARY_CACHE: dict = {}
 _BOUNDARY_CACHE_MAX = 256
 
 
-def _collect_boundaries(df: DataFrame, norm, nparts: int) -> list[tuple]:
+def _sample_keys(df: DataFrame, norm) -> tuple[DataFrame, list]:
+    """The order keys as `__bk{i}` columns in the domain boundaries are
+    compared in, plus each key's Spark type (one analysis, no job).
+
+    LTZ timestamp keys are projected as epoch micros (`unix_micros`):
+    PySpark collects them as naive local datetimes, which drop the DST
+    fold; micros order identically and render exactly
+    (:func:`sqltext.sql_literal`). Any key type without an exact literal
+    raises TypeError here, before any job runs."""
+    keyed = df.select(*[c.alias(f"__bk{i}") for i, (c, _) in enumerate(norm)])
+    types = [f.dataType for f in keyed.schema.fields]
+    for (c, _), t in zip(norm, types):
+        if not isinstance(t, LITERAL_TYPES):
+            raise TypeError(
+                f"rank key {c} has type {t.simpleString()}, which has no "
+                "exact SQL literal"
+            )
+    sample = [
+        F.unix_micros(f"__bk{i}").alias(f"__bk{i}")
+        if isinstance(t, TimestampType)
+        else f"__bk{i}"
+        for i, t in enumerate(types)
+    ]
+    return keyed.select(*sample), types
+
+
+def _collect_boundaries(df: DataFrame, norm, nparts: int) -> tuple[list[tuple], list]:
     """Sample key tuples with ONE deterministic top-K-by-hash job
     (TakeOrderedAndProject — per-partition top-K then a driver merge, no
     full sort), sort them under the spec order, and return ≤ nparts-1
-    evenly spaced, deduplicated boundary tuples. Model-sized: K =
-    max(1024, 32·nparts) rows of key columns only. Results memoize on
-    (plan semanticHash, spec, nparts) — see `_BOUNDARY_CACHE`."""
+    evenly spaced, deduplicated boundary tuples together with the key
+    types. Model-sized: K = max(1024, 32·nparts) rows of key columns
+    only. Results memoize on (plan semanticHash, spec, nparts) — see
+    `_BOUNDARY_CACHE`."""
     cache_key = None
     try:  # classic PySpark only; Connect lacks _jdf — just skip the memo
         cache_key = (
@@ -151,19 +183,16 @@ def _collect_boundaries(df: DataFrame, norm, nparts: int) -> list[tuple]:
         pass
     if cache_key is not None and cache_key in _BOUNDARY_CACHE:
         return _BOUNDARY_CACHE[cache_key]
-    keys = [c.alias(f"__bk{i}") for i, (c, _) in enumerate(norm)]
+    keys, types = _sample_keys(df, norm)
     k = max(1024, 32 * nparts)
     rows = (
-        df.select(*keys)
-        .orderBy(F.xxhash64(*[f"__bk{i}" for i in range(len(norm))]))
+        keys.orderBy(F.xxhash64(*[f"__bk{i}" for i in range(len(norm))]))
         .limit(k)
         .collect()
     )
-    tuples = sorted(
-        (tuple(r) for r in rows), key=functools.cmp_to_key(_cmp_tuples(norm))
-    )
-    m = len(tuples)
     cmp_t = _cmp_tuples(norm)
+    tuples = sorted((tuple(r) for r in rows), key=functools.cmp_to_key(cmp_t))
+    m = len(tuples)
     bnds: list[tuple] = []
     for i in range(1, nparts):
         idx = (i * m) // nparts
@@ -182,149 +211,61 @@ def _collect_boundaries(df: DataFrame, norm, nparts: int) -> list[tuple]:
         # pytest pins a mid-session clear to identical results).
         while len(_BOUNDARY_CACHE) >= _BOUNDARY_CACHE_MAX:
             _BOUNDARY_CACHE.pop(next(iter(_BOUNDARY_CACHE)))
-        _BOUNDARY_CACHE[cache_key] = bnds
-    return bnds
+        _BOUNDARY_CACHE[cache_key] = (bnds, types)
+    return bnds, types
 
 
-def _after_key(col, asc: bool, b):
-    """Strictly-after-the-boundary-value test for ONE key, null/NaN-safe,
-    matching Spark sort semantics (asc: NULL first, NaN last)."""
-    if b is None:
-        # asc: NULL sorts first → any non-null is after it; desc: NULL
-        # sorts last → nothing is strictly after it.
-        return col.isNotNull() if asc else F.lit(False)
-    if asc:
-        # NULL col → comparison is NULL → not after (NULL sorts first).
-        return F.coalesce(col > F.lit(b), F.lit(False))
-    # desc: NULL col sorts last → after every non-null boundary.
-    return F.coalesce(col < F.lit(b), F.lit(True))
+def _bucket_pid_sql(names: list[str], norm, bnds, types) -> str:
+    """SQL text of the bucket id over pre-projected key columns
+    (``names[i]`` aliases ``norm[i]``'s expression, of Spark type
+    ``types[i]``), parsed JVM-side in ONE py4j round trip.
 
-
-def _eq_key(col, b):
-    if b is None:
-        return col.isNull()
-    return F.coalesce(col == F.lit(b), F.lit(False))
-
-
-def _strictly_after(norm, boundary: tuple):
-    """Lexicographic 'row is strictly after this boundary tuple' under the
-    spec order — boundary values are literals, so the whole thing folds
-    into a pure deterministic expression of the row's own keys."""
-    after = F.lit(False)
-    eq_prefix = F.lit(True)
-    for (col, asc), b in zip(norm, boundary):
-        after = after | (eq_prefix & _after_key(col, asc, b))
-        eq_prefix = eq_prefix & _eq_key(col, b)
-    return after
-
-
-def _bucket_pid_expr(norm, bnds):
-    """Bucket id = number of boundary tuples the row is strictly after,
+    Bucket id = number of boundary tuples the row is strictly after,
     computed as a BINARY when-tree over the sorted boundary list instead
     of a linear sum of all m strictly-after tests. Valid because the
     boundaries are sorted and deduplicated under the spec's total order
-    and `_strictly_after` is that order's strict comparison, so
-    transitivity gives: after(bnds[mid]) ⇒ after(bnds[i]) for all
-    i ≤ mid — the count is exactly a binary-searchable threshold.
-    Monotone w.r.t. the total order for ANY boundary set, so rank
-    exactness never depends on the sample; balance does.
+    and strictly-after is that order's strict comparison (null/NaN-safe,
+    matching `_cmp_vals`), so transitivity gives: after(bnds[mid]) ⇒
+    after(bnds[i]) for all i ≤ mid — the count is exactly a
+    binary-searchable threshold. Monotone w.r.t. the total order for ANY
+    boundary set, so rank exactness never depends on the sample; balance
+    does. Pinned against the pure-Python count by
+    tests/test_scale_guards.py::test_bucket_pid_sql_equals_python_count.
 
     Measured r12 vs the linear sum (31 two-key boundaries, 6M rows,
     identical outputs): first execution 4.32 s → 1.07 s (janino/C2
     compile of the ~1000-term sum was the bulk of a one-shot session's
     rank cost) and warm floor 0.489 s → 0.242 s (log m instead of m
-    lexicographic tests per row — map-side CPU that scales with every
-    row at 100 TB). The literal-array + filter() HOF form was measured
-    and REJECTED: small codegen but interpreted eval, floor 2.33 s."""
+    lexicographic tests per row). The literal-array + filter() HOF form
+    was measured and REJECTED: small codegen but interpreted eval, floor
+    2.33 s. SQL text instead of Column builders (r13): ~15 py4j round
+    trips per tree node (~500 for the 31-boundary rfm tree) cost ~0.3 s
+    of every rank-family query's construction."""
 
-    def build(lo: int, hi: int):
-        # pid for rows whose boundary count is known to lie in [lo, hi]
-        if lo == hi:
-            return F.lit(lo)
-        mid = (lo + hi) // 2
-        return F.when(
-            _strictly_after(norm, bnds[mid]), build(mid + 1, hi)
-        ).otherwise(build(lo, mid))
-
-    return build(0, len(bnds))
-
-
-def _sql_lit(v) -> str | None:
-    """Exact SQL literal for the boundary types the fixtures produce, or
-    None when the type has no guaranteed-exact rendering (Decimal,
-    date/timestamp, bytes, ... — those fall back to the Column builder).
-    float uses repr (shortest round-trip — Java parses it back to the
-    identical bits); NaN/inf go through an explicit CAST because bare
-    tokens for them don't parse."""
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, int):
-        # L suffix = BIGINT literal; comparisons against narrower integer
-        # columns widen exactly, so the strictly-after test is unchanged
-        return f"{v}L"
-    if isinstance(v, float):
-        if v != v:
-            return "CAST('NaN' AS DOUBLE)"
-        if v == float("inf"):
-            return "CAST('Infinity' AS DOUBLE)"
-        if v == float("-inf"):
-            return "CAST('-Infinity' AS DOUBLE)"
-        return repr(v).upper() + "D"
-    if isinstance(v, str):
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    return None
-
-
-def _bucket_pid_sql(names: list[str], norm, bnds) -> str | None:
-    """SQL text of :func:`_bucket_pid_expr` over pre-projected key columns
-    (``names[i]`` aliases ``norm[i]``'s expression) — the identical binary
-    when-tree parsed JVM-side in ONE py4j round trip. Returns None when
-    any boundary value can't be rendered exactly (caller falls back to
-    the Column builder).
-
-    Why (r13, guide §7.3): the Column form issues ~15 py4j round trips
-    per tree node (~500 for the 31-boundary rfm tree), measured ~0.3 s of
-    every rank-family query's construction — driver-blocking, data-size
-    independent, paid per call. Same tree, same literals, so outputs are
-    bit-identical (pinned by
-    tests/test_scale_guards.py::test_bucket_pid_sql_equals_column_tree)."""
-
-    def after_key(name: str, asc: bool, b) -> str | None:
-        if b is None:
-            return f"({name} IS NOT NULL)" if asc else "FALSE"
-        lit = _sql_lit(b)
-        if lit is None:
-            return None
-        op = ">" if asc else "<"
-        dflt = "FALSE" if asc else "TRUE"
-        return f"coalesce({name} {op} {lit}, {dflt})"
-
-    def strictly_after(boundary: tuple) -> str | None:
+    def strictly_after(boundary: tuple) -> str:
         after = "FALSE"
         eq = "TRUE"
-        for name, (_, asc), b in zip(names, norm, boundary):
-            ak = after_key(name, asc, b)
-            if ak is None:
-                return None
-            after = f"({after} OR ({eq} AND {ak}))"
+        for name, (_, asc), t, b in zip(names, norm, types, boundary):
             if b is None:
+                # asc: NULL sorts first → any non-null is after it; desc:
+                # NULL sorts last → nothing is strictly after it
+                ak = f"({name} IS NOT NULL)" if asc else "FALSE"
                 ek = f"({name} IS NULL)"
             else:
-                lit = _sql_lit(b)
-                if lit is None:
-                    return None
+                lit = sql_literal(b, t)
+                # asc: NULL col → comparison is NULL → not after (NULL
+                # sorts first); desc: NULL col sorts last → after
+                op, dflt = (">", "FALSE") if asc else ("<", "TRUE")
+                ak = f"coalesce({name} {op} {lit}, {dflt})"
                 ek = f"coalesce({name} = {lit}, FALSE)"
+            after = f"({after} OR ({eq} AND {ak}))"
             eq = f"({eq} AND {ek})"
         return after
 
-    conds = []
-    for b in bnds:
-        c = strictly_after(b)
-        if c is None:
-            return None
-        conds.append(c)
+    conds = [strictly_after(b) for b in bnds]
 
     def build(lo: int, hi: int) -> str:
+        # pid for rows whose boundary count is known to lie in [lo, hi]
         if lo == hi:
             return str(lo)
         mid = (lo + hi) // 2
@@ -354,21 +295,17 @@ def _range_bucketed(df: DataFrame, order_spec, num_partitions: int | None):
     by construction wherever they compute it."""
     norm = _normalize_order_spec(order_spec)
     nparts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    bnds = _collect_boundaries(df, norm, nparts)
-    # fast path (r13): project the key expressions once under temp names,
-    # parse the whole when-tree JVM-side, drop the temps (the projection
-    # collapses — `bucketed` keeps the caller's schema + `_pid`, and the
-    # Column builder remains the reference implementation and the
-    # fallback for boundary types _sql_lit can't render exactly)
-    names = [f"__rk{i}" for i in range(len(norm))]
-    pid_sql = _bucket_pid_sql(names, norm, bnds)
-    if pid_sql is not None:
-        keyed = df
-        for name, (c, _) in zip(names, norm):
-            keyed = keyed.withColumn(name, c)
-        bucketed = keyed.withColumn("_pid", F.expr(pid_sql)).drop(*names)
-    else:
-        bucketed = df.withColumn("_pid", _bucket_pid_expr(norm, bnds))
+    bnds, types = _collect_boundaries(df, norm, nparts)
+    # project the key expressions once under temp names the caller's
+    # columns don't use, parse the whole when-tree JVM-side, drop the
+    # temps (the projection collapses — `bucketed` keeps the caller's
+    # schema + `_pid`)
+    taken = {c.lower() for c in df.columns}  # Spark resolves case-insensitively
+    free = (n for n in map("__rk{}".format, itertools.count()) if n not in taken)
+    names = list(itertools.islice(free, len(norm)))
+    keyed = df.withColumns({name: c for name, (c, _) in zip(names, norm)})
+    pid_sql = _bucket_pid_sql(names, norm, bnds, types)
+    bucketed = keyed.withColumn("_pid", F.expr(pid_sql)).drop(*names)
     parts = bucketed.repartition(max(1, len(bnds) + 1), "_pid")
     return bucketed, parts, _sort_cols(norm)
 

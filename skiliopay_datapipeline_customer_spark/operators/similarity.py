@@ -13,40 +13,38 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType
+
+from .sqltext import sql_literal
 
 
 def as_double(vec):
     return F.transform(vec, lambda x: x.cast("double"))
 
 
-def _dlit(x: float) -> str:
-    """Exact SQL double literal. repr() is CPython's shortest round-trip
-    decimal, and Java's Double.parseDouble of that string returns the
-    identical bits (both are correctly-rounded nearest-double parses of a
-    string that uniquely identifies the value), so the parsed literal ==
-    F.lit(x) bit-for-bit. The D suffix forces DoubleType (a bare decimal
-    is DECIMAL in Spark SQL; bare exponent form is already double, but the
-    suffix keeps every shape unambiguous)."""
-    return repr(float(x)).upper() + "D"
+def _double_vec_sql(vec_col: str) -> str:
+    """SQL text of :func:`as_double` over a named column."""
+    return f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))"
 
 
 def _bucket_fold_sql(vec_sql: str, planes: list[list[float]]) -> str:
-    """SQL text of :func:`lsh_bucket_id`'s planes fast path — the SAME
-    Catalyst tree (zip_with product, sequential left-fold sum, sign bits
-    packed little-endian), parsed JVM-side in ONE py4j round trip.
+    """Random-hyperplane LSH bucket as SQL text: sign bits of dot(v, h_p)
+    packed little-endian into a BIGINT, each dot a zip_with product
+    summed by a sequential left fold (the IEEE add order an ANSI-SQL
+    oracle replicates term by term; DuckDB's list_sum matches it
+    bit-for-bit). ``vec_sql`` must be an array<double> expression and
+    ``planes`` come from :func:`make_planes`, folded in as literal arrays.
 
-    Why this exists (r13, guide §7.3 "driver single-threaded work"): the
-    Column-builder form issues ~70 py4j round trips per plane (each
-    F.* call is a blocking driver socket round trip), ~1,100 for a
-    16-plane family — measured 0.9 s of the 1.2 s banding wall at sf0.1,
-    per QUERY CONSTRUCTION, data-size-independent. The SQL string parses
-    in ~15 ms. Output is bit-identical (same fold, same literals —
-    exceptAll-pinned by tests/test_similarity_extra.py and the unchanged
-    lsh oracle), so `lsh_bucket_id` stays as the reference
-    implementation and the property tests compare the two forms."""
+    The interpreted aggregate fold beats an explicit element_at sum here:
+    unrolling 16 planes × 64 terms into one expression tree blows past
+    the JVM codegen method limit (measured 3× slower end-to-end than the
+    fold). Built as SQL text and parsed JVM-side in ONE py4j round trip
+    (r13): the Column-builder form issued ~70 py4j round trips per plane,
+    ~1,100 for a 16-plane family — measured 0.9 s of the 1.2 s banding
+    wall at sf0.1, per query construction, data-size-independent."""
     terms = []
     for local_bit, plane in enumerate(planes):
-        arr = "array(" + ",".join(_dlit(v) for v in plane) + ")"
+        arr = "array(" + ",".join(sql_literal(v, DoubleType()) for v in plane) + ")"
         proj = (
             f"aggregate(zip_with({vec_sql}, {arr}, (x, h) -> x * h), "
             "0.0D, (acc, v) -> acc + v)"
@@ -113,73 +111,6 @@ def make_planes(
     return planes
 
 
-def lsh_bucket_id(
-    vec_col,
-    num_planes: int = 8,
-    plane_offset: int = 0,
-    planes: list[list[float]] | None = None,
-    already_double: bool = False,
-):
-    """Random-hyperplane LSH bucket: sign bits of dot(v, h_p) packed to int.
-
-    Pass ``planes`` (from :func:`make_planes`, requires knowing the vector
-    dim) to fold the hyperplanes in as LITERAL arrays — the fast path: the
-    per-row work is just multiply-adds. Without ``planes`` the components
-    are derived per-row from xxhash64(plane, dim) inside a nested lambda —
-    dimension-agnostic, but higher-order functions evaluate interpreted, so
-    every row pays hash + array construction per plane (~10× slower;
-    measured on the 64-dim corpus).
-
-    ``already_double=True`` skips the float→double transform: pass it when
-    ``vec_col`` is a PROJECTED array<double> attribute — every plane's dot
-    references the vector, so an inline cast re-evaluates (one interpreted
-    array transform + allocation per plane per row) while a projected
-    attribute casts once per row (CollapseProject keeps the boundary: a
-    lambda transform referenced many times is not collapse-cheap). The
-    cast is exact, so the fold sees bit-identical doubles either way.
-    """
-    v = vec_col if already_double else as_double(vec_col)
-    bits = []
-    if planes is not None:
-        for local_bit, plane in enumerate(planes[:num_planes]):
-            # the interpreted aggregate fold beats an explicit element_at
-            # sum here: unrolling 16 planes × 64 terms into one expression
-            # tree blows past the JVM codegen method limit (measured 3×
-            # slower end-to-end than the fold)
-            proj = dot(v, _lit_vec(plane))
-            bits.append((proj > 0).cast("int") * F.lit(2**local_bit))
-    else:
-        dim = F.size(vec_col)
-        for local_bit, p in enumerate(
-            range(plane_offset, plane_offset + num_planes)
-        ):
-            # h_p[i] in [-1, 1): hash(p, i) scaled; folded into the dot product
-            proj = F.aggregate(
-                F.zip_with(
-                    v,
-                    F.transform(
-                        F.sequence(F.lit(0), dim - 1),
-                        lambda i, p=p: (
-                            F.pmod(
-                                F.xxhash64(i.cast("string"), F.lit(p)),
-                                F.lit(2000003),
-                            )
-                            / F.lit(1000001.5)
-                            - 1.0
-                        ),
-                    ),
-                    lambda x, h: x * h,
-                ),
-                F.lit(0.0),
-                lambda acc, val: acc + val,
-            )
-            bits.append((proj > 0).cast("int") * F.lit(2**local_bit))
-    out = F.lit(0)
-    for b in bits:
-        out = out + b
-    return out
-
-
 def _probe_dim(df: DataFrame, vec_col: str) -> int:
     """Vector dimensionality from one row (metadata-sized driver action)."""
     row = df.select(F.size(F.col(vec_col))).first()
@@ -200,15 +131,11 @@ def lsh_topk(
     touches ~corpus/2^planes rows. Multi-probe = union over neighbor buckets.
     """
     planes = make_planes(num_planes, _probe_dim(df, vec_col))
-    bucketed = df.withColumn(
-        "_bucket", lsh_bucket_id(F.col(vec_col), num_planes, planes=planes)
-    )
+    bucket = F.expr(_bucket_fold_sql(_double_vec_sql(vec_col), planes))
+    bucketed = df.withColumn("_bucket", bucket)
     qb = F.broadcast(
         query_vec_df.select(
-            F.col(vec_col).alias("_qvec"),
-            lsh_bucket_id(F.col(vec_col), num_planes, planes=planes).alias(
-                "_qbucket"
-            ),
+            F.col(vec_col).alias("_qvec"), bucket.alias("_qbucket")
         )
     )
     a = as_double(F.col(vec_col))
@@ -463,18 +390,13 @@ def lsh_dup_pairs(
     ]
     if kernel == "expr":
         # hoist the float→double cast to a projected attribute: every
-        # band×plane dot references the vector, and an inline as_double
-        # re-ran the interpreted array transform num_planes× per row
-        # (see lsh_bucket_id — exact cast, bit-identical fold). The whole
-        # banding expression is built as SQL text (_bucket_fold_sql):
-        # same tree, one JVM parse instead of ~1,100 py4j round trips —
-        # r13, measured 0.9 s of per-query construction at any SF.
-        bd = base.select(
-            id_col,
-            F.expr(f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))").alias(
-                "_vd"
-            ),
-        )
+        # band×plane dot references the vector, and an inline cast re-ran
+        # the interpreted array transform num_planes× per row, while a
+        # projected attribute casts once per row (CollapseProject keeps
+        # the boundary: a lambda transform referenced many times is not
+        # collapse-cheap). The cast is exact, so the fold sees
+        # bit-identical doubles either way.
+        bd = base.select(id_col, F.expr(_double_vec_sql(vec_col)).alias("_vd"))
         buckets_sql = "array(" + ",".join(
             _bucket_fold_sql("_vd", planes_by_band[band])
             for band in range(bands)
@@ -619,13 +541,9 @@ def lsh_topk_multiprobe(
     LSH and brute force.
     """
     planes = make_planes(num_planes, _probe_dim(df, vec_col))
-    bucketed = df.withColumn(
-        "_bucket", lsh_bucket_id(F.col(vec_col), num_planes, planes=planes)
-    )
-    qbase = query_vec_df.select(
-        F.col(vec_col).alias("_qvec"),
-        lsh_bucket_id(F.col(vec_col), num_planes, planes=planes).alias("_qbucket"),
-    )
+    bucket = F.expr(_bucket_fold_sql(_double_vec_sql(vec_col), planes))
+    bucketed = df.withColumn("_bucket", bucket)
+    qbase = query_vec_df.select(F.col(vec_col).alias("_qvec"), bucket.alias("_qbucket"))
     # expand the probe set: bucket ids within the hamming ball of radius
     # n_probe_flips (the ball is computed driver-side — it is plane-count
     # sized, not data-sized)

@@ -64,13 +64,9 @@ def load_all() -> None:
 # before that round verified OLD semantics and doesn't count.
 _FORCE = {
     "lag_time_delta": 3,
-    "rfm_quintiles": 3,
-    "global_row_number": 3,
     "embedding_int8_codes": 3,
-    "simhash_near_pairs": 3,
     # new in round 4 — verify in their landing round
     "corpus_mixture_sample": 3,
-    "quality_top_quartile": 3,
     "dedup_survivors": 3,
     "session_purchase_attribution": 3,
     "trailing_week_user_value": 3,
@@ -79,16 +75,12 @@ _FORCE = {
     "fk_integrity_report": 3,
     "doc_chunk_assignments": 3,
     "event_props_rollup": 3,
-    "corpus_build_pipeline": 3,
     "latest_event_per_user": 3,
-    "ivf_pq_ann_topk": 3,
     "bpe_pair_counts": 3,
     "bpe_merges": 4,  # r05: gained full unrolled-round oracle
     "semantic_dedup_survivors": 3,
     "bpe_encoded_docs": 4,  # r05: gained rank-order replace-chain oracle
-    "training_shard_assignments": 3,
     "click_attribution_window": 3,
-    "incremental_dedup_candidates": 4,  # r05: moved to oracle-checked md5 banding tier
     "shipping_priority": 3,
     "returned_item_losses": 3,
     "promo_revenue_share": 3,
@@ -103,14 +95,10 @@ _FORCE = {
     "part_supplier_counts": 3,
     "volume_part_suppliers": 3,
     "waiting_suppliers": 3,
-    "domain_capped_sample": 3,
     "embedding_dim_stats": 3,
-    "pca_projected_embeddings": 3,
-    "kmeans_cluster_profile": 3,
     "event_props_variant_rollup": 3,
     "corpus_composition_report": 3,
     "dup_cluster_size_histogram": 3,
-    "ks_drift_report": 3,
     "segment_balance_deciles": 3,
     "daily_purchases_gapfilled": 3,
     "mad_outlier_report": 3,
@@ -123,10 +111,6 @@ _FORCE = {
     # round-4 late change: gained a literal-plane oracle + moved to 6 planes
     # (prior rows-only record verified the old 8-plane output)
     "lsh_ann_topk": 4,
-    # r07 oracle upgrades — the prior green rows verified the weaker
-    # rows-only contract (and, for minhash_lsh_candidates, the old xxhash64
-    # tier's output); re-verify under the full hash check
-    "order_trend_pandas": 6,
     # r07 fix: gmv/aov moved to exact decimal accumulation (the double sum
     # broke the 4-dp rounding grid at sf0.1) — prior green row verified the
     # float-sum output
@@ -155,32 +139,6 @@ _FORCE = {
     # r09 fix: pca_projected_embeddings now emits scalar pc_0..pc_7 (the
     # array column crashed the driver canonicalizer in r08)
     "pca_projected_embeddings": 8,
-    # r10 plan rewrite: the whole distributed rank/cumsum family moved from
-    # repartitionByRange+spark_partition_id (localCheckpoint-pinned) to
-    # expression-derived bucket ids over frozen boundary literals — results
-    # identical, but every prior green row verified the pinned plan, so
-    # re-stamp every query whose physical plan changed
-    "global_row_number": 9,
-    "percent_rank_prices": 9,
-    "rfm_quintiles": 9,
-    "rfm_scores": 9,
-    "ks_drift_report": 9,
-    "weighted_median_price": 9,
-    "weighted_median_by_flag": 9,
-    "abc_customer_classes": 9,
-    "revenue_gini": 9,
-    "token_pack_assignments": 9,
-    "length_bucketed_batches": 9,
-    "quality_top_quartile": 9,
-    "corpus_build_pipeline": 9,
-    "training_shard_assignments": 9,
-    "domain_capped_sample": 9,
-    "source_epoch_plan": 9,
-    "churn_training_dataset": 9,
-    # r10: cms threshold now derived from the sketch (one fewer corpus
-    # pass); bloom prefilter extracted into _bloom_prefilter.
-    # (re-stamped 11 in the r12 block below: the prefilter moved to the
-    # JVM-hashed vectorized tier)
     # r10 oracle upgrades: kmeans_cluster_profile and ivf_ann_topk moved
     # from rows-only (Spark ML k-means|| / float Lloyd refinement) to the
     # exact-integer Lloyd tier with full-replay oracles — prior rows-only
@@ -201,63 +159,22 @@ _FORCE = {
     # ngram verify joins now size-aware (materialized-cache stats), rank
     # offsets aggregate pre-shuffle, quantile stats inlined
     "ngram_jaccard_dups": 10,
-    "rfm_quintiles": 10,
-    # r12 plan change, values unchanged but re-stamp on the new plan: the
-    # CMS kernel moved md5→xxhash64 (hash-once, explode ints) and the
-    # estimate pass to a driver-collected grid of array literals (no
-    # joins) — a green row at/before r11 verified the md5/broadcast-join
-    # plan
-    "cms_heavy_hitter_tokens": 11,
-    # r12 oracle upgrade: simhash_fingerprints moved rows-only → full
-    # hash check (xxhash64 over <32-byte ASCII strings replayed via the
-    # XXH64 tail cascade — fixtures_oracle.xxhash64_ascii_short_sql);
-    # prior greens verified only rows>0
-    "simhash_fingerprints": 11,
-    # r12 SEMANTICS change: the declared minhash_lsh_candidates moved from
-    # the md5 verification tier back to the xxhash64 PRODUCTION tier, now
-    # under a full oracle (the short-string tail cascade + hashLong/hashInt
-    # chain replays) — prior greens verified the md5-tier output
-    "minhash_lsh_candidates": 11,
     # r12 plan change, values unchanged: bigram_lm_doc_scores now derives
     # head counts + vocab from the model-sized c2 frame (one corpus
     # explode fewer, no per-occurrence w1 split) — re-stamp every query
     # that rides it
     "bigram_doc_logprob": 11,
     "ccnet_quality_buckets": 11,
-    "ccnet_buckets_distributed": 11,
     # r12 SEMANTICS change: the DSIR bucket hash moved md5 → production
     # xxhash64 (bucket values and therefore weights differ; oracles
     # regenerated via the tail cascade) — prior greens verified md5
-    # buckets. curated_selection_pipeline rides BOTH this and the bigram
-    # plan change above.
+    # buckets.
     "dsir_importance_weights": 11,
-    "dsir_deciles_distributed": 11,
-    "curated_selection_pipeline": 11,
-    # r12 optimization-session plan changes, values unchanged but
-    # re-stamp on the new plans: the LSH expr tier hoists the
-    # float→double cast to a projected attribute (one interpreted array
-    # transform per row instead of num_planes) and the declared LSH
-    # queries pass dim=64 explicitly (no metadata probe job);
-    # bigram_lm_doc_scores/dsir_weights persist their exploded gram
-    # frame (tokenize-once across both consuming subtrees); the curated
-    # capstone shares ONE bigram frame across its LM and DSIR stages.
-    # dsir_*/curated/bigram_*/ccnet_* are already stamped 11 above,
-    # which keeps them in the r12 needs-a-row pool — only the LSH tier
-    # queries need new stamps.
-    "lsh_dup_pairs": 11,
-    "lsh_dup_pairs_fast": 11,
-    # r12 session 4: the bloom prefilter's membership test moved from a
-    # per-gram Python md5 loop in mapInPandas to a boolean pandas_udf
-    # over JVM-computed xxhash64 with vectorized numpy bit probes —
-    # values unchanged (exact verify + exact anti-join oracle), plan
-    # changed (ArrowEvalPython now sees one int64 column)
-    "bloom_decontaminated_corpus": 11,
     # --- r13 plan changes, values unchanged (the r13 output freeze:
     # no oracle changed this round), re-stamp on the new plans ---
     # the whole distributed rank/cumsum/ntile/sampling family: the
     # boundary when-tree is now parsed from SQL text over pre-projected
-    # key columns (ranks._bucket_pid_sql; same tree, bit-identical —
-    # test_bucket_pid_sql_equals_column_tree)
+    # key columns (ranks._bucket_pid_sql; same tree, bit-identical)
     "global_row_number": 12,
     "percent_rank_prices": 12,
     "rfm_quintiles": 12,

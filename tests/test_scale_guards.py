@@ -5,6 +5,10 @@ global-rank twins of the single-task window forms."""
 
 from __future__ import annotations
 
+import contextlib
+import os
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -911,11 +915,11 @@ def test_rank_exact_under_exchange_reuse_disabled(spark):
 
 
 def test_rank_boundary_semantics_nulls_nans_unicode(spark):
-    """The boundary comparisons (_after_key/_eq_key/_cmp_vals) must match
-    Spark's sort semantics exactly — NULL first in asc / last in desc, NaN
-    greater than every number, UTF-8 binary string order — or rows near a
-    sampled boundary get bucketed inconsistently with the window order and
-    ranks go wrong. Cross-checked against the single-window form over a
+    """The boundary comparisons (`_bucket_pid_sql`'s strictly-after tests
+    and `_cmp_vals`) must match Spark's sort semantics exactly — NULL
+    first in asc / last in desc, NaN greater than every number, UTF-8
+    binary string order — or rows near a sampled boundary get bucketed
+    inconsistently with the window order and ranks go wrong. Cross-checked against the single-window form over a
     corpus salted with nulls, NaNs, duplicates, and non-ASCII keys, both
     directions."""
     import math
@@ -958,106 +962,227 @@ def test_rank_boundary_semantics_nulls_nans_unicode(spark):
         assert got == want, f"spec={spec}"
 
 
-def test_bucket_pid_tree_equals_linear_count(spark):
-    """_bucket_pid_expr is a binary when-tree (r12: compile 4.3 s → 1.1 s,
-    per-row eval halved vs the linear sum of strictly-after tests). The
-    tree is only valid if the boundary count is binary-searchable —
-    i.e. strictly-after is transitive over the sorted, deduplicated
-    boundary list INCLUDING null/NaN/unicode boundary values. Pin the
-    tree against the definitional linear count on an adversarial frame
-    whose sampled boundaries contain exactly those values."""
-    from skiliopay_datapipeline_customer_spark.operators.ranks import (
-        _bucket_pid_expr,
-        _collect_boundaries,
-        _normalize_order_spec,
-        _strictly_after,
-    )
-
+def _all_key_types_frame(spark, n=600):
+    """Adversarial rank input over every key type the SQL literal renderer
+    covers: nulls, NaN, negative floats, unicode strings with quotes and
+    backslashes, Decimal, date, binary (bytes above 0x7f), timestamp_ntz,
+    and LTZ timestamps on the America/New_York fall-back hour (05:00-07:00
+    UTC covers 01:00 EDT through 01:59 EST, the repeated wall-clock
+    hour)."""
     rows = []
-    for i in range(600):
-        v = None if i % 13 == 0 else (
-            float("nan") if i % 19 == 0 else float((i * 7919) % 83) / 7.0
-        )
-        s = ["alpha", "Ärger", "zèbre", "中文", "beta"][i % 5] + str(i % 9)
-        rows.append((i, v, s))
-    df = spark.createDataFrame(rows, "id long, v double, s string")
-
-    for spec in (
-        [("v", "asc"), ("s", "asc"), ("id", "asc")],
-        [("v", "desc"), ("s", "desc"), ("id", "asc")],
-    ):
-        norm = _normalize_order_spec(spec)
-        bnds = _collect_boundaries(df, norm, 16)
-        # boundary sample over this salted frame must include the
-        # adversarial classes, or the equivalence below proves less
-        assert any(b[0] is None or b[0] != b[0] for b in bnds), bnds
-        linear = F.lit(0)
-        for t in bnds:
-            linear = linear + _strictly_after(norm, t).cast("int")
-        got = df.select(
-            _bucket_pid_expr(norm, bnds).alias("tree"), linear.alias("lin")
-        )
-        assert got.where(F.col("tree") != F.col("lin")).count() == 0
-        # tree output must span multiple buckets (not degenerate)
-        assert got.select("tree").distinct().count() > 4
-
-
-def test_bucket_pid_sql_equals_column_tree(spark):
-    """The r13 SQL-text when-tree (_bucket_pid_sql, parsed JVM-side in one
-    round trip) must produce the IDENTICAL bucket id as the Column-builder
-    reference (_bucket_pid_expr) on adversarial boundaries: nulls, NaN,
-    unicode strings, quotes/backslashes in string boundaries, negative and
-    integral floats. Also pins the fallback contract: a boundary type
-    _sql_lit can't render exactly returns None (Column path taken)."""
-    from skiliopay_datapipeline_customer_spark.operators.ranks import (
-        _bucket_pid_expr,
-        _bucket_pid_sql,
-        _collect_boundaries,
-        _normalize_order_spec,
-        _sql_lit,
-    )
-
-    rows = []
-    for i in range(600):
+    for i in range(n):
         v = None if i % 13 == 0 else (
             float("nan") if i % 19 == 0 else float((i * 7919) % 83) / 7.0 - 5.0
         )
         s = ["al'pha", "Är\\ger", "zèbre", "中文", "be' \\ ta"][i % 5] + str(i % 9)
         rows.append((i, v, s))
-    df = spark.createDataFrame(rows, "id long, v double, s string")
+    return spark.createDataFrame(rows, "id long, v double, s string").withColumns(
+        {
+            "d": F.expr(
+                "CASE WHEN id % 11 = 0 THEN NULL "
+                "ELSE CAST((id * 31) % 47 / 8.0 - 2 AS DECIMAL(10,3)) END"
+            ),
+            "dd": F.expr("date_add(DATE'2021-03-14', CAST((id * 13) % 29 AS INT))"),
+            "b": F.expr(
+                "CASE WHEN id % 17 = 0 THEN NULL "
+                "ELSE unhex(substr(sha2(CAST(id % 37 AS STRING), 256), 1, 4)) END"
+            ),
+            "tn": F.expr(
+                "make_timestamp_ntz(2021, 11, 7, 1, CAST((id * 7) % 60 AS INT), "
+                "CAST(id % 7 AS DECIMAL(8,6)) + 0.5)"
+            ),
+            "tl": F.expr(
+                "CASE WHEN id % 23 = 0 THEN NULL ELSE timestamp_micros("
+                "1636261200000000L + ((id * 7919) % 7200) * 1000000L + id) END"
+            ),
+        }
+    )
 
-    for spec in (
-        [("v", "asc"), ("s", "asc"), ("id", "asc")],
-        [("v", "desc"), ("s", "desc"), ("id", "asc")],
-        [("s", "asc"), ("id", "desc")],
-    ):
-        norm = _normalize_order_spec(spec)
-        bnds = _collect_boundaries(df, norm, 16)
-        names = [f"__rk{i}" for i in range(len(norm))]
-        sql = _bucket_pid_sql(names, norm, bnds)
-        assert sql is not None, bnds
-        keyed = df
-        for name, (c, _) in zip(names, norm):
-            keyed = keyed.withColumn(name, c)
-        got = keyed.select(
-            F.expr(sql).alias("sqlpid"),
-            _bucket_pid_expr(norm, bnds).alias("colpid"),
-        )
-        assert got.where(F.col("sqlpid") != F.col("colpid")).count() == 0
-        assert got.select("sqlpid").distinct().count() > 4
 
-    # fallback contract: unsupported literal types refuse, never guess
+@contextlib.contextmanager
+def _dst_time_zone(spark, tz="America/New_York"):
+    """Run with a DST zone as BOTH the Spark session time zone and the
+    driver process's local zone (PySpark collects LTZ timestamps as naive
+    local datetimes, so the process zone decides what a collected value
+    loses)."""
+    conf = spark.conf
+    prev_tz = conf.get("spark.sql.session.timeZone")
+    prev_env = os.environ.get("TZ")
+    conf.set("spark.sql.session.timeZone", tz)
+    os.environ["TZ"] = tz
+    time.tzset()
+    try:
+        yield
+    finally:
+        conf.set("spark.sql.session.timeZone", prev_tz)
+        if prev_env is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = prev_env
+        time.tzset()
+
+
+_ALL_KEY_SPECS = (
+    [("v", "asc"), ("s", "asc"), ("id", "asc")],
+    [("v", "desc"), ("s", "desc"), ("id", "asc")],
+    [("s", "asc"), ("id", "desc")],
+    [("d", "asc"), ("id", "asc")],
+    [("dd", "desc"), ("b", "asc"), ("id", "asc")],
+    [("b", "desc"), ("id", "asc")],
+    [("tn", "asc"), ("id", "desc")],
+    [("tl", "desc"), ("id", "asc")],
+    [("tl", "asc"), ("d", "desc"), ("id", "asc")],
+)
+
+
+def test_bucket_pid_sql_equals_python_count(spark):
+    """The SQL bucket id (a binary when-tree of strictly-after tests over
+    rendered boundary literals) must equal its DEFINITION: the number of
+    boundary tuples the row sorts strictly after, counted in pure Python
+    with `_cmp_tuples` (Spark's NULL-first/NaN-last sort order). The
+    tree is only valid if that count is binary-searchable, and the
+    literals only if every type renders exactly — so run it on boundaries
+    that contain nulls, NaN, quotes/backslashes and every rendered key
+    type (LTZ timestamps compared as epoch micros, like the sample) —
+    under a DST time zone, with LTZ keys on the fall-back hour, where a
+    wall-clock rendering of a boundary is ambiguous."""
+    from skiliopay_datapipeline_customer_spark.operators.ranks import (
+        _bucket_pid_sql,
+        _cmp_tuples,
+        _collect_boundaries,
+        _normalize_order_spec,
+        _sample_keys,
+    )
+
+    with _dst_time_zone(spark):
+        df = _all_key_types_frame(spark)
+        for spec in _ALL_KEY_SPECS:
+            norm = _normalize_order_spec(spec)
+            bnds, types = _collect_boundaries(df, norm, 16)
+            if spec[0][0] == "v":
+                # the sample over this salted frame must include the
+                # adversarial classes, or the equivalence below proves
+                # less
+                assert any(b[0] is None or b[0] != b[0] for b in bnds), bnds
+            cmp_t = _cmp_tuples(norm)
+            # id is the last key of every spec, so each sampled tuple
+            # names its row
+            keys, _ = _sample_keys(df, norm)
+            want = {
+                row[-1]: sum(cmp_t(row, b) > 0 for b in bnds)
+                for row in map(tuple, keys.collect())
+            }
+            names = [f"__rk{i}" for i in range(len(norm))]
+            pid = F.expr(_bucket_pid_sql(names, norm, bnds, types))
+            keyed = df.withColumns({n: c for n, (c, _) in zip(names, norm)})
+            got = {r["id"]: r["pid"] for r in keyed.select("id", pid.alias("pid")).collect()}
+            assert got == want, spec
+            assert len(set(got.values())) > 4, spec
+
+
+def test_rank_all_key_types_equal_window_form_under_dst_timezone(spark):
+    """global_rank_distributed over Decimal, date, binary, timestamp_ntz
+    and LTZ-timestamp keys equals the single-window row_number form —
+    with a DST session time zone (and a DST driver-process zone) while
+    the LTZ keys sit on the fall-back hour, where a wall-clock rendering
+    of a boundary is ambiguous and a naive collected datetime drops the
+    fold."""
+    from pyspark.sql import Window
+
+    with _dst_time_zone(spark):
+        df = _all_key_types_frame(spark)
+        # the double/string specs are test_rank_boundary_semantics_*'s
+        for spec in _ALL_KEY_SPECS[3:]:
+            got = {
+                r["id"]: r["r"]
+                for r in global_rank_distributed(
+                    df, spec, rank_col="r", num_partitions=8
+                ).collect()
+            }
+            window = Window.orderBy(
+                *[F.col(c).asc() if d == "asc" else F.col(c).desc() for c, d in spec]
+            )
+            want = {
+                r["id"]: r["r"]
+                for r in df.withColumn("r", F.row_number().over(window)).collect()
+            }
+            assert got == want, spec
+
+
+def test_rank_key_without_exact_literal_raises_at_construction(spark):
+    """A key type the SQL literal renderer can't render exactly (here
+    array<int>) is refused with a TypeError naming the column and its
+    type when the rank is BUILT — never a silent fallback."""
+    df = spark.createDataFrame([(1, [1, 2]), (2, [0])], "id long, arr array<int>")
+    with pytest.raises(TypeError, match=r"arr.*array<int>"):
+        global_rank_distributed(df, [("arr", "asc"), ("id", "asc")])
+
+
+def test_rank_temp_columns_keep_caller_columns(spark):
+    """The key projection's temp columns must not replace caller columns
+    of the same name: a frame carrying `__rk0`/`__rk1` keeps both
+    columns and their values through the rank."""
+    df = spark.createDataFrame(
+        [(i, float((i * 37) % 11), f"x{i}", i * 10) for i in range(50)],
+        "id long, v double, __rk0 string, __rk1 long",
+    )
+    ranked = global_rank_distributed(
+        df, [("v", "desc"), ("id", "asc")], rank_col="r", num_partitions=4
+    )
+    assert ranked.columns == df.columns + ["r"]
+    got = {r["id"]: (r["__rk0"], r["__rk1"]) for r in ranked.collect()}
+    assert got == {i: (f"x{i}", i * 10) for i in range(50)}
+
+
+def test_sql_literal_round_trips_exactly(spark):
+    """Every rendered literal parses back to the identical value and type,
+    on round-trip-hostile values; an unsupported type raises instead of
+    returning None."""
+    import datetime as dt
+    import math
     from decimal import Decimal
 
-    assert _sql_lit(Decimal("1.5")) is None
-    norm = _normalize_order_spec([("v", "asc")])
-    assert _bucket_pid_sql(["__rk0"], norm, [(Decimal("1.5"),)]) is None
-    # exactness of the float renderer on round-trip-hostile values
-    import math
+    from pyspark.sql import types as T
 
-    for x in (0.1, -0.0, 1e-300, 1.7976931348623157e308, math.pi, 3.0):
-        [(rt,)] = spark.sql(f"SELECT {_sql_lit(x)}").collect()
-        assert (rt == x and math.copysign(1, rt) == math.copysign(1, x)), x
+    from skiliopay_datapipeline_customer_spark.operators.sqltext import sql_literal
+
+    cases = [
+        (True, T.BooleanType()),
+        (-(2**63), T.LongType()),
+        (2**63 - 1, T.LongType()),
+        (-0.0, T.DoubleType()),
+        (0.1, T.DoubleType()),
+        (1e-300, T.DoubleType()),
+        (5e-324, T.DoubleType()),
+        (1.7976931348623157e308, T.DoubleType()),
+        (math.pi, T.DoubleType()),
+        (3.0, T.DoubleType()),
+        (float("inf"), T.DoubleType()),
+        (float("-inf"), T.DoubleType()),
+        ("a'b\\c\n中", T.StringType()),
+        (Decimal("-12345678901234567.12"), T.DecimalType(38, 2)),
+        (Decimal("1E+2"), T.DecimalType(10, 0)),
+        (dt.date(1, 1, 1), T.DateType()),
+        (dt.datetime(2021, 11, 7, 1, 30, 0, 5), T.TimestampNTZType()),
+        (bytearray(b"\x00\xff\x10"), T.BinaryType()),
+    ]
+    for v, t in cases:
+        lit = sql_literal(v, t)
+        got = spark.sql(f"SELECT {lit} AS x")
+        assert got.schema["x"].dataType == t, lit
+        [(rt,)] = got.collect()
+        assert rt == v, lit
+        if isinstance(v, float):
+            assert math.copysign(1, rt) == math.copysign(1, v), lit
+    [(nan,)] = spark.sql(f"SELECT {sql_literal(float('nan'), T.DoubleType())}").collect()
+    assert math.isnan(nan)
+    # LTZ timestamps are epoch micros, exact under any session zone
+    micros = 1636263000000005
+    lit = sql_literal(micros, T.TimestampType())
+    [(rt,)] = spark.sql(f"SELECT unix_micros({lit})").collect()
+    assert rt == micros
+    with pytest.raises(TypeError, match="array<int>"):
+        sql_literal([1], T.ArrayType(T.IntegerType()))
 
 
 def test_rank_family_on_empty_and_tiny_frames(spark):

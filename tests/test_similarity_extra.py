@@ -383,3 +383,49 @@ def test_lsh_dup_pairs_auto_planes_scale_with_corpus(spark, sf_dir):
     out = S.lsh_dup_pairs(big, threshold=0.99, num_planes="auto", bands=4)
     assert out.columns == ["id_a", "id_b", "cos_sim"]
     out.limit(1).collect()
+
+
+def test_bucket_fold_sql_equals_python_left_fold(spark):
+    """The LSH banding builder (`_bucket_fold_sql`) must equal its
+    definition, computed locally: per plane a sequential left fold
+    acc = acc + x·h from 0.0 in element order (the IEEE add order the
+    DuckDB oracles replicate), sign bit = acc > 0, bits packed
+    little-endian. Vectors include the zero vector, -0.0 components
+    (projection exactly ±0 → bit 0) and the float→double cast of an
+    array<float> column."""
+    planes = S.make_planes(6, 8)
+    vecs = [
+        [0.0] * 8,
+        [-0.0] * 8,
+        [-0.0, 0.0] * 4,
+        [1.0, -0.0, 0.5, -0.25, 0.0, 2.0, -3.0, 0.125],
+    ] + [
+        [((i * 31 + j * 17) % 23) / 8.0 - 1.375 for j in range(8)]
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(list(enumerate(vecs)), "id long, vec array<float>")
+    got = {
+        r["id"]: (r["vec"], r["bucket"])
+        for r in df.select(
+            "id",
+            "vec",
+            F.expr(S._bucket_fold_sql(S._double_vec_sql("vec"), planes)).alias(
+                "bucket"
+            ),
+        ).collect()
+    }
+
+    def fold_bucket(vec):
+        out = 0
+        for bit, plane in enumerate(planes):
+            acc = 0.0
+            for x, h in zip(vec, plane):
+                acc = acc + x * h
+            out += (acc > 0) << bit
+        return out
+
+    assert {i: b for i, (_, b) in got.items()} == {
+        i: fold_bucket(v) for i, (v, _) in got.items()
+    }
+    assert got[0][1] == got[1][1] == got[2][1] == 0
+    assert len({b for _, b in got.values()}) > 8
