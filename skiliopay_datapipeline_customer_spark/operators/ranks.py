@@ -230,7 +230,10 @@ def _bucket_pid_sql(names: list[str], norm, bnds, types) -> str:
     binary-searchable threshold. Monotone w.r.t. the total order for ANY
     boundary set, so rank exactness never depends on the sample; balance
     does. Pinned against the pure-Python count by
-    tests/test_scale_guards.py::test_bucket_pid_sql_equals_python_count.
+    tests/test_scale_guards.py::test_bucket_pid_sql_equals_python_count
+    and against an `F.lit` Column oracle by
+    test_bucket_pid_tree_equals_linear_count and
+    test_bucket_pid_sql_equals_column_tree.
 
     Measured r12 vs the linear sum (31 two-key boundaries, 6M rows,
     identical outputs): first execution 4.32 s → 1.07 s (janino/C2
