@@ -135,14 +135,20 @@ def rfm_features(df: DataFrame) -> DataFrame:
     """feature_engineering.py:54-98: quintile segment digits, weighted raw
     score, right-closed category bins (score outside (0,100] → null).
 
-    Buckets come from the single-action distributed tier (stats ride the
-    plan as a broadcast 1-row cross join) — the eager `quantile_bucket`
-    form cost one extra stats job PER CALL, three per gold build."""
-    from ..operators.ranks import quantile_bucket_distributed as qbd
+    The three quintiles come from ONE `quantile_buckets_distributed` call:
+    one boundary sample action at construction, and every side branch
+    (stats, per-bucket counts) reads this input frame, never another
+    column's ranked output."""
+    from ..operators.ranks import quantile_buckets_distributed
 
-    df = qbd(df, "rfm_recency", [5, 4, 3, 2, 1], ascending=False, out="_r")
-    df = qbd(df, "rfm_frequency", [1, 2, 3, 4, 5], ascending=True, out="_f")
-    df = qbd(df, "rfm_monetary", [1, 2, 3, 4, 5], ascending=True, out="_m")
+    df = quantile_buckets_distributed(
+        df,
+        [
+            ("rfm_recency", [5, 4, 3, 2, 1], False, "_r"),
+            ("rfm_frequency", [1, 2, 3, 4, 5], True, "_f"),
+            ("rfm_monetary", [1, 2, 3, 4, 5], True, "_m"),
+        ],
+    )
     score = (
         F.col("rfm_recency") * 0.4
         + F.col("rfm_frequency") * 0.3

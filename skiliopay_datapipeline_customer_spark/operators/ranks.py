@@ -126,16 +126,47 @@ def _cmp_tuples(norm):
     return cmp_t
 
 
-# (logical-plan semanticHash, spec, nparts) → (boundaries, key types).
-# SAFE BY CONSTRUCTION: boundaries only decide bucket BALANCE — any
-# boundary set yields exact ranks (monotonicity is data-independent), so
-# a stale or even colliding cache entry can never produce a wrong result,
-# only a less even split. The cache exists to amortize the per-call
-# sample job and schema read: repeated identical rank calls (bench warm
-# runs, a driver re-running a query, iterative sessions) skip straight to
-# the lazy plan.
+# (logical-plan semanticHash, specs, nparts) → [(boundaries, key types)]
+# per spec. SAFE BY CONSTRUCTION: boundaries only decide bucket BALANCE —
+# any boundary set yields exact ranks (monotonicity is data-independent),
+# so a stale or even colliding cache entry can never produce a wrong
+# result, only a less even split. The cache exists to amortize the
+# per-call sample job and schema read: repeated identical rank calls
+# (bench warm runs, a driver re-running a query, iterative sessions) skip
+# straight to the lazy plan.
 _BOUNDARY_CACHE: dict = {}
 _BOUNDARY_CACHE_MAX = 256
+
+
+def _fresh(taken: set, stem: str) -> str:
+    """The first of ``stem``, ``stem_1``, ``stem_2``, … whose lower-cased
+    form is not in ``taken`` (Spark resolves column names case-
+    insensitively); the pick is added to ``taken``. Every temp column of
+    this module is named this way, so a caller column of the same name is
+    never replaced or dropped."""
+    for i in itertools.count():
+        name = stem if i == 0 else f"{stem}_{i}"
+        if name.lower() not in taken:
+            taken.add(name.lower())
+            return name
+
+
+def _key_union(norms) -> tuple[list, list[list[int]]]:
+    """The distinct key expressions of several order specs, in first-seen
+    order, and per spec the positions of its keys in that list."""
+    exprs: list = []
+    pos: dict[str, int] = {}
+    idx = []
+    for norm in norms:
+        ix = []
+        for c, _ in norm:
+            s = str(c)
+            if s not in pos:
+                pos[s] = len(exprs)
+                exprs.append(c)
+            ix.append(pos[s])
+        idx.append(ix)
+    return exprs, idx
 
 
 def _sample_keys(df: DataFrame, norm) -> tuple[DataFrame, list]:
@@ -164,44 +195,51 @@ def _sample_keys(df: DataFrame, norm) -> tuple[DataFrame, list]:
     return keyed.select(*sample), types
 
 
-def _collect_boundaries(df: DataFrame, norm, nparts: int) -> tuple[list[tuple], list]:
-    """Sample key tuples with ONE deterministic top-K-by-hash job
-    (TakeOrderedAndProject — per-partition top-K then a driver merge, no
-    full sort), sort them under the spec order, and return ≤ nparts-1
-    evenly spaced, deduplicated boundary tuples together with the key
-    types. Model-sized: K = max(1024, 32·nparts) rows of key columns
-    only. Results memoize on (plan semanticHash, spec, nparts) — see
+def _collect_boundaries(df: DataFrame, norms, nparts: int) -> list[tuple[list, list]]:
+    """Boundaries for several order specs (``norms``) over one frame, from
+    ONE deterministic top-K-by-hash sample job over the union of their key
+    columns (TakeOrderedAndProject — per-partition top-K then a driver
+    merge, no full sort). The sample is sorted once per spec under that
+    spec's order, and each spec gets ≤ nparts-1 evenly spaced,
+    deduplicated boundary tuples together with its key types.
+    Model-sized: K = max(1024, 32·nparts) rows of key columns only.
+    Results memoize on (plan semanticHash, every spec, nparts) — see
     `_BOUNDARY_CACHE`."""
     cache_key = None
     try:  # classic PySpark only; Connect lacks _jdf — just skip the memo
         cache_key = (
             df._jdf.queryExecution().logical().semanticHash(),
-            tuple((str(c), asc) for c, asc in norm),
+            tuple(tuple((str(c), asc) for c, asc in norm) for norm in norms),
             nparts,
         )
     except Exception:
         pass
     if cache_key is not None and cache_key in _BOUNDARY_CACHE:
         return _BOUNDARY_CACHE[cache_key]
-    keys, types = _sample_keys(df, norm)
+    exprs, idx = _key_union(norms)
+    keys, types = _sample_keys(df, [(c, True) for c in exprs])
     k = max(1024, 32 * nparts)
-    rows = (
-        keys.orderBy(F.xxhash64(*[f"__bk{i}" for i in range(len(norm))]))
-        .limit(k)
-        .collect()
-    )
-    cmp_t = _cmp_tuples(norm)
-    tuples = sorted((tuple(r) for r in rows), key=functools.cmp_to_key(cmp_t))
-    m = len(tuples)
-    bnds: list[tuple] = []
-    for i in range(1, nparts):
-        idx = (i * m) // nparts
-        if idx <= 0 or idx >= m:
-            continue
-        t = tuples[idx]
-        if bnds and cmp_t(bnds[-1], t) == 0:
-            continue
-        bnds.append(t)
+    rows = [
+        tuple(r)
+        for r in keys.orderBy(F.xxhash64(*keys.columns)).limit(k).collect()
+    ]
+    sampled = []
+    for norm, ix in zip(norms, idx):
+        cmp_t = _cmp_tuples(norm)
+        tuples = sorted(
+            (tuple(r[i] for i in ix) for r in rows), key=functools.cmp_to_key(cmp_t)
+        )
+        m = len(tuples)
+        bnds: list[tuple] = []
+        for i in range(1, nparts):
+            idx_i = (i * m) // nparts
+            if idx_i <= 0 or idx_i >= m:
+                continue
+            t = tuples[idx_i]
+            if bnds and cmp_t(bnds[-1], t) == 0:
+                continue
+            bnds.append(t)
+        sampled.append((bnds, [types[i] for i in ix]))
     if cache_key is not None:
         # FIFO eviction (insertion-ordered dict), not all-or-nothing
         # clear: at the cap, dropping ONE oldest entry costs one re-sample
@@ -211,8 +249,8 @@ def _collect_boundaries(df: DataFrame, norm, nparts: int) -> tuple[list[tuple], 
         # pytest pins a mid-session clear to identical results).
         while len(_BOUNDARY_CACHE) >= _BOUNDARY_CACHE_MAX:
             _BOUNDARY_CACHE.pop(next(iter(_BOUNDARY_CACHE)))
-        _BOUNDARY_CACHE[cache_key] = (bnds, types)
-    return bnds, types
+        _BOUNDARY_CACHE[cache_key] = sampled
+    return sampled
 
 
 def _bucket_pid_sql(names: list[str], norm, bnds, types) -> str:
@@ -280,53 +318,125 @@ def _bucket_pid_sql(names: list[str], norm, bnds, types) -> str:
     return build(0, len(bnds))
 
 
-def _range_bucketed(df: DataFrame, order_spec, num_partitions: int | None):
-    """Shared first pass: `_pid` from frozen boundary literals, then ONE
-    explicit hash exchange on `_pid` for the WINDOW branch (per-bucket
-    row_number/sum needs co-location). Returns (bucketed frame — `_pid`
-    attached but NOT repartitioned, parts — the repartitioned window
-    input, sort columns).
+def _bucketed(df: DataFrame, norms, num_partitions: int | None, taken: set):
+    """Shared first pass: one bucket id column per order spec, all from
+    frozen boundary literals of one sample job and all in ONE projection.
+    Returns (frame — the caller's columns plus the bucket ids, bucket-id
+    names, per spec its ids as (first id, count) — the ids of different
+    specs are disjoint). Temp names come from :func:`_fresh` over
+    ``taken``.
 
-    The offsets branches aggregate the UNREPARTITIONED `bucketed` frame:
-    a groupBy(_pid) needs no forced exchange — partial aggregation
-    reduces map-side to #buckets rows before its own tiny shuffle,
-    whereas hanging it off `parts` forced the full repartition exchange
-    into every offsets subtree (r11: column pruning had specialized each
-    subtree's copy of that exchange, so ReuseExchange never applied and
-    the bench paid the shuffle + a giant-`_pid`-expression codegen per
-    branch). `_pid` is pure data (frozen literals), so the branches agree
-    by construction wherever they compute it."""
-    norm = _normalize_order_spec(order_spec)
+    The frame is NOT repartitioned: the window branches repartition it on
+    their own bucket id (per-bucket row_number/sum needs co-location),
+    while the count-offsets branch aggregates it as is — a groupBy needs
+    no forced exchange, partial aggregation reduces map-side to #buckets
+    rows before its own tiny shuffle, whereas hanging it off the
+    repartitioned frame forced the full exchange into every offsets
+    subtree (r11: column pruning had specialized each subtree's copy of
+    that exchange, so ReuseExchange never applied and the bench paid the
+    shuffle + a giant bucket-id codegen per branch). Bucket ids are pure
+    data (frozen literals), so the branches agree by construction
+    wherever they compute them."""
     nparts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    bnds, types = _collect_boundaries(df, norm, nparts)
-    # project the key expressions once under temp names the caller's
-    # columns don't use, parse the whole when-tree JVM-side, drop the
-    # temps (the projection collapses — `bucketed` keeps the caller's
-    # schema + `_pid`)
-    taken = {c.lower() for c in df.columns}  # Spark resolves case-insensitively
-    free = (n for n in map("__rk{}".format, itertools.count()) if n not in taken)
-    names = list(itertools.islice(free, len(norm)))
-    keyed = df.withColumns({name: c for name, (c, _) in zip(names, norm)})
-    pid_sql = _bucket_pid_sql(names, norm, bnds, types)
-    bucketed = keyed.withColumn("_pid", F.expr(pid_sql)).drop(*names)
-    parts = bucketed.repartition(max(1, len(bnds) + 1), "_pid")
-    return bucketed, parts, _sort_cols(norm)
+    sampled = _collect_boundaries(df, norms, nparts)
+    # project the key expressions once under temp names, parse every
+    # when-tree JVM-side, drop the temps (the projection collapses)
+    exprs, idx = _key_union(norms)
+    names = [_fresh(taken, f"__rk{i}") for i in range(len(exprs))]
+    pids = [_fresh(taken, "_pid") for _ in norms]
+    # spec k numbers its buckets from the sum of the earlier specs' bucket
+    # counts, so the bucket ids of all specs are disjoint
+    counts = [len(bnds) + 1 for bnds, _ in sampled]
+    spans = list(zip(itertools.accumulate([0, *counts[:-1]]), counts))
+    keyed = df.withColumns(dict(zip(names, exprs)))
+    bucketed = keyed.withColumns(
+        {
+            pid: F.expr(
+                f"{base} + {_bucket_pid_sql([names[i] for i in ix], norm, bnds, types)}"
+            )
+            for pid, (base, _), norm, ix, (bnds, types) in zip(
+                pids, spans, norms, idx, sampled
+            )
+        }
+    ).drop(*names)
+    return bucketed, pids, spans
 
 
-def _prefix_offsets(parts: DataFrame, agg_expr, pid_col: str = "_pid") -> DataFrame:
-    """Exclusive prefix offsets per bucket as a broadcast-ready
-    #buckets-row frame.
+def _prefix_offsets(frame: DataFrame, pid_col: str, aggs: dict, spans) -> DataFrame:
+    """Exclusive prefix offsets per bucket as a broadcast-ready #buckets-
+    row frame of ``pid_col`` and one column per ``aggs`` entry (output
+    column → the aggregate it offsets): offset(p) = Σ agg(p') over the
+    buckets p' < p of p's span. ``spans`` lists each order spec's bucket
+    ids as (first id, count).
 
-    The running sum is a TRIANGULAR SELF-JOIN over the metadata-sized
-    aggregate frame (one row per bucket): offset(p) = Σ agg(p') for
-    p' < p. Quadratic in #buckets — P²/2 comparisons is microscopic for
-    any real P — and entirely window-free, so Spark's 'No Partition Defined
-    for Window' WARN (which we grep bench logs for to catch REAL single-task
-    windows; a constant partitionBy would be stripped by Spark 4's
+    The bucket ids are known on the driver, so the running sum is a
+    TRIANGULAR JOIN of a `range` of them against the metadata-sized
+    per-bucket aggregate, and ``frame`` is aggregated once (a self-join
+    of the aggregate runs the input twice: column pruning gives each side
+    its own copy, so ReuseExchange does not apply). Quadratic in
+    #buckets — P²/2 comparisons is microscopic for any real P — and
+    entirely window-free, so Spark's 'No Partition Defined for Window'
+    WARN (which we grep bench logs for to catch REAL single-task windows;
+    a constant partitionBy would be stripped by Spark 4's
     EliminateWindowPartitions rule and still warn) never fires."""
-    return _prefix_offsets_multi(parts, {"": agg_expr}, pid_col).withColumnRenamed(
-        "_offset_", "_offset"
+    taken = {c.lower() for c in (pid_col, *aggs)}
+    part = {o: _fresh(taken, "_pagg") for o in aggs}
+    prior, lo = _fresh(taken, "_prior_pid"), _fresh(taken, "_lo")
+    sizes = frame.groupBy(F.col(pid_col).alias(prior)).agg(
+        *[e.alias(part[o]) for o, e in aggs.items()]
     )
+    spark = frame.sparkSession
+    ids = functools.reduce(
+        DataFrame.unionAll,
+        [
+            spark.range(base, base + n, 1, 1).select(
+                F.lit(base).alias(lo), F.col("id").cast("int").alias(pid_col)
+            )
+            for base, n in spans
+        ],
+    )
+    before = (F.col(prior) < F.col(pid_col)) & (F.col(prior) >= F.col(lo))
+    return (
+        ids.join(F.broadcast(sizes), before, "left")
+        .groupBy(pid_col)
+        .agg(*[F.sum(part[o]).alias(o) for o in aggs])
+    )
+
+
+def _ranked(
+    df: DataFrame, norms, rank_cols: list[str], num_partitions: int | None
+) -> DataFrame:
+    """Exact 1-based global ranks under several TOTAL orders at once:
+    ``rank_cols[k]`` ranks under ``norms[k]``.
+
+    Every side branch reads the INPUT frame, never an earlier spec's
+    ranked output: one boundary sample job for all specs, every bucket id
+    in one projection, and the per-bucket counts of every spec in ONE
+    aggregate over the exploded bucket ids (disjoint across specs),
+    prefix-summed by one triangular join. Only the windows chain: per
+    spec, one repartition on its bucket id, the per-bucket `row_number`,
+    and a broadcast join of the offsets — the same offsets frame for
+    every spec, so its broadcast is built once and reused."""
+    from pyspark.sql import Window
+
+    taken = {c.lower() for c in (*df.columns, *rank_cols)}
+    bucketed, pids, spans = _bucketed(df, norms, num_partitions, taken)
+    local, opid, off = (_fresh(taken, s) for s in ("_local", "_opid", "_offset"))
+    pairs = bucketed.select(F.explode(F.array(*pids)).alias(opid))
+    offsets = _prefix_offsets(pairs, opid, {off: F.count(F.lit(1))}, spans)
+    out = bucketed
+    for norm, pid, (_, nb), rank in zip(norms, pids, spans, rank_cols):
+        w = Window.partitionBy(pid).orderBy(*_sort_cols(norm))
+        out = (
+            out.repartition(nb, pid)
+            .withColumn(local, F.row_number().over(w))
+            .join(F.broadcast(offsets), F.col(pid) == F.col(opid))
+            .withColumn(
+                rank, (F.coalesce(F.col(off), F.lit(0)) + F.col(local)).cast("long")
+            )
+            .drop(local, opid, off)
+        )
+    return out.drop(*pids)
 
 
 def global_rank_distributed(
@@ -348,23 +458,7 @@ def global_rank_distributed(
     column) or ranks within ties are bucket-placement-dependent. Entries
     are plain columns/names (ascending) or ``(col, 'asc'|'desc')`` tuples.
     """
-    from pyspark.sql import Window
-
-    bucketed, parts, sort_cols = _range_bucketed(df, order_spec, num_partitions)
-    # one value per bucket — metadata-sized, prefix-summed in-plan; the
-    # aggregate hangs off the UNREPARTITIONED frame (map-side partial agg,
-    # no forced full shuffle in this branch)
-    offsets = _prefix_offsets(bucketed, F.count(F.lit(1)))
-    local_w = Window.partitionBy("_pid").orderBy(*sort_cols)
-    return (
-        parts.withColumn("_local", F.row_number().over(local_w))
-        .join(F.broadcast(offsets), "_pid")
-        .withColumn(
-            rank_col,
-            (F.coalesce(F.col("_offset"), F.lit(0)) + F.col("_local")).cast("long"),
-        )
-        .drop("_pid", "_local", "_offset")
-    )
+    return _ranked(df, [_normalize_order_spec(order_spec)], [rank_col], num_partitions)
 
 
 def global_cumsum_distributed(
@@ -402,57 +496,34 @@ def global_cumsums_distributed(
     """
     from pyspark.sql import Window
 
-    _, parts, sort_cols = _range_bucketed(df, order_spec, num_partitions)
+    norm = _normalize_order_spec(order_spec)
+    taken = {c.lower() for c in (*df.columns, *cols.values())}
+    bucketed, [pid], spans = _bucketed(df, [norm], num_partitions, taken)
+    parts = bucketed.repartition(spans[0][1], pid)
+    offs = {o: _fresh(taken, "_offset") for o in cols.values()}
+    locs = {o: _fresh(taken, "_local") for o in cols.values()}
     # per-bucket value sums, prefix-accumulated in bucket order — the
     # same left-to-right add order the windowed form uses per bucket.
     # Unlike the rank/quantile tiers (whose offsets are order-free COUNTS
     # aggregated pre-shuffle), value sums stay on `parts`: float sums are
     # accumulation-order-sensitive and this is the r10-hash-verified form.
-    offsets = _prefix_offsets_multi(parts, {o: F.sum(vc) for vc, o in cols.items()})
+    offsets = _prefix_offsets(
+        parts, pid, {offs[o]: F.sum(vc) for vc, o in cols.items()}, spans
+    )
     local_w = (
-        Window.partitionBy("_pid")
-        .orderBy(*sort_cols)
+        Window.partitionBy(pid)
+        .orderBy(*_sort_cols(norm))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    result = parts
-    for vc, o in cols.items():
-        result = result.withColumn(f"_local_{o}", F.sum(vc).over(local_w))
-    result = result.join(F.broadcast(offsets), "_pid")
-    drop = ["_pid"]
-    for vc, o in cols.items():
+    result = parts.withColumns(
+        {locs[o]: F.sum(vc).over(local_w) for vc, o in cols.items()}
+    )
+    result = result.join(F.broadcast(offsets), pid)
+    for o in cols.values():
         # sum-of-sums has the same dtype as the per-bucket sum
-        zero = F.lit(0).cast(offsets.schema[f"_offset_{o}"].dataType)
-        result = result.withColumn(
-            o,
-            F.coalesce(F.col(f"_offset_{o}"), zero) + F.col(f"_local_{o}"),
-        )
-        drop += [f"_local_{o}", f"_offset_{o}"]
-    return result.drop(*drop)
-
-
-def _prefix_offsets_multi(
-    parts: DataFrame, agg_exprs: dict, pid_col: str = "_pid"
-) -> DataFrame:
-    """:func:`_prefix_offsets` for several aggregates at once — one
-    triangular self-join over the metadata-sized per-bucket frame yields
-    ``_offset_<name>`` per entry."""
-    sizes = parts.groupBy(pid_col).agg(
-        *[e.alias(f"_pagg_{n}") for n, e in agg_exprs.items()]
-    )
-    prior = sizes.select(
-        F.col(pid_col).alias("_prior_pid"),
-        *[F.col(f"_pagg_{n}").alias(f"_prior_{n}") for n in agg_exprs],
-    )
-    return (
-        sizes.join(prior, F.col("_prior_pid") < F.col(pid_col), "left")
-        .groupBy(pid_col)
-        .agg(
-            *[
-                F.sum(f"_prior_{n}").alias(f"_offset_{n}")
-                for n in agg_exprs
-            ]
-        )
-    )
+        zero = F.lit(0).cast(offsets.schema[offs[o]].dataType)
+        result = result.withColumn(o, F.coalesce(F.col(offs[o]), zero) + F.col(locs[o]))
+    return result.drop(pid, *locs.values(), *offs.values())
 
 
 def pack_by_token_budget(
@@ -475,11 +546,94 @@ def pack_by_token_budget(
     that need hard caps truncate the straddler downstream). Entirely
     SQL-expressible → oracle-checkable.
     """
+    taken = {c.lower() for c in (*df.columns, pack_col)}
+    cs = _fresh(taken, "_cs")
     cum = global_cumsum_distributed(
-        df, order_spec, token_col, out="_cs", num_partitions=num_partitions
+        df, order_spec, token_col, out=cs, num_partitions=num_partitions
     )
-    pack = F.floor((F.col("_cs") - F.col(token_col)) / F.lit(budget)).cast("long")
-    return cum.withColumn(pack_col, pack).drop("_cs")
+    pack = F.floor((F.col(cs) - F.col(token_col)) / F.lit(budget)).cast("long")
+    return cum.withColumn(pack_col, pack).drop(cs)
+
+
+def quantile_buckets_distributed(
+    df: DataFrame,
+    specs: list[tuple],
+    q: int = 5,
+    tiebreak: str = "user_id",
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Scale-safe twin of `quantile_bucket` (rank+qcut semantics,
+    feature_engineering.py:89-98) for several columns at once. ``specs``
+    is a list of ``(col, labels, ascending, out)``; ``out`` None means
+    ``f"{col}_q"``. Each spec buckets ``col`` of the INPUT frame, ordered
+    by ``col`` (asc or desc) then ``tiebreak`` (asc).
+
+    Pass 1 computes every spec's exact global rank in one :func:`_ranked`
+    pass; pass 2 buckets each rank against the linear-interpolation
+    quantile edges of ranks 1..n,
+
+        edge_k = 1 + (n - 1) * (k / q),   k = 1 .. q-1   (right-closed)
+
+    — the same edges pandas' ``Series(1..n).quantile(linspace(0,1,q+1))``
+    interpolates. Edges are scalar IEEE expressions, so an ANSI-SQL oracle
+    evaluating the identical formula is bit-compatible.
+
+    Keeps `quantile_bucket`'s degenerate-cardinality guard: fewer than 2
+    distinct values → constant fill label; q clamps to the distinct count.
+
+    One action at construction (the shared boundary sample) and one to
+    force: n and every countDistinct come from ONE plain
+    `df.agg`, cross-joined as a broadcast 1-row frame instead of an eager
+    ``.first()`` job per column (the eager form cost an extra full scan
+    and job per call — measured 3× on the sf0.1 bench). The stats scan
+    stays off the bucket-id lineage: r11 measured the "share the rank's
+    exchange" alternative (stats over the bucketed frame) strictly worse
+    — column pruning specializes each subtree's copy of the exchange so
+    ReuseExchange never applies, and the branch pays an extra repartition
+    plus one more codegen of the ~1000-term bucket-id expression (cold
+    7.9 s vs 2.5 s at sf0.1).
+    """
+    specs = [(c, labels, asc, out or f"{c}_q") for c, labels, asc, out in specs]
+    taken = {c.lower() for c in (*df.columns, *[s[3] for s in specs])}
+    ranks = [_fresh(taken, "_rank") for _ in specs]
+    us = [_fresh(taken, "_u") for _ in specs]
+    n = _fresh(taken, "_n")
+    norms = [
+        _normalize_order_spec(
+            [(F.col(c), "asc" if asc else "desc"), (F.col(tiebreak), "asc")]
+        )
+        for c, _, asc, _ in specs
+    ]
+    # 1-row stats frame, joined lazily — no separate driver job
+    stats = df.agg(
+        F.count(F.lit(1)).alias(n),
+        *[F.countDistinct(c).alias(u) for (c, *_), u in zip(specs, us)],
+    )
+    ranked = _ranked(df, norms, ranks, num_partitions).crossJoin(F.broadcast(stats))
+    n1 = (F.col(n) - F.lit(1)).cast("double")
+
+    def bucket(rank: str, u: str, labels: list, ascending: bool):
+        # effective q = min(q, distinct count), evaluated in-plan; the k-th
+        # edge term only fires while k < eq, so extra CASE terms vanish for
+        # low-cardinality columns. Edge arithmetic (1.0 + (n-1) * (k/eq),
+        # doubles) matches the oracle's literal form bit-for-bit.
+        eq = F.least(F.lit(q), F.col(u)).cast("double")
+        b = F.lit(1)
+        for k in range(1, q):
+            edge = F.lit(1.0) + n1 * (F.lit(float(k)) / eq)
+            b = b + ((F.lit(k) < F.col(u)) & (F.col(rank) > edge)).cast("int")
+        # element_at(full labels, b) == element_at(labels[:eq], b) because
+        # b <= eq and the slice is a prefix
+        label_arr = F.array(*[F.lit(x) for x in labels])
+        fill = labels[0] if ascending else labels[-1]
+        return F.when(F.col(u) < 2, F.lit(fill)).otherwise(F.element_at(label_arr, b))
+
+    return ranked.withColumns(
+        {
+            out: bucket(rank, u, labels, asc)
+            for (_, labels, asc, out), rank, u in zip(specs, ranks, us)
+        }
+    ).drop(*ranks, *us, n)
 
 
 def quantile_bucket_distributed(
@@ -492,66 +646,10 @@ def quantile_bucket_distributed(
     out: str | None = None,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Two-pass scale-safe twin of `quantile_bucket` (rank+qcut semantics,
-    feature_engineering.py:89-98): pass 1 computes the exact global rank via
-    `global_rank_distributed`; pass 2 buckets each rank against the linear-
-    interpolation quantile edges of ranks 1..n,
-
-        edge_k = 1 + (n - 1) * (k / q),   k = 1 .. q-1   (right-closed)
-
-    — the same edges pandas' ``Series(1..n).quantile(linspace(0,1,q+1))``
-    interpolates. Edges are scalar IEEE expressions, so an ANSI-SQL oracle
-    evaluating the identical formula is bit-compatible.
-
-    Keeps `quantile_bucket`'s degenerate-cardinality guard: fewer than 2
-    distinct values → constant fill label; q clamps to the distinct count.
-
-    Single-action plan: n / countDistinct ride along as a broadcast 1-row
-    cross join instead of a separate eager ``.first()`` job, so one action
-    computes stats + rank + buckets (the eager form cost an extra full scan
-    and job per call — measured 3× on the sf0.1 bench). The stats scan
-    stays a PLAIN `df.agg` with no `_pid` lineage: r11 measured the
-    "share the rank's exchange" alternative (stats over the bucketed
-    frame) strictly worse — column pruning specializes each subtree's
-    copy of the exchange so ReuseExchange never applies, and the branch
-    pays an extra repartition plus one more codegen of the ~1000-term
-    `_pid` expression (cold 7.9 s vs 2.5 s at sf0.1).
-    """
-    out = out or f"{col}_q"
-    order = [
-        (F.col(col), "asc" if ascending else "desc"),
-        (F.col(tiebreak), "asc"),
-    ]
-    # 1-row stats frame, joined lazily — no separate driver job
-    stats = df.agg(
-        F.countDistinct(col).alias("_u"),
-        F.count(F.lit(1)).alias("_n"),
+    """One-column :func:`quantile_buckets_distributed`."""
+    return quantile_buckets_distributed(
+        df, [(col, labels, ascending, out)], q, tiebreak, num_partitions
     )
-    ranked = global_rank_distributed(
-        df, order, rank_col="_rank", num_partitions=num_partitions
-    ).crossJoin(F.broadcast(stats))
-    # effective q = min(q, distinct count), evaluated in-plan; the k-th edge
-    # term only fires while k < eq, so extra CASE terms vanish for low-
-    # cardinality columns. Edge arithmetic (1.0 + (n-1) * (k/eq), doubles)
-    # matches the oracle's literal form bit-for-bit.
-    eq = F.least(F.lit(q), F.col("_u")).cast("double")
-    n1 = (F.col("_n") - F.lit(1)).cast("double")
-    bucket = F.lit(1)
-    for k in range(1, q):
-        edge = F.lit(1.0) + n1 * (F.lit(float(k)) / eq)
-        bucket = bucket + (
-            (F.lit(k) < F.col("_u")) & (F.col("_rank") > edge)
-        ).cast("int")
-    # element_at(full labels, bucket) == element_at(labels[:eq], bucket)
-    # because bucket <= eq and the slice is a prefix
-    label_arr = F.array(*[F.lit(x) for x in labels])
-    fill = labels[0] if ascending else labels[-1]
-    return ranked.withColumn(
-        out,
-        F.when(F.col("_u") < 2, F.lit(fill)).otherwise(
-            F.element_at(label_arr, bucket)
-        ),
-    ).drop("_rank", "_u", "_n")
 
 
 def ntile_distributed(
@@ -580,13 +678,15 @@ def ntile_distributed(
     comes from frozen boundary literals, so the join-derived lineage that
     broke the r9 range-exchange form (dsir deciles at sf0.1) has no
     divergence channel here."""
+    taken = {c.lower() for c in (*df.columns, out)}
+    r, n = _fresh(taken, "_r"), _fresh(taken, "_n")
     ranked = global_rank_distributed(
-        df, order_spec, rank_col="_r", num_partitions=num_partitions
+        df, order_spec, rank_col=r, num_partitions=num_partitions
     )
-    stats = ranked.agg(F.count(F.lit(1)).alias("_n"))
+    stats = ranked.agg(F.count(F.lit(1)).alias(n))
     ranked = ranked.crossJoin(F.broadcast(stats))
-    bucket = _ntile_bucket(F.col("_r"), F.col("_n"), q)
-    return ranked.withColumn(out, bucket.cast("int")).drop("_r", "_n")
+    bucket = _ntile_bucket(F.col(r), F.col(n), q)
+    return ranked.withColumn(out, bucket.cast("int")).drop(r, n)
 
 
 def _ntile_bucket(r, n, q: int):
@@ -621,13 +721,15 @@ def grouped_ntile_distributed(
     no task ever holds a whole group.
     """
     group_order = [(F.col(c), "asc") for c in group_cols] + list(order_spec)
+    taken = {c.lower() for c in (*df.columns, out)}
+    r, base, n = _fresh(taken, "_r"), _fresh(taken, "_base"), _fresh(taken, "_n")
     ranked = global_rank_distributed(
-        df, group_order, rank_col="_r", num_partitions=num_partitions
+        df, group_order, rank_col=r, num_partitions=num_partitions
     )
     stats = ranked.groupBy(*group_cols).agg(
-        F.min("_r").alias("_base"), F.count(F.lit(1)).alias("_n")
+        F.min(r).alias(base), F.count(F.lit(1)).alias(n)
     )
     joined = ranked.join(F.broadcast(stats), group_cols)
-    rg = F.col("_r") - F.col("_base") + 1
-    bucket = _ntile_bucket(rg, F.col("_n"), q)
-    return joined.withColumn(out, bucket.cast("int")).drop("_r", "_base", "_n")
+    rg = F.col(r) - F.col(base) + 1
+    bucket = _ntile_bucket(rg, F.col(n), q)
+    return joined.withColumn(out, bucket.cast("int")).drop(r, base, n)

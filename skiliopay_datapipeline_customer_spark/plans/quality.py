@@ -1,14 +1,26 @@
 """Data-quality report operator family (SURVEY §2.9 V4-V10).
 
 Reference parity: src/processing/data_quality.py runs six per-column loops;
-this engine fuses each report into ONE multi-aggregate pass and the composite
-gate into driver-side scalar math over the collected report (A14 weights
-.25/.20/.25/.20/.10, PASS ≥ 0.8 — data_quality.py:51-52,360-374).
+this engine computes every statistic of the requested reports in at most
+TWO actions, and the composite gate as driver-side scalar math over the
+collected rows (A14 weights .25/.20/.25/.20/.10, PASS ≥ 0.8 —
+data_quality.py:51-52,360-374):
 
-Scale: each report = one scan with map-side partial aggregation; the only
-collected data is a single metrics row per report. Percentile fences use
-exact `percentile` here (oracle parity ≤ sf0.1) with `approx_quantile_rel`
-documented as the 100 TB profiler fallback.
+1. one `df.agg`: row count, null counts, key distinct counts, rule and
+   invariant violation counts, and the outlier fences;
+2. one pass over ``df.groupBy(<every column>).count()``: the distinct-row
+   count for the duplicate-row rate, and the outlier counts weighted by
+   row multiplicity (fences from action 1 are literals here). Without
+   the uniqueness report (`outliers` alone) it is a plain `df.agg`.
+
+`run_quality_checks` always runs exactly these two, whatever the number
+of columns or rules. Each statistic is written once, in `_reports`; the
+per-report functions are calls of it. Scale: action 1 is one scan with
+map-side partial aggregation; action 2 shuffles the distinct rows once,
+as the dup-row rate's `dropDuplicates` pass did; one metrics row is
+collected per action. Percentile fences use exact `percentile` (oracle
+parity ≤ sf0.1); ``approx=True`` swaps in `approx_percentile`, the 100 TB
+profiler path.
 """
 
 from __future__ import annotations
@@ -17,6 +29,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..operators.ranks import _fresh
 
 WEIGHTS = {
     "completeness": 0.25,
@@ -42,62 +56,148 @@ class QualityReport:
         return self.overall >= PASS_THRESHOLD
 
 
-def completeness(df: DataFrame, columns: list[str] | None = None) -> dict:
-    cols = columns or df.columns
-    row = df.agg(
-        F.count("*").alias("n"),
-        *[F.sum(F.col(c).isNull().cast("int")).alias(c) for c in cols],
-    ).first()
-    n = row["n"] or 1
-    rates = {c: row[c] / n for c in cols}
-    missing_total = sum(row[c] for c in cols)
-    return {
-        "null_rates": rates,
-        "flagged": [c for c, r in rates.items() if r > 0.10],
-        "score": 1.0 - missing_total / (n * len(cols)),
-        "n_rows": row["n"],
+def _col(name: str):
+    """Column by its exact name — dots and backticks are part of it."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+def _reports(
+    df: DataFrame,
+    completeness_columns: list[str] | None = None,
+    key_columns: list[str] | None = None,
+    rules: dict | None = None,
+    invariants: dict | None = None,
+    outlier_columns: list[str] | None = None,
+    k: float = 1.5,
+    approx: bool = False,
+) -> dict[str, dict]:
+    """The requested reports (an argument left None is not requested),
+    from at most two actions — see the module docstring.
+
+    rules/invariants: {name: violation Column}. Outliers are IQR fences
+    at ``k``; approx=True takes them from approx_percentile."""
+    stats = [F.count(F.lit(1))]
+
+    def stat(expr) -> int:
+        stats.append(expr)
+        return len(stats) - 1
+
+    nulls = {c: stat(F.count_if(_col(c).isNull())) for c in completeness_columns or []}
+    keys = {c: stat(F.countDistinct(_col(c))) for c in key_columns or []}
+    checks = {"validity": rules, "consistency": invariants}
+    broken = {
+        report: {name: stat(F.count_if(cond)) for name, cond in (given or {}).items()}
+        for report, given in checks.items()
     }
+    pct = (
+        (lambda c, p: F.approx_percentile(c, F.lit(p), F.lit(10_000)))
+        if approx
+        else (lambda c, p: F.percentile(c, F.lit(p)))
+    )
+    fences = {
+        c: (stat(pct(_col(c), 0.25)), stat(pct(_col(c), 0.75)))
+        for c in outlier_columns or []
+    }
+    row = df.agg(*[e.alias(f"s{i}") for i, e in enumerate(stats)]).collect()[0]
+    n_rows = row[0]
+    n = n_rows or 1
+
+    distinct_rows = None
+    outlier_counts: dict[str, int] = {}
+    if key_columns is not None or fences:
+        # action 2: outliers are counted per distinct row, weighted by its
+        # multiplicity, over the grouping that also counts distinct rows
+        # (uniqueness); without uniqueness, over the rows themselves
+        if key_columns is not None:
+            weight = _fresh({c.lower() for c in df.columns}, "_n")
+            source = df.groupBy(*[_col(c) for c in df.columns]).agg(
+                F.count(F.lit(1)).alias(weight)
+            )
+            w = F.col(weight)
+        else:
+            source, w = df, F.lit(1)
+        conds = {}
+        for c, (i1, i3) in fences.items():
+            q1, q3 = row[i1], row[i3]
+            if q1 is None or q3 is None:
+                # all-NULL column / empty frame: no fences, nothing is an
+                # outlier — report 0.0 instead of crashing the composite gate
+                conds[c] = F.lit(False)
+                continue
+            iqr = q3 - q1
+            conds[c] = (_col(c) < q1 - k * iqr) | (_col(c) > q3 + k * iqr)
+        row2 = source.agg(
+            F.count(F.lit(1)),
+            *[F.sum(F.when(cond, w).otherwise(0)) for cond in conds.values()],
+        ).collect()[0]
+        distinct_rows = row2[0]
+        # sum over an EMPTY frame is NULL, not 0 — same degenerate case
+        outlier_counts = {c: row2[i + 1] or 0 for i, c in enumerate(conds)}
+
+    out: dict[str, dict] = {}
+    if completeness_columns is not None:
+        cols = completeness_columns
+        rates = {c: row[nulls[c]] / n for c in cols}
+        out["completeness"] = {
+            "null_rates": rates,
+            "flagged": [c for c, r in rates.items() if r > 0.10],
+            "score": 1.0 - sum(row[nulls[c]] for c in cols) / (n * len(cols)),
+            "n_rows": n_rows,
+        }
+    if key_columns is not None:
+        dup_rate = 1.0 - distinct_rows / n
+        key_uniq = {c: row[keys[c]] / n for c in key_columns}
+        avg_uniq = sum(key_uniq.values()) / max(len(key_uniq), 1)
+        out["uniqueness"] = {
+            "key_uniqueness": key_uniq,
+            "dup_row_rate": dup_rate,
+            "score": avg_uniq * (1.0 - dup_rate),
+            "n_rows": n_rows,
+        }
+    for report, given in checks.items():
+        if given is None:
+            continue
+        if not given:
+            out[report] = {"violations": {}, "score": 1.0}
+            continue
+        violations = {name: row[i] for name, i in broken[report].items()}
+        issues = sum(1 for v in violations.values() if v > 0)
+        out[report] = {
+            "violations": violations,
+            "score": 1.0 - issues / len(given),
+            "n_rows": n_rows,
+        }
+    if outlier_columns is not None:
+        if not outlier_columns:
+            out["outliers"] = {"outlier_rates": {}, "flagged": [], "score": 1.0}
+        else:
+            rates = {c: outlier_counts[c] / n for c in outlier_columns}
+            out["outliers"] = {
+                "outlier_rates": rates,
+                "flagged": [c for c, r in rates.items() if r > 0.05],
+                "score": 1.0 - sum(rates.values()) / max(len(rates), 1),
+                "n_rows": n_rows,
+            }
+    return out
+
+
+def completeness(df: DataFrame, columns: list[str] | None = None) -> dict:
+    return _reports(df, completeness_columns=columns or df.columns)["completeness"]
 
 
 def uniqueness(df: DataFrame, key_columns: list[str]) -> dict:
-    row = df.agg(
-        F.count("*").alias("n"),
-        *[F.countDistinct(c).alias(c) for c in key_columns],
-    ).first()
-    n = row["n"] or 1
-    # dup-row rate over all columns (U1 semantics)
-    n_distinct_rows = df.dropDuplicates().count()
-    dup_rate = 1.0 - n_distinct_rows / n
-    key_uniq = {c: row[c] / n for c in key_columns}
-    avg_uniq = sum(key_uniq.values()) / max(len(key_uniq), 1)
-    return {
-        "key_uniqueness": key_uniq,
-        "dup_row_rate": dup_rate,
-        "score": avg_uniq * (1.0 - dup_rate),
-        "n_rows": row["n"],
-    }
+    """Key uniqueness plus the dup-row rate over all columns (U1)."""
+    return _reports(df, key_columns=key_columns)["uniqueness"]
 
 
 def validity(df: DataFrame, rules: dict[str, object]) -> dict:
-    """rules: {rule_name: violation Column}. One conditional-sum pass."""
-    if not rules:
-        return {"violations": {}, "score": 1.0}
-    row = df.agg(
-        F.count("*").alias("n"),
-        *[F.sum(F.when(cond, 1).otherwise(0)).alias(name) for name, cond in rules.items()],
-    ).first()
-    violations = {name: row[name] for name in rules}
-    issues = sum(1 for v in violations.values() if v > 0)
-    return {
-        "violations": violations,
-        "score": 1.0 - issues / len(rules),
-        "n_rows": row["n"],
-    }
+    """rules: {rule_name: violation Column}. One conditional-count pass."""
+    return _reports(df, rules=rules)["validity"]
 
 
 def consistency(df: DataFrame, invariants: dict[str, object]) -> dict:
     """invariants: {name: violated Column} (e.g. 30d > 90d)."""
-    return validity(df, invariants)
+    return _reports(df, invariants=invariants)["consistency"]
 
 
 def outliers(
@@ -107,41 +207,7 @@ def outliers(
     regardless of column count. approx=True swaps exact percentile for
     approx_percentile (t-digest, fixed memory) — the 100 TB profiler path
     where a fence a few ulps off changes nothing."""
-    if not columns:
-        return {"outlier_rates": {}, "flagged": [], "score": 1.0}
-    pct = (
-        (lambda c, p: F.approx_percentile(c, F.lit(p), F.lit(10_000)))
-        if approx
-        else (lambda c, p: F.percentile(c, F.lit(p)))
-    )
-    fences_row = df.agg(
-        *[pct(c, 0.25).alias(f"{c}_q1") for c in columns],
-        *[pct(c, 0.75).alias(f"{c}_q3") for c in columns],
-    ).first()
-    conds = {}
-    for c in columns:
-        q1, q3 = fences_row[f"{c}_q1"], fences_row[f"{c}_q3"]
-        if q1 is None or q3 is None:
-            # all-NULL column / empty frame: no fences, nothing is an
-            # outlier — report 0.0 instead of crashing the composite gate
-            conds[c] = F.lit(False)
-            continue
-        iqr = q3 - q1
-        conds[c] = (F.col(c) < q1 - k * iqr) | (F.col(c) > q3 + k * iqr)
-    row = df.agg(
-        F.count("*").alias("n"),
-        *[F.sum(F.when(cond, 1).otherwise(0)).alias(c) for c, cond in conds.items()],
-    ).first()
-    n = row["n"] or 1
-    # sum over an EMPTY frame is NULL, not 0 — same degenerate case
-    rates = {c: (row[c] or 0) / n for c in columns}
-    avg_rate = sum(rates.values()) / max(len(rates), 1)
-    return {
-        "outlier_rates": rates,
-        "flagged": [c for c, r in rates.items() if r > 0.05],
-        "score": 1.0 - avg_rate,
-        "n_rows": row["n"],
-    }
+    return _reports(df, outlier_columns=columns, k=k, approx=approx)["outliers"]
 
 
 def distribution(df: DataFrame, label_col: str, category_col: str) -> dict:
@@ -177,15 +243,20 @@ def run_quality_checks(
     outlier_columns: list[str] | None = None,
     approx: bool = False,
 ) -> QualityReport:
-    """The composite V10 gate: weighted score over the five reports.
-    approx=True selects the fixed-memory sketch statistics for profiling
-    at scales where exact percentiles would shuffle the column."""
+    """The composite V10 gate: weighted score over the five reports, in
+    exactly two actions (module docstring). approx=True selects the
+    fixed-memory sketch statistics for profiling at scales where exact
+    percentiles would shuffle the column."""
     report = QualityReport()
-    report.details["completeness"] = completeness(df, completeness_columns)
-    report.details["uniqueness"] = uniqueness(df, key_columns)
-    report.details["validity"] = validity(df, validity_rules or {})
-    report.details["consistency"] = consistency(df, consistency_invariants or {})
-    report.details["outliers"] = outliers(df, outlier_columns or [], approx=approx)
+    report.details = _reports(
+        df,
+        completeness_columns=completeness_columns or df.columns,
+        key_columns=key_columns,
+        rules=validity_rules or {},
+        invariants=consistency_invariants or {},
+        outlier_columns=outlier_columns or [],
+        approx=approx,
+    )
     for k in WEIGHTS:
         report.scores[k] = report.details[k].get("score", 1.0)
     return report

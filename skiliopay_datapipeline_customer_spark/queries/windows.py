@@ -237,12 +237,12 @@ def trailing_week_user_value(spark, sf_dir):
 # Full RFM score — the composite behind the dashboard's rfm_recency /
 # rfm_frequency / rfm_monetary columns (pages.py:63-84): per customer,
 # quintile scores for recency (lower = better → 5), frequency and monetary
-# (higher = better → 5), concatenated "RFM" string. Each score is its own
-# range-partitioned quantile bucket over the per-customer aggregate
-# (rank+qcut edges, identical IEEE edge formula in the oracle), computed on
-# SEPARATE lineages from the base frame and equi-joined by key — chaining
-# the bucket passes would nest range exchanges, the hazard the KS fix
-# documents in operators/ranks.py.
+# (higher = better → 5), concatenated "RFM" string. The three scores are
+# range-bucketed quantiles over the per-customer aggregate (rank+qcut
+# edges, identical IEEE edge formula in the oracle) from ONE
+# quantile_buckets_distributed call: every bucket id comes from frozen
+# boundary literals over the base frame, so no rank pass keys off another
+# one's exchange (the hazard the KS fix documents in operators/ranks.py).
 # ---------------------------------------------------------------------------
 
 _RFM_EDGE = """1 + (CASE WHEN {r} > 1 + (n - 1) * 0.2 THEN 1 ELSE 0 END)
@@ -284,7 +284,7 @@ _RFM_EDGE = """1 + (CASE WHEN {r} > 1 + (n - 1) * 0.2 THEN 1 ELSE 0 END)
     """,
 )
 def rfm_scores(spark, sf_dir):
-    from ..operators.ranks import quantile_bucket_distributed
+    from ..operators.ranks import quantile_buckets_distributed
 
     customer = table(spark, sf_dir, "customer")
     orders = table(spark, sf_dir, "orders")
@@ -300,26 +300,22 @@ def rfm_scores(spark, sf_dir):
         )
     )
 
-    def score(col, labels, out):
-        return quantile_bucket_distributed(
-            base, col, labels, ascending=True, q=5,
-            tiebreak="c_custkey", out=out,
-        ).select("c_custkey", out)
-
-    r = score("recency", [5, 4, 3, 2, 1], "r_score")
-    f = score("frequency", [1, 2, 3, 4, 5], "f_score")
-    m = score("monetary", [1, 2, 3, 4, 5], "m_score")
-    return (
-        r.join(f, "c_custkey")
-        .join(m, "c_custkey")
-        .select(
-            "c_custkey",
-            "r_score",
-            "f_score",
-            "m_score",
-            F.concat_ws(
-                "", F.col("r_score"), F.col("f_score"), F.col("m_score")
-            ).alias("rfm"),
-        )
-        .orderBy("c_custkey")
+    scored = quantile_buckets_distributed(
+        base,
+        [
+            ("recency", [5, 4, 3, 2, 1], True, "r_score"),
+            ("frequency", [1, 2, 3, 4, 5], True, "f_score"),
+            ("monetary", [1, 2, 3, 4, 5], True, "m_score"),
+        ],
+        q=5,
+        tiebreak="c_custkey",
     )
+    return scored.select(
+        "c_custkey",
+        "r_score",
+        "f_score",
+        "m_score",
+        F.concat_ws("", F.col("r_score"), F.col("f_score"), F.col("m_score")).alias(
+            "rfm"
+        ),
+    ).orderBy("c_custkey")

@@ -1058,7 +1058,7 @@ def test_bucket_pid_sql_equals_python_count(spark):
         df = _all_key_types_frame(spark)
         for spec in _ALL_KEY_SPECS:
             norm = _normalize_order_spec(spec)
-            bnds, types = _collect_boundaries(df, norm, 16)
+            [(bnds, types)] = _collect_boundaries(df, [norm], 16)
             if spec[0][0] == "v":
                 # the sample over this salted frame must include the
                 # adversarial classes, or the equivalence below proves
@@ -1127,7 +1127,7 @@ def test_bucket_pid_tree_equals_linear_count(spark):
     df = _all_key_types_frame(spark).select("id", "v", "s")
     for spec in _ALL_KEY_SPECS[:2]:
         norm = _normalize_order_spec(spec)
-        bnds, types = _collect_boundaries(df, norm, 16)
+        [(bnds, types)] = _collect_boundaries(df, [norm], 16)
         # boundary sample over this salted frame must include the
         # adversarial classes, or the equivalence below proves less
         assert any(b[0] is None or b[0] != b[0] for b in bnds), bnds
@@ -1156,7 +1156,7 @@ def test_bucket_pid_sql_equals_column_tree(spark):
     df = _all_key_types_frame(spark)
     for spec in _ALL_KEY_SPECS[:6]:
         norm = _normalize_order_spec(spec)
-        bnds, types = _collect_boundaries(df, norm, 16)
+        [(bnds, types)] = _collect_boundaries(df, [norm], 16)
         conds = [_lit_strictly_after(norm, b) for b in bnds]
 
         def tree(lo, hi):
@@ -1347,3 +1347,185 @@ def test_boundary_cache_clear_and_eviction_are_correctness_neutral(spark):
     assert ("synthetic", 1) in ranks._BOUNDARY_CACHE
     assert len(ranks._BOUNDARY_CACHE) == ranks._BOUNDARY_CACHE_MAX
     ranks._BOUNDARY_CACHE.clear()
+
+
+def test_rank_temp_names_keep_every_caller_column(spark):
+    """Caller columns named like the rank operators' temps — `_pid`,
+    `_local`, `_offset`, `_rank`, `_u`, `_n` (in any letter case) — keep
+    their names, positions and values through global_rank_distributed
+    and quantile_bucket_distributed; the ranks and buckets still equal
+    the single-window forms."""
+    from pyspark.sql import Window
+
+    from skiliopay_datapipeline_customer_spark.functions.churn_features import (
+        quantile_bucket_parity,
+    )
+
+    rows = [
+        (i, float((i * 37) % 11), f"p{i}", i * 2, i * 3.5, f"r{i}", -i, i % 3 == 0)
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "id long, v double, _pid string, _LOCAL long, _offset double, "
+        "_rank string, _u long, _n boolean",
+    )
+    caller = {r[0]: r for r in rows}
+
+    ranked = global_rank_distributed(
+        df, [("v", "desc"), ("id", "asc")], rank_col="r", num_partitions=4
+    )
+    assert ranked.columns == df.columns + ["r"]
+    window = Window.orderBy(F.col("v").desc(), F.col("id"))
+    want = {
+        r["id"]: r["r"]
+        for r in df.select("id", F.row_number().over(window).alias("r")).collect()
+    }
+    got = ranked.collect()
+    assert {r[0]: tuple(r[:-1]) for r in got} == caller
+    assert {r["id"]: r["r"] for r in got} == want
+
+    qb = quantile_bucket_distributed(
+        df, "v", [1, 2, 3, 4, 5], ascending=True, tiebreak="id", out="q",
+        num_partitions=4,
+    )
+    assert qb.columns == df.columns + ["q"]
+    exact = quantile_bucket_parity(
+        df, "v", [1, 2, 3, 4, 5], ascending=True, tiebreak="id", out="q"
+    )
+    got = qb.collect()
+    assert {r[0]: tuple(r[:-1]) for r in got} == caller
+    assert {r["id"]: r["q"] for r in got} == {
+        r["id"]: r["q"] for r in exact.select("id", "q").collect()
+    }
+
+
+def _parity_buckets(df, specs, tiebreak):
+    from skiliopay_datapipeline_customer_spark.functions.churn_features import (
+        quantile_bucket_parity,
+    )
+
+    return {
+        out: {
+            r[tiebreak]: r[out]
+            for r in quantile_bucket_parity(
+                df, col, labels, ascending=asc, tiebreak=tiebreak, out=out
+            )
+            .select(tiebreak, out)
+            .collect()
+        }
+        for col, labels, asc, out in specs
+    }
+
+
+def test_quantile_buckets_multi_spec_equal_single_column_parity(spark):
+    """Each spec of ONE quantile_buckets_distributed call equals
+    quantile_bucket_parity run alone on its column, ascending and
+    descending, over NULL and NaN keys, ties and n % 5 != 0 — although
+    every spec's side branches read the input frame and the specs share
+    one boundary sample."""
+    from skiliopay_datapipeline_customer_spark.operators.ranks import (
+        quantile_buckets_distributed,
+    )
+
+    n = 503
+    rows = []
+    for i in range(n):
+        a = None if i % 17 == 0 else (
+            float("nan") if i % 23 == 0 else float((i * 7919) % 13) - 6.5
+        )
+        b = None if i % 29 == 0 else (i * 31) % 41
+        rows.append((i, a, b))
+    df = spark.createDataFrame(rows, "user_id long, a double, b long")
+    up, down = [1, 2, 3, 4, 5], [5, 4, 3, 2, 1]
+    specs = [
+        ("a", up, True, "a_up"),
+        ("a", down, False, "a_down"),
+        ("b", up, False, "b_down"),
+        ("b", down, True, "b_up"),
+    ]
+    got = quantile_buckets_distributed(df, specs, num_partitions=8)
+    assert got.columns == df.columns + [s[3] for s in specs]
+    rows_out = got.collect()
+    assert len(rows_out) == n
+    want = _parity_buckets(df, specs, "user_id")
+    for *_, out in specs:
+        assert {r["user_id"]: r[out] for r in rows_out} == want[out], out
+        assert len(set(want[out].values())) == 5, out
+
+
+def test_quantile_buckets_constant_column_takes_fill_label_alone(spark):
+    """A constant column among normal ones takes the fill label (labels[0]
+    ascending, labels[-1] descending) while the other specs of the same
+    call still bucket normally — the fill guard is per spec."""
+    from skiliopay_datapipeline_customer_spark.operators.ranks import (
+        quantile_buckets_distributed,
+    )
+
+    rows = [(i, float((i * 37) % 101), 42.0, i % 7) for i in range(97)]
+    df = spark.createDataFrame(rows, "user_id long, v double, k double, w long")
+    specs = [
+        ("v", [1, 2, 3, 4, 5], True, "qv"),
+        ("k", [5, 4, 3, 2, 1], False, "qk"),
+        ("k", [5, 4, 3, 2, 1], True, "qk_up"),
+        ("w", [1, 2, 3, 4, 5], False, "qw"),
+    ]
+    got = quantile_buckets_distributed(df, specs, num_partitions=4).collect()
+    want = _parity_buckets(df, specs, "user_id")
+    for *_, out in specs:
+        assert {r["user_id"]: r[out] for r in got} == want[out], out
+    assert set(want["qk"].values()) == {1} and set(want["qk_up"].values()) == {5}
+    assert len(set(want["qv"].values())) == 5 and len(set(want["qw"].values())) == 5
+
+
+@contextlib.contextmanager
+def _aqe_off(spark):
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def _jobs_in_group(spark, group, fn):
+    """(fn(), number of Spark jobs fn launched) — counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_rfm_features_builds_in_one_job_over_one_scan(spark, sf_dir):
+    """The gold layer's RFM quintiles over a parquet-backed per-customer
+    frame (the daily job's gold input shape): building rfm_features runs
+    exactly ONE Spark job (the shared boundary sample of the three
+    columns), and with AQE off the executed plan scans the input once —
+    every side branch (stats, per-bucket counts, offsets) reads the input
+    frame, so each reuses the same exchange instead of re-running an
+    earlier column's rank."""
+    import uuid
+
+    from skiliopay_datapipeline_customer_spark.functions.churn_features import (
+        rfm_features,
+    )
+    from skiliopay_datapipeline_customer_spark.operators import ranks
+
+    orders = table(spark, sf_dir, "orders")
+    per_cust = orders.groupBy(F.col("o_custkey").alias("user_id")).agg(
+        F.datediff(F.lit("1998-08-02"), F.max("o_orderdate")).alias("rfm_recency"),
+        F.count("*").alias("rfm_frequency"),
+        F.round(F.sum("o_totalprice"), 2).alias("rfm_monetary"),
+    )
+    with _aqe_off(spark):
+        ranks._BOUNDARY_CACHE.clear()
+        gold, jobs = _jobs_in_group(
+            spark, f"rfm-build-{uuid.uuid4().hex}", lambda: rfm_features(per_cust)
+        )
+        assert jobs == 1
+        plan = gold._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan") == 1, plan
+        assert gold.count() == per_cust.count()

@@ -237,3 +237,190 @@ def test_seasonal_anomalies_null_nan_values_drop_not_raise(spark, sf_dir, tmp_pa
     finally:
         con.close()
     assert compare_frames(out, opdf) == []
+
+
+_GATE_COLUMNS = ["id", "amt.usd", "qty", "score", "tag"]
+
+
+def _gate_rows():
+    """Rows with NULLs, NaN (never in a column where it could be confused
+    with a NULL of an otherwise identical row), duplicate rows, duplicate
+    keys, a violated rule, outliers, and a dotted column name."""
+    rows = []
+    for i in range(120):
+        amt = None if i % 19 == 0 else float((i * 37) % 50) + 0.25
+        if i in (7, 61):
+            amt = 900.0 + i  # far above the upper fence
+        if i == 88:
+            amt = -700.0  # far below the lower fence
+        qty = None if i % 11 == 0 else (i * 13) % 29 - 3  # a few negatives
+        if i in (5, 52):
+            qty = 400 + i
+        score = float("nan") if i % 23 == 0 else (None if i % 17 == 0 else i / 7.0)
+        tag = None if i % 5 == 0 else ["a", "b", "c"][i % 3]
+        rows.append((i % 100, amt, qty, score, tag))  # ids 0-19 repeat
+    # exact duplicate rows, among them a NaN row and two outlier rows
+    rows += [rows[3], rows[3], rows[23], rows[7], rows[52]]
+    return rows
+
+
+def _pandas_gate(rows, k=1.5, approx=False):
+    """The gate's statistics computed with pandas on the driver, from the
+    same rows, under Spark's semantics: NaN is a value (not NULL), equal
+    to itself and above every number; NULLs are skipped by distinct
+    counts and percentiles; exact fences interpolate linearly, approx
+    fences are the element of rank ceil(p·n)."""
+    import math
+
+    import pandas as pd
+
+    pdf = pd.DataFrame(rows, columns=_GATE_COLUMNS, dtype=object)
+
+    def nan_token(v):
+        return "NaN" if isinstance(v, float) and math.isnan(v) else v
+
+    n_rows = len(pdf)
+    n = n_rows or 1
+    nulls = {c: int(pdf[c].map(lambda v: v is None).sum()) for c in pdf.columns}
+    rates = {c: nulls[c] / n for c in pdf.columns}
+    distinct_rows = len(pdf.map(nan_token).drop_duplicates())
+    keys = ["id", "tag"]
+    key_uniq = {
+        c: len({nan_token(v) for v in pdf[c] if v is not None}) / n for c in keys
+    }
+    dup_rate = 1.0 - distinct_rows / n
+    rules = {"neg_qty": int(pdf["qty"].map(lambda v: v is not None and v < 0).sum())}
+    invariants = {
+        "qty_above_id": int(
+            ((pdf["qty"].map(lambda v: v is not None)) & (pdf["qty"] > pdf["id"])).sum()
+        )
+    }
+
+    def fences(c):
+        vals = pd.Series([v for v in pdf[c] if v is not None], dtype="float64")
+        if vals.empty:
+            return None
+        if approx:
+            srt = sorted(vals)
+            q1, q3 = (srt[max(math.ceil(p * len(srt)), 1) - 1] for p in (0.25, 0.75))
+        else:
+            q1, q3 = vals.quantile([0.25, 0.75]).tolist()
+        iqr = q3 - q1
+        return q1 - k * iqr, q3 + k * iqr
+
+    out_rates = {}
+    for c in ("amt.usd", "qty"):
+        f = fences(c)
+        hits = 0 if f is None else sum(
+            1 for v in pdf[c] if v is not None and (v < f[0] or v > f[1])
+        )
+        out_rates[c] = hits / n
+
+    def checks(counts):
+        issues = sum(1 for v in counts.values() if v > 0)
+        return {
+            "violations": counts,
+            "score": 1.0 - issues / len(counts),
+            "n_rows": n_rows,
+        }
+
+    return {
+        "completeness": {
+            "null_rates": rates,
+            "flagged": [c for c, r in rates.items() if r > 0.10],
+            "score": 1.0 - sum(nulls.values()) / (n * len(rates)),
+            "n_rows": n_rows,
+        },
+        "uniqueness": {
+            "key_uniqueness": key_uniq,
+            "dup_row_rate": dup_rate,
+            "score": sum(key_uniq.values()) / len(keys) * (1.0 - dup_rate),
+            "n_rows": n_rows,
+        },
+        "validity": checks(rules),
+        "consistency": checks(invariants),
+        "outliers": {
+            "outlier_rates": out_rates,
+            "flagged": [c for c, r in out_rates.items() if r > 0.05],
+            "score": 1.0 - sum(out_rates.values()) / len(out_rates),
+            "n_rows": n_rows,
+        },
+    }
+
+
+def _gate(df, approx):
+    return Q.run_quality_checks(
+        df,
+        key_columns=["id", "tag"],
+        validity_rules={"neg_qty": F.col("qty") < 0},
+        consistency_invariants={"qty_above_id": F.col("qty") > F.col("id")},
+        outlier_columns=["amt.usd", "qty"],
+        approx=approx,
+    )
+
+
+def _assert_details_match(got, want):
+    import pytest
+
+    assert got.keys() == want.keys()
+    for report, fields in want.items():
+        assert got[report].keys() == fields.keys(), report
+        for key, value in fields.items():
+            if isinstance(value, (dict, float)):
+                assert got[report][key] == pytest.approx(value, rel=1e-12), (
+                    report,
+                    key,
+                )
+            else:
+                assert got[report][key] == value, (report, key)
+
+
+def test_quality_gate_details_equal_pandas_computation(spark):
+    """Every statistic of `run_quality_checks(...).details` equals the
+    same statistic computed with pandas from the same rows — for exact
+    and approx fences and on an empty frame — so the two-action gate is
+    pinned against an independent oracle, not against its own earlier
+    composition."""
+    rows = _gate_rows()
+    schema = "id long, `amt.usd` double, qty long, score double, tag string"
+    df = spark.createDataFrame(rows, schema)
+    for approx in (False, True):
+        want = _pandas_gate(rows, approx=approx)
+        # the frame exercises every path it claims to
+        assert want["uniqueness"]["dup_row_rate"] > 0
+        assert want["uniqueness"]["key_uniqueness"]["id"] < 1.0
+        assert want["validity"]["violations"]["neg_qty"] > 0
+        assert all(r > 0 for r in want["outliers"]["outlier_rates"].values())
+        assert want["completeness"]["null_rates"]["score"] > 0
+        report = _gate(df, approx)
+        _assert_details_match(report.details, want)
+        assert report.scores == {k: report.details[k]["score"] for k in Q.WEIGHTS}
+
+    empty = spark.createDataFrame([], schema)
+    for approx in (False, True):
+        report = _gate(empty, approx)
+        _assert_details_match(report.details, _pandas_gate([], approx=approx))
+
+
+def test_quality_gate_runs_in_two_jobs(spark):
+    """With AQE off (one job per action) the composite gate launches
+    exactly two Spark jobs, whatever the number of columns and rules."""
+    import uuid
+
+    df = spark.createDataFrame(
+        _gate_rows(), "id long, `amt.usd` double, qty long, score double, tag string"
+    )
+    sc = spark.sparkContext
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for approx in (False, True):
+            group = f"quality-gate-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, group)
+            try:
+                _gate(df, approx)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
