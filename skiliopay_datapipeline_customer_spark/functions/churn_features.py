@@ -49,55 +49,6 @@ def _qcut_edges(n: int, q: int):
     return edges[1:-1]
 
 
-def quantile_bucket(
-    df: DataFrame,
-    col: str,
-    labels: list[int],
-    ascending: bool,
-    q: int = 5,
-    tiebreak: str = "user_id",
-    out: str | None = None,
-) -> DataFrame:
-    """rank(method='first') + qcut over a total order
-    (feature_engineering.py:89-98), with the reference's degenerate-
-    cardinality guard: < 2 distinct values → constant fill label.
-
-    NOT plain ntile: when n % q != 0, ntile fills big tiles first while
-    pd.qcut cuts the integer ranks at float-interpolated quantile edges
-    (whose IEEE rounding can shift a boundary rank DOWN a bucket — e.g.
-    n=4, q=3 puts rank 2 in bucket 2, ntile puts it in bucket 1; caught by
-    tests/test_properties.py). Exact replication: compute the q+1 edges
-    with pandas itself on the driver (scalar math over 1..n — no data
-    moves), then bucket each rank against the q-1 inner edges.
-
-    The rank comes from the range-partitioned two-pass form
-    (operators/ranks.py) — no single-task global window anywhere, so this
-    is the 100 TB-safe PRIMARY form. `quantile_bucket_parity` keeps the
-    original one-window shape for cross-checking in tests.
-    """
-    from ..operators.ranks import global_rank_distributed
-
-    out = out or f"{col}_q"
-    stats = df.agg(
-        F.countDistinct(col).alias("u"), F.count(F.lit(1)).alias("n")
-    ).first()
-    effective_q = min(q, stats["u"])
-    if effective_q < 2:
-        fill = labels[0] if ascending else labels[-1]
-        return df.withColumn(out, F.lit(fill))
-    inner = _qcut_edges(stats["n"], effective_q)
-    order = [
-        (F.col(col), "asc" if ascending else "desc"),
-        (F.col(tiebreak), "asc"),
-    ]
-    ranked = global_rank_distributed(df, order, rank_col="_qb_rank")
-    bucket = F.lit(1)
-    for e in inner:
-        bucket = bucket + (F.col("_qb_rank") > F.lit(float(e))).cast("int")
-    label_arr = F.array(*[F.lit(x) for x in labels[:effective_q]])
-    return ranked.withColumn(out, F.element_at(label_arr, bucket)).drop("_qb_rank")
-
-
 def quantile_bucket_parity(
     df: DataFrame,
     col: str,
@@ -107,7 +58,8 @@ def quantile_bucket_parity(
     tiebreak: str = "user_id",
     out: str | None = None,
 ) -> DataFrame:
-    """Single-window parity form of :func:`quantile_bucket` — row_number over
+    """Single-window parity form of
+    `operators.ranks.quantile_bucket_distributed`: row_number over
     one global-order window, the literal transcription of the reference's
     full-frame rank. Funnels the table through ONE task, so it is tests-only:
     the property suite cross-checks the distributed primary against it (and

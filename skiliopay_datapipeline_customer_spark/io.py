@@ -100,12 +100,15 @@ def fan_out(df: DataFrame, min_tasks: int | None = None) -> DataFrame:
         # the input's shuffle stages. An EXPLICIT min_tasks skips this
         # guard: the caller opted into the probe cost. The guard reads the
         # ANALYZED plan (r13): every guarded logical node (Join/Aggregate/
-        # Window/Sort/Repartition/Deduplicate) already exists pre-optimizer,
-        # and rendering the optimized plan cost ~0.35 s per call (the
+        # Window/Sort/Repartition/Deduplicate, and the set operators the
+        # optimizer only later rewrites into aggregates and joins:
+        # Distinct/Except/Intersect) already exists pre-optimizer, and
+        # rendering the optimized plan cost ~0.35 s per call (the
         # optimizer run + toString) vs ~0.02 s here — per-query fixed cost
         # on every kernel path that uses fan_out.
         shuffle_nodes = (
             "Join", "Aggregate", "Window", "Sort", "Repartition", "Deduplicate",
+            "Distinct", "Except", "Intersect",
         )
         logical = df._jdf.queryExecution().analyzed().toString()
         if any(tok in logical for tok in shuffle_nodes):
@@ -125,18 +128,19 @@ def fan_out(df: DataFrame, min_tasks: int | None = None) -> DataFrame:
             # boundary: under the threshold the input is ≤ target×4 MB,
             # i.e. small by definition, and the exchange is cheap even
             # when a many-tiny-files layout would have parallelized
-            # anyway. Non-file frames (checkpoints, local relations)
-            # keep the exact .rdd probe below.
+            # anyway. Non-file frames (checkpoints, local relations) and
+            # remote schemes (s3/hdfs: a URI path that happens to exist
+            # locally names a different file) keep the exact .rdd probe.
             import os as _os
             from urllib.parse import urlparse
 
-            try:
-                total = sum(
-                    _os.path.getsize(urlparse(f).path or f) for f in files
-                )
-            except (OSError, ValueError):
-                # non-local scheme (s3/hdfs) — fall through to the probe
-                total = None
+            urls = [urlparse(f) for f in files]
+            total = None
+            if all(u.scheme in ("", "file") for u in urls):
+                try:
+                    total = sum(_os.path.getsize(u.path) for u in urls)
+                except (OSError, ValueError):
+                    pass  # unreadable local path: fall through to the probe
             if total is not None:
                 if total >= target * (4 << 20):
                     return df

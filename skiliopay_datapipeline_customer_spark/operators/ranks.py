@@ -1,9 +1,10 @@
 """Scale-safe exact global ranking and quantile bucketing.
 
-The parity-exact forms (`functions.churn_features.quantile_bucket`,
-`queries.windows.rfm_quintiles`) use `row_number`/`ntile` over a global
-`Window.orderBy(...)` with no partitioning — Spark funnels the whole table
-through ONE task. That replicates the reference's pandas semantics
+The parity-exact forms (`functions.churn_features.quantile_bucket_parity`
+and `queries.windows.rfm_quintiles_parity`, both tests-only) use
+`row_number`/`ntile` over a global `Window.orderBy(...)` with no
+partitioning — Spark funnels the whole table through ONE task. That
+replicates the reference's pandas semantics
 (src/processing/feature_engineering.py:89-98 ranks the full frame) and is
 fine at fixture scale, but it is the first thing that dies at 100 TB.
 
@@ -555,6 +556,33 @@ def pack_by_token_budget(
     return cum.withColumn(pack_col, pack).drop(cs)
 
 
+def _qcut_fraction(k: int, q: int) -> float:
+    """pandas' k-th qcut fraction as numpy receives it: ``linspace(0, 1,
+    q + 1)[k]``, i.e. ``k * (1/q)``, round-tripped through percent
+    (``Series.quantile`` hands ``qs * 100`` to ``np.percentile``, which
+    divides by 100). For q = 3, k = 1 that is 0.33333333333333326."""
+    return k * (1.0 / q) * 100.0 / 100.0
+
+
+def _qcut_edge(n1, eq, k: int, q: int):
+    """pandas' k-th qcut edge over the sorted ranks 1..n as a double Column,
+    for the in-plan effective q ``eq`` (2..q; null when ``eq <= k``);
+    ``n1`` is n - 1 as a double. Replays numpy's linear interpolation:
+    virtual index ``v = n1 * frac``, ``i = floor(v)``, ``g = v - i``, then
+    numpy's ``_lerp`` between ranks i+1 and i+2, which takes the upper form
+    when ``g >= 0.5``. Same IEEE operations in the same order, so the same
+    double."""
+    frac = None
+    for e in range(k + 1, q + 1):
+        frac = (F.when if frac is None else frac.when)(
+            eq == e, F.lit(_qcut_fraction(k, e))
+        )
+    v = n1 * frac
+    i = F.floor(v)
+    g = v - i
+    return F.when(g >= 0.5, (i + 2) - (F.lit(1.0) - g)).otherwise((i + 1) + g)
+
+
 def quantile_buckets_distributed(
     df: DataFrame,
     specs: list[tuple],
@@ -562,23 +590,28 @@ def quantile_buckets_distributed(
     tiebreak: str = "user_id",
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Scale-safe twin of `quantile_bucket` (rank+qcut semantics,
-    feature_engineering.py:89-98) for several columns at once. ``specs``
-    is a list of ``(col, labels, ascending, out)``; ``out`` None means
-    ``f"{col}_q"``. Each spec buckets ``col`` of the INPUT frame, ordered
-    by ``col`` (asc or desc) then ``tiebreak`` (asc).
+    """The package's one rank+qcut bucketing (feature_engineering.py:89-98),
+    for several columns at once. ``specs`` is a list of
+    ``(col, labels, ascending, out)``; ``out`` None means ``f"{col}_q"``.
+    Each spec buckets ``col`` of the INPUT frame, ordered by ``col`` (asc
+    or desc) then ``tiebreak`` (asc).
 
     Pass 1 computes every spec's exact global rank in one :func:`_ranked`
     pass; pass 2 buckets each rank against the linear-interpolation
-    quantile edges of ranks 1..n,
+    quantile edges of ranks 1..n (right-closed, k = 1 .. q-1),
 
-        edge_k = 1 + (n - 1) * (k / q),   k = 1 .. q-1   (right-closed)
+        edge_k = 1 + (n - 1) * (k / q)
 
-    — the same edges pandas' ``Series(1..n).quantile(linspace(0,1,q+1))``
-    interpolates. Edges are scalar IEEE expressions, so an ANSI-SQL oracle
-    evaluating the identical formula is bit-compatible.
+    computed once, on the 1-row stats frame, in IEEE doubles exactly as
+    pandas' ``Series(1..n).quantile(linspace(0,1,q+1))`` does
+    (:func:`_qcut_edge`), so every bucket equals the reference's ``qcut``. For q in {2, 4, 5}
+    every integer rank falls on the same side of these doubles as of the
+    exact rational edge (checked for every n <= 2e6), so an oracle that
+    evaluates the formula in exact decimals agrees. For q = 3 (also a
+    q = 5 column with 3 distinct values) pandas lands just below the
+    integer edge whenever n ≡ 1 (mod 3), and so do we.
 
-    Keeps `quantile_bucket`'s degenerate-cardinality guard: fewer than 2
+    Keeps the reference's degenerate-cardinality guard: fewer than 2
     distinct values → constant fill label; q clamps to the distinct count.
 
     One action at construction (the shared boundary sample) and one to
@@ -604,24 +637,30 @@ def quantile_buckets_distributed(
         )
         for c, _, asc, _ in specs
     ]
-    # 1-row stats frame, joined lazily — no separate driver job
+    # 1-row stats frame, joined lazily — no separate driver job. It also
+    # holds every spec's q-1 edges, computed once here instead of per row.
+    # Effective q = min(q, distinct count): an edge with k >= eq is null,
+    # and its term below never fires (low-cardinality columns).
     stats = df.agg(
         F.count(F.lit(1)).alias(n),
         *[F.countDistinct(c).alias(u) for (c, *_), u in zip(specs, us)],
     )
-    ranked = _ranked(df, norms, ranks, num_partitions).crossJoin(F.broadcast(stats))
     n1 = (F.col(n) - F.lit(1)).cast("double")
+    edges = [[_fresh(taken, "_edge") for _ in range(1, q)] for _ in specs]
+    stats = stats.select(
+        "*",
+        *[
+            _qcut_edge(n1, F.least(F.lit(q), F.col(u)), k, q).alias(e)
+            for u, names in zip(us, edges)
+            for k, e in enumerate(names, 1)
+        ],
+    )
+    ranked = _ranked(df, norms, ranks, num_partitions).crossJoin(F.broadcast(stats))
 
-    def bucket(rank: str, u: str, labels: list, ascending: bool):
-        # effective q = min(q, distinct count), evaluated in-plan; the k-th
-        # edge term only fires while k < eq, so extra CASE terms vanish for
-        # low-cardinality columns. Edge arithmetic (1.0 + (n-1) * (k/eq),
-        # doubles) matches the oracle's literal form bit-for-bit.
-        eq = F.least(F.lit(q), F.col(u)).cast("double")
+    def bucket(rank: str, u: str, names: list, labels: list, ascending: bool):
         b = F.lit(1)
-        for k in range(1, q):
-            edge = F.lit(1.0) + n1 * (F.lit(float(k)) / eq)
-            b = b + ((F.lit(k) < F.col(u)) & (F.col(rank) > edge)).cast("int")
+        for k, e in enumerate(names, 1):
+            b = b + ((F.lit(k) < F.col(u)) & (F.col(rank) > F.col(e))).cast("int")
         # element_at(full labels, b) == element_at(labels[:eq], b) because
         # b <= eq and the slice is a prefix
         label_arr = F.array(*[F.lit(x) for x in labels])
@@ -630,10 +669,10 @@ def quantile_buckets_distributed(
 
     return ranked.withColumns(
         {
-            out: bucket(rank, u, labels, asc)
-            for (_, labels, asc, out), rank, u in zip(specs, ranks, us)
+            out: bucket(rank, u, names, labels, asc)
+            for (_, labels, asc, out), rank, u, names in zip(specs, ranks, us, edges)
         }
-    ).drop(*ranks, *us, n)
+    ).drop(*ranks, *us, n, *itertools.chain.from_iterable(edges))
 
 
 def quantile_bucket_distributed(

@@ -284,6 +284,46 @@ def test_fan_out_auto_mode_skips_non_scan_plans(spark, sf_dir):
     )
 
 
+def test_fan_out_auto_mode_skips_set_operator_plans(spark):
+    """DISTINCT, EXCEPT and INTERSECT plan as Distinct/Except/Intersect
+    nodes in the analyzed plan (rewritten into aggregates and joins only
+    by the optimizer); they shuffle all the same, so auto-mode fan_out
+    must return them untouched instead of probing them."""
+    from skiliopay_datapipeline_customer_spark.io import fan_out
+
+    spark.range(0, 50, 1, 1).createOrReplaceTempView("fan_out_ids")
+    distinct = spark.sql("SELECT DISTINCT id % 7 AS k FROM fan_out_ids")
+    assert fan_out(distinct) is distinct
+    ids = spark.range(0, 50, 1, 1)
+    subtracted = ids.subtract(spark.range(0, 10, 1, 1))
+    assert fan_out(subtracted) is subtracted
+    both = ids.intersect(spark.range(0, 10, 1, 1))
+    assert fan_out(both) is both
+
+
+def test_fan_out_remote_scheme_uses_partition_probe(spark, tmp_path, monkeypatch):
+    """A remote URI (hdfs://, s3a://) names a file on another file system,
+    even when its path also exists locally: the local size estimate must
+    not be used, and the exact .rdd probe decides. Planted: a one-task
+    frame whose hdfs:// input path is a large local sparse file, so the
+    estimate would call it wide enough and skip the rebalance."""
+    from skiliopay_datapipeline_customer_spark.io import fan_out
+
+    target = spark.sparkContext.defaultParallelism
+    if target < 2:
+        pytest.skip("needs a session with at least 2 cores")
+    big = tmp_path / "part-0.parquet"
+    with open(big, "wb") as f:
+        f.truncate(target * (4 << 20) + 1)
+    narrow = spark.range(0, 100, 1, 1)
+    monkeypatch.setattr(
+        narrow, "inputFiles", lambda: [f"hdfs://namenode:8020{big}"]
+    )
+    out = fan_out(narrow)
+    assert out is not narrow
+    assert out.rdd.getNumPartitions() == target
+
+
 def test_order_trend_pandas_constant_date_yields_null(spark, tmp_path):
     """A customer whose n>=3 orders all share one date has var(x)==0: the
     slope is NULL (regr_slope semantics), not 0.0 — the driver corpora never

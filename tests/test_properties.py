@@ -9,12 +9,12 @@ import math
 
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from skiliopay_datapipeline_customer_spark.functions.churn_features import (
-    quantile_bucket,
+from skiliopay_datapipeline_customer_spark.operators.ranks import (
+    quantile_bucket_distributed,
 )
 
 VALUES = st.lists(
@@ -47,6 +47,9 @@ def _pandas_quantile_bucket(series: pd.Series, labels, ascending: bool):
     [([1, 2, 3, 4, 5], True), ([5, 4, 3, 2, 1], False)],
 )
 @given(values=VALUES)
+# 3 distinct values, n = 4: pandas' qcut edge for rank 2 is
+# 1.9999999999999998, not 2.0, so rank 2 lands in bucket 2
+@example(values=[0.0, 0.0, 1.0, 2.0])
 @SETTINGS
 def test_quantile_bucket_matches_pandas(spark, labels, ascending, values):
     # user_id encodes original row order → our tiebreak == pandas row position
@@ -54,7 +57,7 @@ def test_quantile_bucket_matches_pandas(spark, labels, ascending, values):
     sdf = spark.createDataFrame(pdf)
     got = {
         r["user_id"]: r["q"]
-        for r in quantile_bucket(
+        for r in quantile_bucket_distributed(
             sdf, "v", labels, ascending=ascending, out="q"
         ).collect()
     }

@@ -563,22 +563,18 @@ def test_rolling_dau_sketch_tier_tracks_exact(spark, sf_dir):
 
 
 def test_registry_rotation_invariants():
-    """The rotation policy only works if its inputs stay coherent: every
-    _PRIORITY/_FORCE name must be a registered query (a stale name would
-    silently misorder the driver's verification window), _PRIORITY must be
-    duplicate-free (a later duplicate overwrites the intended slot), and
-    the needs-a-row pool must still fill the 50-slot window."""
+    """The verification order is derived from the CORRECTNESS records
+    alone: on the repo's real history it is a permutation of the registry,
+    sorted by (last green round, or -1 if none; declaration index)."""
     from skiliopay_datapipeline_customer_spark import queries as q
 
     q.load_all()
-    assert len(q._PRIORITY) == len(set(q._PRIORITY)), "duplicate in _PRIORITY"
-    unknown_p = [n for n in q._PRIORITY if n not in q.QUERIES]
-    unknown_f = [n for n in q._FORCE if n not in q.QUERIES]
-    assert not unknown_p, f"stale _PRIORITY names: {unknown_p}"
-    assert not unknown_f, f"stale _FORCE names: {unknown_f}"
     order = q._rotated(list(q.QUERIES))
     assert len(order) == len(q.QUERIES)
-    assert len(set(order)) == len(order)
+    assert set(order) == set(q.QUERIES)
+    last = q._last_verified()
+    idx = {n: i for i, n in enumerate(q.QUERIES)}
+    assert order == sorted(q.QUERIES, key=lambda n: (last.get(n, -1), idx[n]))
 
 
 def test_plan_digest_reports_shapes_and_smells(spark, sf_dir):
@@ -759,7 +755,9 @@ def test_rotation_reacts_to_correctness_history(tmp_path, monkeypatch):
     q.load_all()
     monkeypatch.setattr(artifacts, "REPO_ROOT", str(tmp_path))
     base = q._rotated(list(q.QUERIES))
-    a, b, c = [n for n in base if n not in q._FORCE][:3]
+    # no history: nothing is verified, so declaration order is the order
+    assert base == list(q.QUERIES)
+    a, b, c = base[:3]
 
     # green oracle row for `a` → drops behind the never-verified pool
     (tmp_path / "CORRECTNESS_r01.json").write_text(
@@ -785,9 +783,8 @@ def test_rotation_reacts_to_correctness_history(tmp_path, monkeypatch):
     assert order.index(a) < order.index(c)
 
 
-def _needs_row(q, name: str, last: dict[str, int]) -> bool:
-    lv = last.get(name, -1)
-    return lv < 0 or (name in q._FORCE and lv <= q._FORCE[name])
+def _needs_row(name: str, last: dict[str, int]) -> bool:
+    return last.get(name, -1) < 0
 
 
 def test_rotation_hands_off_remaining_pool_to_next_window(
@@ -834,7 +831,7 @@ def test_rotation_hands_off_remaining_pool_to_next_window(
     )
     last = q._last_verified()
     remaining = [
-        n for n in q.QUERIES if n in oracles and _needs_row(q, n, last)
+        n for n in q.QUERIES if n in oracles and _needs_row(n, last)
     ]
     # the pool must have shrunk below one window — the whole point of the
     # rotation is that the sweep FINISHES
@@ -848,8 +845,7 @@ def test_rotation_hands_off_remaining_pool_to_next_window(
     # pin today's expectation: the r07 upgrades ride along with the remainder
     for name in ("minhash_lsh_candidates", "lsh_dup_pairs_fast",
                  "order_trend_pandas"):
-        lv = q._last_verified().get(name, -1)
-        if lv < 0 or (name in q._FORCE and lv <= q._FORCE[name]):
+        if _needs_row(name, q._last_verified()):
             assert name in next_window
 
 
