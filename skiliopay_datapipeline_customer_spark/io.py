@@ -12,8 +12,11 @@ applies — nothing here is local-mode-specific.
 from __future__ import annotations
 
 import os
+import stat
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -28,9 +31,56 @@ TABLES = (
     "embeddings",
 )
 
+# absolute path -> (file identity, its inferred schema); one entry per path,
+# replaced when the file changes: see ``_read_parquet``
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+# the session confs that change how a parquet footer maps to Spark types
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without a schema-inference job on a
+    file it has read before.
+
+    A schema-less read runs one Spark job over the footers. For a regular
+    local file the inferred schema is memoized with the file's identity
+    (mtime in ns, size) and the session's schema-conversion confs, and a
+    later read with the same identity passes it with ``.schema(...)``: a
+    rewritten file no longer matches and is inferred again. Directories
+    (whose files can change without touching the directory's own stat)
+    and remote URIs are never memoized.
+    """
+    try:
+        st = None if urlparse(path).scheme else os.stat(path)
+    except OSError:
+        st = None  # a missing path: Spark raises its own error
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = os.path.abspath(path)
+    ident = (
+        st.st_mtime_ns,
+        st.st_size,
+        tuple(spark.conf.get(c) for c in _SCHEMA_CONFS),
+    )
+    known = _SCHEMAS.get(key)
+    if known is not None and known[0] == ident:
+        return spark.read.schema(known[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (ident, df.schema)
+    return df
+
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy scan of one test table; Catalyst prunes columns/predicates.
+
+    The table's file schema is inferred once per file version and then
+    passed to the reader (``_read_parquet``), so a repeated call builds
+    its DataFrame without a Spark job.
 
     events.ts is parquet TIMESTAMP(NANOS): with
     spark.sql.legacy.parquet.nanosAsLong it scans as long nanos, converted
@@ -41,7 +91,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # correctness depends on (both runtime-settable, idempotent):
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         from pyspark.sql import functions as F
 
@@ -57,6 +107,15 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
         df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz_cols})
     return df
+
+
+def read_written(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
+    """Read back the parquet layer just written from ``df`` at ``path``,
+    with ``df``'s schema: the reader starts no schema-inference job, and a
+    partition column keeps its written type (partition discovery would
+    re-type a string ``"01"`` as int 1, or a ``yyyy-MM-dd`` string as a
+    date). As with any partitioned read, partition columns come last."""
+    return spark.read.schema(df.schema).parquet(path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -9,8 +9,9 @@ precomputed stratified fold — fold assignment comes from split.py so folds
 are reproducible, unlike CrossValidator's internal random folds.
 
 Scale notes: tree training is Spark ML's distributed histogram algorithm;
-evaluation is one pass per metric family. Nothing collects more than scalar
-metrics to the driver.
+evaluation is one confusion count for the multiclass metrics plus the
+ROC-AUC pass. Nothing collects more than scalar metrics (or the few rows of
+the confusion count) to the driver.
 """
 
 from __future__ import annotations
@@ -20,10 +21,7 @@ from pyspark.ml.classification import (
     LogisticRegression,
     RandomForestClassifier,
 )
-from pyspark.ml.evaluation import (
-    BinaryClassificationEvaluator,
-    MulticlassClassificationEvaluator,
-)
+from pyspark.ml.evaluation import BinaryClassificationEvaluator
 from pyspark.ml.feature import VectorAssembler
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -86,19 +84,57 @@ def train_classifier(
     return model, transform
 
 
+def _multiclass_metrics(predictions: DataFrame, label_col: str) -> dict[str, float]:
+    """Accuracy and weighted precision/recall/F1 from one confusion count,
+    a ``groupBy(label, prediction).count()`` of a few rows, with Spark
+    ``MulticlassMetrics``' formulas in its evaluation order: per label
+    (labels from the label column only) ``metric · count / n`` summed,
+    precision 0 for a label never predicted, F1 = ``2·p·r/(p+r)``. On a
+    binary label each sum has two terms, so the values equal
+    ``MulticlassClassificationEvaluator``'s bit for bit; with more labels
+    the summation order may differ in the last bits."""
+    label_n: dict[float, float] = {}
+    tp: dict[float, float] = {}
+    fp: dict[float, float] = {}
+    for label, pred, count in predictions.groupBy(
+        F.col(label_col).cast("double"), F.col("prediction")
+    ).count().collect():
+        label_n[label] = label_n.get(label, 0.0) + count
+        if label == pred:
+            tp[label] = tp.get(label, 0.0) + count
+        else:
+            fp[pred] = fp.get(pred, 0.0) + count
+    n = sum(label_n.values(), 0.0)
+
+    def precision(c: float) -> float:
+        t, f = tp.get(c, 0.0), fp.get(c, 0.0)
+        return 0.0 if t + f == 0 else t / (t + f)
+
+    def recall(c: float) -> float:
+        return tp.get(c, 0.0) / label_n[c]
+
+    def f1(c: float) -> float:
+        p, r = precision(c), recall(c)
+        return 0.0 if p + r == 0 else 2.0 * p * r / (p + r)
+
+    def weighted(metric) -> float:
+        return sum((metric(c) * w / n for c, w in sorted(label_n.items())), 0.0)
+
+    return {
+        "accuracy": sum(tp.values(), 0.0) / n if n else float("nan"),
+        "precision": weighted(precision),
+        "recall": weighted(recall),
+        "f1": weighted(f1),
+    }
+
+
 def evaluate_classifier(predictions: DataFrame, label_col: str) -> dict[str, float]:
     """M7: accuracy, weighted precision/recall/F1, ROC-AUC — the reference's
-    metric set (model_trainer.py:360-374)."""
-    out = {}
-    for metric, key in [
-        ("accuracy", "accuracy"),
-        ("weightedPrecision", "precision"),
-        ("weightedRecall", "recall"),
-        ("f1", "f1"),
-    ]:
-        out[key] = MulticlassClassificationEvaluator(
-            labelCol=label_col, predictionCol="prediction", metricName=metric
-        ).evaluate(predictions)
+    metric set (model_trainer.py:360-374). The first four come from one
+    confusion count (``_multiclass_metrics``); ROC-AUC stays on
+    ``BinaryClassificationEvaluator``, whose score binning differs at
+    scale."""
+    out = _multiclass_metrics(predictions, label_col)
     out["roc_auc"] = BinaryClassificationEvaluator(
         labelCol=label_col, rawPredictionCol="rawPrediction", metricName="areaUnderROC"
     ).evaluate(predictions)

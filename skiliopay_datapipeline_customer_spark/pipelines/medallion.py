@@ -24,6 +24,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import read_written
+from ..parallel import run_all
 from ..plans.quality import QualityReport, run_quality_checks
 
 
@@ -145,7 +147,16 @@ class MedallionPipeline:
     def run(
         self, spark: SparkSession, source: DataFrame, source_name: str = "memory"
     ) -> dict:
-        """Returns {layer: path, quality: QualityReport, rows: {layer: n}}."""
+        """Returns {layer: path, quality: QualityReport, rows: {layer: n}}.
+
+        Bronze is written, then read back with its written schema. The
+        quality gate's jobs and silver's ``clean_frame`` statistics run
+        concurrently (``parallel.run_all``): both read only bronze. Silver
+        is written only after the gate passes; a failed gate raises its
+        ``ValueError`` whatever the statistics did, and leaves no job
+        running. Silver is read back with its written schema too, so no
+        layer read starts a schema-inference job and a partitioned layer's
+        partition column keeps its written type."""
         result: dict = {"rows": {}}
         log = self.stage_logger
 
@@ -153,7 +164,7 @@ class MedallionPipeline:
             log.stage_start("bronze")
         bronze = ingest_metadata(source, source_name)
         result["bronze"], result["rows"]["bronze"] = self._write(bronze, "bronze")
-        bronze = spark.read.parquet(result["bronze"])
+        bronze = read_written(spark, bronze, result["bronze"])
         if log:
             log.stage_complete(
                 "bronze",
@@ -164,7 +175,23 @@ class MedallionPipeline:
 
         report: QualityReport | None = None
         if self.quality_kwargs is not None:
-            report = run_quality_checks(bronze, **self.quality_kwargs)
+            # silver's statistics jobs (clean_frame's actions) need only
+            # bronze, so they overlap the gate's jobs; nothing of silver is
+            # written until the gate has passed, and a failed gate raises
+            # its own error whatever the statistics jobs did
+            def silver_frame():
+                try:
+                    return clean_frame(bronze, **self.clean_kwargs), None
+                except Exception as e:  # noqa: BLE001 — re-raised once the gate passes
+                    return None, e
+
+            report, (silver, silver_error) = run_all(
+                spark,
+                [
+                    lambda: run_quality_checks(bronze, **self.quality_kwargs),
+                    silver_frame,
+                ],
+            )
             result["quality"] = report
             if not report.passed:  # V10 gate: fail the run like the DAG does
                 if log:
@@ -179,9 +206,12 @@ class MedallionPipeline:
 
         if log:
             log.stage_start("silver", input_rows=result["rows"]["bronze"])
-        silver = clean_frame(bronze, **self.clean_kwargs)
+        if report is None:
+            silver = clean_frame(bronze, **self.clean_kwargs)
+        elif silver_error is not None:
+            raise silver_error
         result["silver"], result["rows"]["silver"] = self._write(silver, "silver")
-        silver = spark.read.parquet(result["silver"])
+        silver = read_written(spark, silver, result["silver"])
         if log:
             log.stage_complete(
                 "silver",

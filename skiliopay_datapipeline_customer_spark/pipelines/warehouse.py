@@ -25,7 +25,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import table
+from ..io import read_written, table
+from ..parallel import run_all
 
 
 def build_dim_date(spark: SparkSession, start: str, end: str) -> DataFrame:
@@ -99,7 +100,16 @@ def fk_violations(fact: DataFrame, dim: DataFrame, key: str) -> int:
 
 def build_star_schema(spark: SparkSession, sf_dir: str, base_dir: str) -> dict:
     """Materialize dims + facts; facts partitioned by year for pruning.
-    Returns {table: path} plus FK check results."""
+    Returns {table: path} plus FK check results.
+
+    Critical path: the ``dim_date`` bounds job runs first (the dimension's
+    range depends on it); then the four tables are written concurrently,
+    and the two FK counts run concurrently over the tables just written
+    (``parallel.run_all``). A failed write surfaces after its sibling
+    writes have finished. The FK inputs are read back with the schemas the
+    writes used, so no read starts a schema-inference job; the partition
+    column ``year`` keeps its written int type.
+    """
     fact_orders = build_fact_orders(spark, sf_dir)
     bounds = fact_orders.agg(
         F.min("date_key").alias("lo"), F.max("date_key").alias("hi")
@@ -118,25 +128,40 @@ def build_star_schema(spark: SparkSession, sf_dir: str, base_dir: str) -> dict:
     dim_user = build_dim_user(spark, sf_dir)
     fact_sessions = build_fact_sessions(spark, sf_dir)
 
-    out: dict = {"paths": {}, "fk": {}}
-    for name, df, part in [
-        ("dim_date", dim_date, None),
-        ("dim_user", dim_user, None),
-        ("fact_orders", fact_orders.withColumn("year", (F.col("date_key") / 10000).cast("int")), ["year"]),
-        ("fact_sessions", fact_sessions, None),
-    ]:
-        path = os.path.join(base_dir, name)
+    tables = {
+        "dim_date": (dim_date, None),
+        "dim_user": (dim_user, None),
+        "fact_orders": (
+            fact_orders.withColumn("year", (F.col("date_key") / 10000).cast("int")),
+            ["year"],
+        ),
+        "fact_sessions": (fact_sessions, None),
+    }
+    out: dict = {
+        "paths": {name: os.path.join(base_dir, name) for name in tables},
+        "fk": {},
+    }
+
+    def write(name: str):
+        df, part = tables[name]
         writer = df.write.mode("overwrite")
         if part:
             writer = writer.partitionBy(*part)
-        writer.parquet(path)
-        out["paths"][name] = path
+        return lambda: writer.parquet(out["paths"][name])
 
-    fo = spark.read.parquet(out["paths"]["fact_orders"])
-    dd = spark.read.parquet(out["paths"]["dim_date"])
-    du = spark.read.parquet(out["paths"]["dim_user"])
-    out["fk"]["fact_orders.user_key"] = fk_violations(fo, du, "user_key")
-    out["fk"]["fact_orders.date_key"] = fk_violations(fo, dd, "date_key")
+    run_all(spark, [write(name) for name in tables])
+
+    fo, dd, du = (
+        read_written(spark, tables[name][0], out["paths"][name])
+        for name in ("fact_orders", "dim_date", "dim_user")
+    )
+    out["fk"]["fact_orders.user_key"], out["fk"]["fact_orders.date_key"] = run_all(
+        spark,
+        [
+            lambda: fk_violations(fo, du, "user_key"),
+            lambda: fk_violations(fo, dd, "date_key"),
+        ],
+    )
     return out
 
 

@@ -157,7 +157,22 @@ def upsert_snapshot(
     placement-dependent. ``tiebreak_cols`` defaults to every remaining
     column in name order — deterministic snapshots with zero configuration;
     pass an explicit list (e.g. an ingest sequence column) when one exists.
+
+    The closure keeps the schema of the version it last committed and
+    reads that version back with it, so a micro-batch starts no
+    schema-inference job. When the newest committed version is not the
+    one it wrote (a restart, a replay, another writer), it infers.
     """
+
+    # (version dir, its _SUCCESS mtime) and schema of the version this
+    # closure last committed
+    committed: dict = {}
+
+    def marker(vdir: str) -> tuple | None:
+        try:
+            return vdir, os.stat(os.path.join(vdir, "_SUCCESS")).st_mtime_ns
+        except OSError:  # no marker: the version is not committed
+            return None
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -166,11 +181,14 @@ def upsert_snapshot(
         # (listing + _SUCCESS stats against object storage are not free on
         # a hot foreachBatch path)
         vs = _versions(target_dir)
-        current = (
-            spark.read.parquet(os.path.join(target_dir, f"v={vs[-1]}"))
-            if vs
-            else None
-        )
+        current = None
+        if vs:
+            vdir = os.path.join(target_dir, f"v={vs[-1]}")
+            schema = committed.get(marker(vdir))
+            # the version this closure wrote: its schema is known, so the
+            # read starts no schema-inference job
+            reader = spark.read if schema is None else spark.read.schema(schema)
+            current = reader.parquet(vdir)
         merged = (
             batch_df
             if current is None
@@ -190,9 +208,10 @@ def upsert_snapshot(
             .drop("_rn")
         )
         next_v = vs[-1] + 1 if vs else 0
-        deduped.write.mode("overwrite").parquet(
-            os.path.join(target_dir, f"v={next_v}")
-        )
+        next_dir = os.path.join(target_dir, f"v={next_v}")
+        deduped.write.mode("overwrite").parquet(next_dir)
+        committed.clear()
+        committed[marker(next_dir)] = deduped.schema
 
     return merge
 

@@ -198,3 +198,66 @@ def test_confusion_matrix_cells_agree_with_metrics(spark, sf_dir):
     assert abs(cm["precision"] - 30 / 35) < 1e-12
     assert abs(cm["recall"] - 30 / 40) < 1e-12
     assert cm["n"] == 100
+
+
+def _evaluator_metrics(predictions, label_col):
+    from pyspark.ml.evaluation import MulticlassClassificationEvaluator
+
+    return {
+        key: MulticlassClassificationEvaluator(
+            labelCol=label_col, predictionCol="prediction", metricName=metric
+        ).evaluate(predictions)
+        for metric, key in [
+            ("accuracy", "accuracy"),
+            ("weightedPrecision", "precision"),
+            ("weightedRecall", "recall"),
+            ("f1", "f1"),
+        ]
+    }
+
+
+def test_one_pass_metrics_equal_the_multiclass_evaluator(spark, sf_dir):
+    """The confusion-count metrics equal MulticlassClassificationEvaluator's:
+    bit for bit on binary labels (the trained model's test split and
+    hand-made confusions, one with a label never predicted), and within
+    1e-12 on three classes where one label is never predicted and one
+    prediction never labelled (summation order may differ)."""
+    from skiliopay_datapipeline_customer_spark.ml.pipeline import (
+        _multiclass_metrics,
+    )
+
+    ds = stratified_split(
+        churn_dataset(spark, sf_dir), LABEL_COL, key_col="c_custkey"
+    ).cache()
+    _model, transform = train_classifier(
+        ds.filter(F.col("_split") == 0), FEATURE_COLS, LABEL_COL, maxIter=3
+    )
+    scored = transform(ds.filter(F.col("_split") == 2))
+    assert _multiclass_metrics(scored, LABEL_COL) == _evaluator_metrics(
+        scored, LABEL_COL
+    )
+    ds.unpersist()
+
+    def frame(cells):
+        rows = [(lab, pred) for lab, pred, n in cells for _ in range(n)]
+        return spark.createDataFrame(rows, "label int, prediction double")
+
+    for cells in [
+        [(0, 0.0, 37), (0, 1.0, 5), (1, 0.0, 11), (1, 1.0, 23)],
+        [(0, 0.0, 3), (1, 0.0, 7)],  # label 1 never predicted
+        [(0, 1.0, 4), (1, 1.0, 9), (1, 0.0, 2)],
+    ]:
+        df = frame(cells)
+        assert _multiclass_metrics(df, "label") == _evaluator_metrics(df, "label")
+
+    three = frame(
+        [
+            (0, 0.0, 13), (0, 1.0, 4), (0, 3.0, 2),  # 3.0 is never a label
+            (1, 1.0, 17), (1, 0.0, 6),
+            (2, 0.0, 5), (2, 1.0, 3),  # label 2 is never predicted
+        ]
+    )
+    got, want = _multiclass_metrics(three, "label"), _evaluator_metrics(three, "label")
+    assert got.keys() == want.keys()
+    for key in want:
+        assert abs(got[key] - want[key]) <= 1e-12, key

@@ -199,6 +199,28 @@ def test_star_schema_build_and_fk(spark, sf_dir, tmp_path):
     assert "year" in fo.columns
 
 
+def test_star_schema_fk_counts_an_orphan_user_key(spark, sf_dir, tmp_path):
+    """One order whose customer is missing from the customer table is one
+    orphan ``user_key``; its date is in range, so no orphan ``date_key``."""
+    import os
+
+    from skiliopay_datapipeline_customer_spark.pipelines.warehouse import (
+        build_star_schema,
+    )
+
+    src = tmp_path / "sf"
+    src.mkdir()
+    for name in ("customer", "nation", "region", "events"):
+        os.symlink(os.path.join(sf_dir, f"{name}.parquet"), src / f"{name}.parquet")
+    orders = table(spark, sf_dir, "orders")
+    orphan = orders.limit(1).withColumn(
+        "o_orderkey", F.lit(10**12)
+    ).withColumn("o_custkey", F.lit(10**12))
+    orders.unionByName(orphan).write.parquet(str(src / "orders.parquet"))
+    result = build_star_schema(spark, str(src), str(tmp_path / "wh"))
+    assert result["fk"] == {"fact_orders.user_key": 1, "fact_orders.date_key": 0}
+
+
 def test_incremental_silver_processes_only_new_files(spark, sf_dir, tmp_path):
     import datetime
 

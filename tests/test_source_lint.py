@@ -57,3 +57,56 @@ def test_no_literal_lists_registered_queries():
                 rel = path.relative_to(PKG_DIR.parent)
                 found.append(f"{rel}:{node.lineno} names {len(named)} queries")
     assert not found, "hand-kept query lists:\n" + "\n".join(found)
+
+
+_THREAD_MODULES = ("threading", "concurrent", "_thread")
+
+
+def _imported_modules(tree) -> list[tuple[int, str]]:
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            out += [(node.lineno, a.name) for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.module and not node.level:
+            out.append((node.lineno, node.module))
+    return out
+
+
+def test_threads_only_in_the_parallel_helper():
+    """``parallel.py`` owns the package's only thread pool: no other module
+    imports ``threading``, ``concurrent.futures`` or ``_thread``. A thread
+    started elsewhere would run its Spark jobs without the caller's job
+    group and local properties."""
+    found = []
+    for path in sorted(PKG_DIR.rglob("*.py")):
+        if path == PKG_DIR / "parallel.py":
+            continue
+        tree = ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
+        for lineno, mod in _imported_modules(tree):
+            if mod.split(".")[0] in _THREAD_MODULES:
+                found.append(f"{path.relative_to(PKG_DIR.parent)}:{lineno} {mod}")
+    assert not found, "thread use outside parallel.py:\n" + "\n".join(found)
+
+
+def test_parallel_helper_wraps_every_target():
+    """Every callable ``parallel.py`` hands to a thread goes through
+    ``inheritable_thread_target(...)`` at the submit call itself; without
+    it, pool jobs silently lose the caller's job group. No ``Thread`` or
+    ``map`` entry point exists beside ``submit``."""
+    tree = ast.parse((PKG_DIR / "parallel.py").read_text(encoding="utf-8"))
+    submits = 0
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        name = getattr(node.func, "attr", getattr(node.func, "id", None))
+        assert name not in ("Thread", "map", "start_new_thread"), node.lineno
+        if name != "submit":
+            continue
+        submits += 1
+        (arg,) = node.args
+        wrapper = arg.func if isinstance(arg, ast.Call) else None
+        assert (
+            isinstance(wrapper, ast.Call)
+            and getattr(wrapper.func, "id", None) == "inheritable_thread_target"
+        ), f"parallel.py:{node.lineno} submits an unwrapped target"
+    assert submits >= 1

@@ -675,3 +675,34 @@ def test_progress_recorder_captures_batch_metrics(spark, events_dir, tmp_path):
         events_dir
     ).count()
     assert any(r["event"] == "terminated" for r in recs)
+
+
+def test_upsert_reads_its_own_version_without_schema_inference(
+    spark, tmp_path, group_jobs
+):
+    """The merge reads back the version it committed last with that
+    version's schema (no footer job); a fresh closure over the same target,
+    as after a restart, infers once and merges the same way."""
+
+    def footer_jobs(fn):
+        return group_jobs(fn)[2]
+
+    schema = "k long, seq long, val string"
+    target = str(tmp_path / "snap")
+    merge = upsert_snapshot(target, key_cols=["k"], order_col="seq")
+    merge(spark.createDataFrame([(1, 1, "a"), (2, 1, "b")], schema), 0)
+    assert not footer_jobs(
+        lambda: merge(spark.createDataFrame([(1, 2, "c")], schema), 1)
+    )
+    restarted = upsert_snapshot(target, key_cols=["k"], order_col="seq")
+    assert len(footer_jobs(
+        lambda: restarted(spark.createDataFrame([(2, 3, "d")], schema), 2)
+    )) == 1
+    rows = sorted(tuple(r) for r in latest_snapshot(spark, target).collect())
+    assert rows == [(1, 2, "c"), (2, 3, "d")]
+    # the first closure's last version is no longer the newest: it infers
+    assert len(footer_jobs(
+        lambda: merge(spark.createDataFrame([(3, 1, "e")], schema), 3)
+    )) == 1
+    rows = sorted(tuple(r) for r in latest_snapshot(spark, target).collect())
+    assert rows == [(1, 2, "c"), (2, 3, "d"), (3, 1, "e")]
