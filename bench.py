@@ -165,6 +165,8 @@ def main(only: list[str] | None = None, record: str | None = None) -> None:
     except ValueError:
         sf_val = sf
     spark = get_spark(app_name="bench")
+    # the core count the timings were taken on: local[N] runs N tasks
+    cpus = spark.sparkContext.defaultParallelism
     queries = all_queries()
     headline = HEADLINE
     if only:
@@ -316,8 +318,9 @@ def main(only: list[str] | None = None, record: str | None = None) -> None:
         # target SF in a plan-warmed session (codegen/JIT compiled on
         # sf0.001), not a cold JVM
         "plan_warmed": True,
+        "cpus": cpus,
         "machine": {"before": probe_before, "after": machine_probe(spark)},
-        "deltas": _deltas(timings, sf=sf_val),
+        "deltas": _deltas(timings, sf=sf_val, cpus=cpus),
     }
     if subset:
         out["subset"] = headline
@@ -408,9 +411,14 @@ def _deltas(
     timings: dict[str, float],
     root: str | None = None,
     sf: float | str | None = None,
+    cpus: int | None = None,
 ) -> dict:
     """Per-query ratio vs the latest recorded BENCH_r{N}.json, so a
     regression in one heavy query can't hide inside a healthy total.
+    With ``sf`` or ``cpus`` given, only a record taken at that scale factor
+    or on that many cores is a base; a record with no core count is
+    refused too, since a 4-core run over a 32-core record reads as a
+    speedup or slowdown of the host, not the code.
     ``flagged`` lists queries whose ratio exceeds 1.5× — outside the
     documented ~1.5× machine variance band (Firecracker VM; never conclude
     a regression from ONE run) — among queries slow enough to measure
@@ -433,6 +441,7 @@ def _deltas(
         # ADDING a headline query later doesn't orphan the whole history.
         require=lambda d: isinstance(d.get("queries"), dict)
         and (sf is None or d.get("sf") == sf)
+        and (cpus is None or d.get("cpus") == cpus)
         and not d.get("subset")
         and d.get("metric") != "headline_queries_subset_time"
         and len(set(d["queries"]) & set(HEADLINE))

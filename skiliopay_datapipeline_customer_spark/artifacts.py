@@ -22,8 +22,10 @@ def round_artifacts(
 ) -> Iterator[tuple[int, dict]]:
     """Yield (round, payload) for every parseable ``{prefix}_r{N}.json``
     under ``root`` (repo root by default). The driver wraps our JSON line
-    under a "parsed" envelope for BENCH records — unwrap it. Corrupt or
-    unreadable files are skipped, matching both original call sites."""
+    under a "parsed" envelope for BENCH records — unwrap it, keeping the
+    envelope's ``cpus`` (the core count the run had) unless the line
+    carries its own. Corrupt or unreadable files are skipped, matching
+    both original call sites."""
     root = root or REPO_ROOT
     for path in glob.glob(os.path.join(root, f"{prefix}_r*.json")):
         m = re.search(rf"{re.escape(prefix)}_r(\d+)\.json$", path)
@@ -37,7 +39,8 @@ def round_artifacts(
         if not isinstance(data, dict):
             continue
         if isinstance(data.get("parsed"), dict):
-            data = data["parsed"]
+            envelope = {"cpus": data["cpus"]} if "cpus" in data else {}
+            data = {**envelope, **data["parsed"]}
         yield int(m.group(1)), data
 
 

@@ -88,9 +88,11 @@ def rfm_features(df: DataFrame) -> DataFrame:
     score, right-closed category bins (score outside (0,100] → null).
 
     The three quintiles come from ONE `quantile_buckets_distributed` call:
-    one boundary sample action at construction, and every side branch
-    (stats, per-bucket counts) reads this input frame, never another
-    column's ranked output."""
+    one boundary sample action at construction. A frame the sample holds
+    whole (the daily job's ~150 customers) is then bucketed in one
+    projection; a larger one is ranked, with every side branch (stats,
+    per-bucket counts) reading this input frame, never another column's
+    ranked output."""
     from ..operators.ranks import quantile_buckets_distributed
 
     df = quantile_buckets_distributed(

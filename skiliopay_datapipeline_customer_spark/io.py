@@ -118,6 +118,33 @@ def read_written(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     return spark.read.schema(df.schema).parquet(path)
 
 
+def written_rows(spark: SparkSession, path: str) -> int:
+    """Row count of the parquet data under ``path``, summed from the file
+    footers on the driver through the path's Hadoop file system: no Spark
+    job, and the session is left as it was (an ``Observation`` would
+    register the session's non-serializable observation manager, after
+    which any ML model that keeps a training summary fails to ship its
+    tasks). Hidden and metadata files (``.``/``_`` names) are skipped, as
+    Spark's reader skips them."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    files = root.getFileSystem(conf).listFiles(root, True)
+    rows = 0
+    while files.hasNext():
+        status = files.next()
+        if status.getPath().getName().startswith((".", "_")):
+            continue
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf)
+        )
+        try:
+            rows += reader.getRecordCount()
+        finally:
+            reader.close()
+    return rows
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: table(spark, sf_dir, name) for name in TABLES}
 

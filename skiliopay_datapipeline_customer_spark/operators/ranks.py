@@ -40,12 +40,22 @@ i+1), which the lexicographic comparison guarantees for ANY boundary
 set. Boundary quality only affects balance — and because boundaries are
 sampled over ALL order keys (including the unique tiebreak), buckets
 stay balanced even when the leading key is low-cardinality or skewed.
+
+One exception, by design: when the sample comes back shorter than K it
+holds EVERY row, and `quantile_buckets_distributed` takes its exact
+small-input plan — qcut edges computed on the driver from the sample and
+frozen as key tuples, one projection, no rank pass (the daily job's
+~150-customer gold layer, where the rank pipeline was all framework
+overhead). Those edges are exact only for the rows the frame held when
+the sample ran, so that plan is never memoized. Inputs of K rows or more
+take the ranked plan unchanged.
 """
 
 from __future__ import annotations
 
 import functools
 import itertools
+import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -134,7 +144,11 @@ def _cmp_tuples(norm):
 # result, only a less even split. The cache exists to amortize the
 # per-call sample job and schema read: repeated identical rank calls
 # (bench warm runs, a driver re-running a query, iterative sessions) skip
-# straight to the lazy plan.
+# straight to the lazy plan. Only boundaries are stored, never the exact
+# edges of the small-input qcut plan: those depend on the sample holding
+# every row of the frame as it was, so a stale entry WOULD change results.
+# A hit therefore always takes the ranked plan, which is exact for any
+# boundaries; a small input re-samples on every call.
 _BOUNDARY_CACHE: dict = {}
 _BOUNDARY_CACHE_MAX = 256
 
@@ -196,40 +210,54 @@ def _sample_keys(df: DataFrame, norm) -> tuple[DataFrame, list]:
     return keyed.select(*sample), types
 
 
-def _collect_boundaries(df: DataFrame, norms, nparts: int) -> list[tuple[list, list]]:
-    """Boundaries for several order specs (``norms``) over one frame, from
-    ONE deterministic top-K-by-hash sample job over the union of their key
-    columns (TakeOrderedAndProject — per-partition top-K then a driver
-    merge, no full sort). The sample is sorted once per spec under that
-    spec's order, and each spec gets ≤ nparts-1 evenly spaced,
-    deduplicated boundary tuples together with its key types.
-    Model-sized: K = max(1024, 32·nparts) rows of key columns only.
-    Results memoize on (plan semanticHash, every spec, nparts) — see
-    `_BOUNDARY_CACHE`."""
-    cache_key = None
-    try:  # classic PySpark only; Connect lacks _jdf — just skip the memo
-        cache_key = (
+def _sample_size(nparts: int) -> int:
+    """K, the row count of the boundary sample: model-sized, never data-
+    sized. A sample shorter than K holds every row of its frame."""
+    return max(1024, 32 * nparts)
+
+
+def _cache_key(df: DataFrame, norms, nparts: int):
+    """The `_BOUNDARY_CACHE` key of a boundary request, or None where the
+    plan has no semanticHash (Spark Connect lacks _jdf: no memo)."""
+    try:
+        return (
             df._jdf.queryExecution().logical().semanticHash(),
             tuple(tuple((str(c), asc) for c, asc in norm) for norm in norms),
             nparts,
         )
     except Exception:
-        pass
-    if cache_key is not None and cache_key in _BOUNDARY_CACHE:
-        return _BOUNDARY_CACHE[cache_key]
-    exprs, idx = _key_union(norms)
+        return None
+
+
+def _sample(df: DataFrame, norms, nparts: int) -> tuple[list[tuple], list]:
+    """ONE deterministic top-K-by-hash sample job over the union of the
+    specs' key columns (TakeOrderedAndProject — per-partition top-K then a
+    driver merge, no full sort): the sampled key tuples, in
+    :func:`_key_union` order, and the key types. Fewer than
+    ``_sample_size(nparts)`` tuples means the frame has no other rows."""
+    exprs, _ = _key_union(norms)
     keys, types = _sample_keys(df, [(c, True) for c in exprs])
-    k = max(1024, 32 * nparts)
-    rows = [
-        tuple(r)
-        for r in keys.orderBy(F.xxhash64(*keys.columns)).limit(k).collect()
-    ]
+    rows = keys.orderBy(F.xxhash64(*keys.columns)).limit(_sample_size(nparts))
+    return [tuple(r) for r in rows.collect()], types
+
+
+def _sorted_keys(rows: list[tuple], norm, ix: list[int]) -> list[tuple]:
+    """One spec's key tuples (positions ``ix`` of each sampled row),
+    sorted under the spec's order."""
+    return sorted(
+        (tuple(r[i] for i in ix) for r in rows),
+        key=functools.cmp_to_key(_cmp_tuples(norm)),
+    )
+
+
+def _boundaries(rows: list[tuple], types: list, norms, nparts: int) -> list:
+    """Per spec, ≤ nparts-1 evenly spaced, deduplicated boundary tuples of
+    the sample under that spec's order, with the spec's key types."""
+    _, idx = _key_union(norms)
     sampled = []
     for norm, ix in zip(norms, idx):
         cmp_t = _cmp_tuples(norm)
-        tuples = sorted(
-            (tuple(r[i] for i in ix) for r in rows), key=functools.cmp_to_key(cmp_t)
-        )
+        tuples = _sorted_keys(rows, norm, ix)
         m = len(tuples)
         bnds: list[tuple] = []
         for i in range(1, nparts):
@@ -241,6 +269,11 @@ def _collect_boundaries(df: DataFrame, norms, nparts: int) -> list[tuple[list, l
                 continue
             bnds.append(t)
         sampled.append((bnds, [types[i] for i in ix]))
+    return sampled
+
+
+def _memoize(cache_key, sampled: list) -> list:
+    """Store boundaries under ``cache_key`` (None: not stored)."""
     if cache_key is not None:
         # FIFO eviction (insertion-ordered dict), not all-or-nothing
         # clear: at the cap, dropping ONE oldest entry costs one re-sample
@@ -252,6 +285,18 @@ def _collect_boundaries(df: DataFrame, norms, nparts: int) -> list[tuple[list, l
             _BOUNDARY_CACHE.pop(next(iter(_BOUNDARY_CACHE)))
         _BOUNDARY_CACHE[cache_key] = sampled
     return sampled
+
+
+def _collect_boundaries(df: DataFrame, norms, nparts: int) -> list[tuple[list, list]]:
+    """Boundaries for several order specs (``norms``) over one frame, from
+    ONE :func:`_sample` job: per spec ``(boundaries, key types)``.
+    Results memoize on (plan semanticHash, every spec, nparts) — see
+    `_BOUNDARY_CACHE`."""
+    cache_key = _cache_key(df, norms, nparts)
+    if cache_key in _BOUNDARY_CACHE:
+        return _BOUNDARY_CACHE[cache_key]
+    rows, types = _sample(df, norms, nparts)
+    return _memoize(cache_key, _boundaries(rows, types, norms, nparts))
 
 
 def _bucket_pid_sql(names: list[str], norm, bnds, types) -> str:
@@ -319,9 +364,14 @@ def _bucket_pid_sql(names: list[str], norm, bnds, types) -> str:
     return build(0, len(bnds))
 
 
-def _bucketed(df: DataFrame, norms, num_partitions: int | None, taken: set):
+def _nparts(df: DataFrame, num_partitions: int | None) -> int:
+    return num_partitions or df.sparkSession.sparkContext.defaultParallelism
+
+
+def _bucketed(df: DataFrame, norms, sampled: list, taken: set):
     """Shared first pass: one bucket id column per order spec, all from
-    frozen boundary literals of one sample job and all in ONE projection.
+    the frozen boundary literals ``sampled`` (:func:`_collect_boundaries`
+    of ``norms``) and all in ONE projection.
     Returns (frame — the caller's columns plus the bucket ids, bucket-id
     names, per spec its ids as (first id, count) — the ids of different
     specs are disjoint). Temp names come from :func:`_fresh` over
@@ -338,8 +388,6 @@ def _bucketed(df: DataFrame, norms, num_partitions: int | None, taken: set):
     shuffle + a giant bucket-id codegen per branch). Bucket ids are pure
     data (frozen literals), so the branches agree by construction
     wherever they compute them."""
-    nparts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    sampled = _collect_boundaries(df, norms, nparts)
     # project the key expressions once under temp names, parse every
     # when-tree JVM-side, drop the temps (the projection collapses)
     exprs, idx = _key_union(norms)
@@ -404,11 +452,10 @@ def _prefix_offsets(frame: DataFrame, pid_col: str, aggs: dict, spans) -> DataFr
     )
 
 
-def _ranked(
-    df: DataFrame, norms, rank_cols: list[str], num_partitions: int | None
-) -> DataFrame:
+def _ranked(df: DataFrame, norms, rank_cols: list[str], sampled: list) -> DataFrame:
     """Exact 1-based global ranks under several TOTAL orders at once:
-    ``rank_cols[k]`` ranks under ``norms[k]``.
+    ``rank_cols[k]`` ranks under ``norms[k]``, bucketed by the boundaries
+    ``sampled``.
 
     Every side branch reads the INPUT frame, never an earlier spec's
     ranked output: one boundary sample job for all specs, every bucket id
@@ -421,7 +468,7 @@ def _ranked(
     from pyspark.sql import Window
 
     taken = {c.lower() for c in (*df.columns, *rank_cols)}
-    bucketed, pids, spans = _bucketed(df, norms, num_partitions, taken)
+    bucketed, pids, spans = _bucketed(df, norms, sampled, taken)
     local, opid, off = (_fresh(taken, s) for s in ("_local", "_opid", "_offset"))
     pairs = bucketed.select(F.explode(F.array(*pids)).alias(opid))
     offsets = _prefix_offsets(pairs, opid, {off: F.count(F.lit(1))}, spans)
@@ -459,7 +506,9 @@ def global_rank_distributed(
     column) or ranks within ties are bucket-placement-dependent. Entries
     are plain columns/names (ascending) or ``(col, 'asc'|'desc')`` tuples.
     """
-    return _ranked(df, [_normalize_order_spec(order_spec)], [rank_col], num_partitions)
+    norm = _normalize_order_spec(order_spec)
+    sampled = _collect_boundaries(df, [norm], _nparts(df, num_partitions))
+    return _ranked(df, [norm], [rank_col], sampled)
 
 
 def global_cumsum_distributed(
@@ -499,7 +548,8 @@ def global_cumsums_distributed(
 
     norm = _normalize_order_spec(order_spec)
     taken = {c.lower() for c in (*df.columns, *cols.values())}
-    bucketed, [pid], spans = _bucketed(df, [norm], num_partitions, taken)
+    sampled = _collect_boundaries(df, [norm], _nparts(df, num_partitions))
+    bucketed, [pid], spans = _bucketed(df, [norm], sampled, taken)
     parts = bucketed.repartition(spans[0][1], pid)
     offs = {o: _fresh(taken, "_offset") for o in cols.values()}
     locs = {o: _fresh(taken, "_local") for o in cols.values()}
@@ -583,6 +633,60 @@ def _qcut_edge(n1, eq, k: int, q: int):
     return F.when(g >= 0.5, (i + 2) - (F.lit(1.0) - g)).otherwise((i + 1) + g)
 
 
+def _qcut_edge_value(n: int, eq: int, k: int) -> float:
+    """:func:`_qcut_edge` evaluated on the driver for a known n and
+    effective q: the same IEEE operations in the same order (Spark's
+    ``floor`` is a long, and long-double arithmetic widens the long
+    exactly, as Python's int-float arithmetic does)."""
+    v = float(n - 1) * _qcut_fraction(k, eq)
+    i = math.floor(v)
+    g = v - i
+    return (i + 2) - (1.0 - g) if g >= 0.5 else (i + 1) + g
+
+
+def _distinct_value(v):
+    """``v`` as countDistinct sees it: NaN is one value (-0.0 == 0.0
+    already holds in Python); binary keys are hashable bytes."""
+    if isinstance(v, float) and v != v:
+        return "NaN"
+    return bytes(v) if isinstance(v, bytearray) else v
+
+
+def _whole_sample_buckets(
+    df: DataFrame, specs, norms, rows: list[tuple], types: list, q: int, taken: set
+) -> DataFrame:
+    """The small-input plan of :func:`quantile_buckets_distributed`:
+    ``rows`` holds every row's keys (in :func:`_key_union` order), so the
+    driver knows n, each spec's distinct count u and its exact order. For
+    an integer rank r, ``r > e`` holds exactly when ``r > floor(e)``, so
+    each qcut edge is the key tuple at rank ``floor(e)``, and a row's
+    bucket is 1 + the number of edge tuples it sorts strictly after —
+    :func:`_bucket_pid_sql` over the edge tuples (sorted, possibly
+    repeated). Every spec in ONE projection: no window, no offsets, no
+    stats aggregate, no exchange."""
+    exprs, idx = _key_union(norms)
+    names = [_fresh(taken, f"__rk{i}") for i in range(len(exprs))]
+    n = len(rows)
+    buckets = {}
+    for (_, labels, asc, out), norm, ix in zip(specs, norms, idx):
+        tuples = _sorted_keys(rows, norm, ix)
+        u = len({_distinct_value(t[0]) for t in tuples if t[0] is not None})
+        eq = min(q, u)
+        if eq < 2:
+            buckets[out] = F.lit(labels[0] if asc else labels[-1])
+            continue
+        edges = [
+            tuples[math.floor(_qcut_edge_value(n, eq, k)) - 1] for k in range(1, eq)
+        ]
+        pid = _bucket_pid_sql(
+            [names[i] for i in ix], norm, edges, [types[i] for i in ix]
+        )
+        labels_arr = F.array(*[F.lit(x) for x in labels])
+        buckets[out] = F.element_at(labels_arr, F.expr(f"1 + {pid}"))
+    keyed = df.withColumns(dict(zip(names, exprs)))
+    return keyed.withColumns(buckets).drop(*names)
+
+
 def quantile_buckets_distributed(
     df: DataFrame,
     specs: list[tuple],
@@ -596,47 +700,63 @@ def quantile_buckets_distributed(
     Each spec buckets ``col`` of the INPUT frame, ordered by ``col`` (asc
     or desc) then ``tiebreak`` (asc).
 
-    Pass 1 computes every spec's exact global rank in one :func:`_ranked`
-    pass; pass 2 buckets each rank against the linear-interpolation
-    quantile edges of ranks 1..n (right-closed, k = 1 .. q-1),
+    Each rank is bucketed against the linear-interpolation quantile edges
+    of ranks 1..n (right-closed, k = 1 .. q-1),
 
         edge_k = 1 + (n - 1) * (k / q)
 
-    computed once, on the 1-row stats frame, in IEEE doubles exactly as
-    pandas' ``Series(1..n).quantile(linspace(0,1,q+1))`` does
-    (:func:`_qcut_edge`), so every bucket equals the reference's ``qcut``. For q in {2, 4, 5}
-    every integer rank falls on the same side of these doubles as of the
-    exact rational edge (checked for every n <= 2e6), so an oracle that
-    evaluates the formula in exact decimals agrees. For q = 3 (also a
-    q = 5 column with 3 distinct values) pandas lands just below the
-    integer edge whenever n ≡ 1 (mod 3), and so do we.
+    in IEEE doubles exactly as pandas' ``Series(1..n).quantile(linspace(
+    0,1,q+1))`` computes them (:func:`_qcut_edge`), so every bucket equals
+    the reference's ``qcut``. For q in {2, 4, 5} every integer rank falls
+    on the same side of these doubles as of the exact rational edge
+    (checked for every n <= 2e6), so an oracle that evaluates the formula
+    in exact decimals agrees. For q = 3 (also a q = 5 column with 3
+    distinct values) pandas lands just below the integer edge whenever
+    n ≡ 1 (mod 3), and so do we.
 
     Keeps the reference's degenerate-cardinality guard: fewer than 2
     distinct values → constant fill label; q clamps to the distinct count.
 
-    One action at construction (the shared boundary sample) and one to
-    force: n and every countDistinct come from ONE plain
-    `df.agg`, cross-joined as a broadcast 1-row frame instead of an eager
-    ``.first()`` job per column (the eager form cost an extra full scan
-    and job per call — measured 3× on the sf0.1 bench). The stats scan
-    stays off the bucket-id lineage: r11 measured the "share the rank's
-    exchange" alternative (stats over the bucketed frame) strictly worse
-    — column pruning specializes each subtree's copy of the exchange so
-    ReuseExchange never applies, and the branch pays an extra repartition
-    plus one more codegen of the ~1000-term bucket-id expression (cold
-    7.9 s vs 2.5 s at sf0.1).
+    One action at construction, the shared boundary sample (:func:`_sample`),
+    which picks the plan:
+
+    * fewer than K rows sampled — the sample holds every row, and the
+      edges are computed on the driver (:func:`_whole_sample_buckets`):
+      one projection, one job to force. These answers are exact only for
+      the rows the frame held at construction, so they are never memoized
+      (`_BOUNDARY_CACHE`).
+    * otherwise, or on a memoized boundary set — every spec's exact global
+      rank in one :func:`_ranked` pass, and the edges on a 1-row stats
+      frame: n and every countDistinct from ONE plain `df.agg`,
+      cross-joined as a broadcast instead of an eager ``.first()`` job per
+      column (the eager form cost an extra full scan and job per call —
+      measured 3× on the sf0.1 bench). The stats scan stays off the
+      bucket-id lineage: r11 measured the "share the rank's exchange"
+      alternative (stats over the bucketed frame) strictly worse — column
+      pruning specializes each subtree's copy of the exchange so
+      ReuseExchange never applies, and the branch pays an extra
+      repartition plus one more codegen of the ~1000-term bucket-id
+      expression (cold 7.9 s vs 2.5 s at sf0.1).
     """
     specs = [(c, labels, asc, out or f"{c}_q") for c, labels, asc, out in specs]
-    taken = {c.lower() for c in (*df.columns, *[s[3] for s in specs])}
-    ranks = [_fresh(taken, "_rank") for _ in specs]
-    us = [_fresh(taken, "_u") for _ in specs]
-    n = _fresh(taken, "_n")
     norms = [
         _normalize_order_spec(
             [(F.col(c), "asc" if asc else "desc"), (F.col(tiebreak), "asc")]
         )
         for c, _, asc, _ in specs
     ]
+    taken = {c.lower() for c in (*df.columns, *[s[3] for s in specs])}
+    nparts = _nparts(df, num_partitions)
+    cache_key = _cache_key(df, norms, nparts)
+    sampled = _BOUNDARY_CACHE.get(cache_key)
+    if sampled is None:
+        rows, types = _sample(df, norms, nparts)
+        if len(rows) < _sample_size(nparts):
+            return _whole_sample_buckets(df, specs, norms, rows, types, q, taken)
+        sampled = _memoize(cache_key, _boundaries(rows, types, norms, nparts))
+    ranks = [_fresh(taken, "_rank") for _ in specs]
+    us = [_fresh(taken, "_u") for _ in specs]
+    n = _fresh(taken, "_n")
     # 1-row stats frame, joined lazily — no separate driver job. It also
     # holds every spec's q-1 edges, computed once here instead of per row.
     # Effective q = min(q, distinct count): an edge with k >= eq is null,
@@ -655,7 +775,7 @@ def quantile_buckets_distributed(
             for k, e in enumerate(names, 1)
         ],
     )
-    ranked = _ranked(df, norms, ranks, num_partitions).crossJoin(F.broadcast(stats))
+    ranked = _ranked(df, norms, ranks, sampled).crossJoin(F.broadcast(stats))
 
     def bucket(rank: str, u: str, names: list, labels: list, ascending: bool):
         b = F.lit(1)

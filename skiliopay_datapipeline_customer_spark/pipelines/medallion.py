@@ -24,7 +24,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import read_written
+from ..io import read_written, written_rows
 from ..parallel import run_all
 from ..plans.quality import QualityReport, run_quality_checks
 
@@ -128,21 +128,16 @@ class MedallionPipeline:
     stage_logger: "object | None" = None
 
     def _write(self, df: DataFrame, layer: str) -> tuple[str, int]:
-        """Write one layer; the row count rides the write action via
-        ``df.observe`` (Spark's observable-metrics channel) instead of a
-        separate count-back scan — one job per layer, not two. This is the
-        engine form of the reference's per-stage row logging
-        (etl_pipeline.py:62-69)."""
-        from pyspark.sql import Observation
-
+        """Write one layer and count its rows from the written files'
+        parquet footers (``io.written_rows``) instead of a count-back scan
+        — one job per layer, not two. This is the engine form of the
+        reference's per-stage row logging (etl_pipeline.py:62-69)."""
         path = os.path.join(self.base_dir, layer)
-        obs = Observation(f"{layer}_metrics")
-        observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        writer = observed.write.mode("overwrite").option("compression", "snappy")
+        writer = df.write.mode("overwrite").option("compression", "snappy")
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(path)
-        return path, int(obs.get["rows"])
+        return path, written_rows(df.sparkSession, path)
 
     def run(
         self, spark: SparkSession, source: DataFrame, source_name: str = "memory"

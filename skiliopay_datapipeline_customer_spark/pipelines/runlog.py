@@ -7,14 +7,14 @@ plus a 10 MB × 5-backup ``RotatingFileHandler``, and its ``PipelineLogger``
 emits one structured record per stage boundary (``processing_start`` /
 ``processing_complete`` with stage, input_rows, output_rows,
 duration_seconds). This module reproduces those semantics on the engine's
-``observe()``-metric row counts: every record is one JSON object per line,
+layer row counts: every record is one JSON object per line,
 written through the same stdlib rotating handler, so a log shipper pointed
 at the reference's files can ingest these unchanged.
 
 Driver-side only by design: stage boundaries are driver events (a layer
-write finishing), counts arrive via ``Observation`` riding the write job —
-no extra Spark action, nothing per-row, so the logging cost is independent
-of data scale.
+write finishing), counts come from the written files' parquet footers
+(``io.written_rows``) — no extra Spark action, nothing per-row, so the
+logging cost grows with the file count, not the data.
 """
 
 from __future__ import annotations

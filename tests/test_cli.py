@@ -207,6 +207,39 @@ def test_bench_deltas_flag_regressions_vs_latest_record(tmp_path):
     assert sub["total_ratio"] is None and sub["prev_total"] is None
 
 
+
+def test_bench_deltas_refuse_a_base_from_another_core_count(tmp_path):
+    """bench.py's deltas compare only records taken on as many cores: a
+    wrapped record carries the core count in its envelope, outside
+    "parsed" (kept through the unwrap), a `--record` file carries it in its
+    own line, and a record with no core count is no base once the run
+    states its own."""
+    import json
+
+    from bench import HEADLINE, _deltas
+
+    qs = {n: 1.0 for n in HEADLINE}
+    line = {
+        "metric": "headline_queries_total_time",
+        "value": float(len(qs)),
+        "queries": qs,
+        "sf": 0.1,
+    }
+    (tmp_path / "BENCH_r3.json").write_text(json.dumps(line))
+    (tmp_path / "BENCH_r5.json").write_text(json.dumps({**line, "cpus": 4}))
+    (tmp_path / "BENCH_r7.json").write_text(json.dumps({"cpus": 32, "parsed": line}))
+    root = str(tmp_path)
+
+    assert _deltas(dict(qs), root=root, cpus=32)["vs_round"] == 7
+    assert _deltas(dict(qs), root=root, cpus=4)["vs_round"] == 5
+    assert _deltas(dict(qs), root=root, cpus=8) == {
+        "vs_round": None,
+        "ratios": {},
+        "flagged": [],
+    }
+    # without a core count of its own, a run compares as before
+    assert _deltas(dict(qs), root=root)["vs_round"] == 7
+
 def test_bench_line_survives_driver_stdout_tail():
     """The round driver keeps only the LAST 2000 chars of bench stdout; a
     record that renders >1900 chars must degrade (outlier-only ratios, then

@@ -68,6 +68,51 @@ def test_medallion_end_to_end(spark, sf_dir, tmp_path):
     assert "_ingestion_timestamp" in bronze.columns
 
 
+def test_ml_trains_and_evaluates_after_a_medallion_run(spark, sf_dir, tmp_path):
+    """A medallion run leaves the session usable for ML: random forest and
+    logistic regression models keep their training summaries, which hold
+    the session, so a session that once registered an ``Observation``
+    (the observation manager cannot be serialized) failed their
+    ``transform`` with ``Task not serializable``. The layer row counts are
+    exact, also for a partitioned layer (files one directory down)."""
+    from skiliopay_datapipeline_customer_spark.ml import (
+        churn_dataset,
+        evaluate_classifier,
+        train_classifier,
+    )
+    from skiliopay_datapipeline_customer_spark.ml.dataset import (
+        FEATURE_COLS,
+        LABEL_COL,
+    )
+
+    src = table(spark, sf_dir, "orders")
+    pipe = MedallionPipeline(
+        base_dir=str(tmp_path),
+        feature_transforms=[
+            lambda df: df.groupBy("o_custkey", "o_orderstatus").count()
+        ],
+        clean_kwargs={"key_cols": ["o_orderkey"]},
+        quality_kwargs={"key_columns": ["o_orderkey"]},
+        partition_by=["o_orderstatus"],
+    )
+    result = pipe.run(spark, src, source_name="orders.parquet")
+    n = src.count()
+    assert result["rows"] == {
+        "bronze": n,
+        "silver": n,
+        "gold": src.select("o_custkey", "o_orderstatus").distinct().count(),
+    }
+
+    ds = churn_dataset(spark, sf_dir)
+    for model_type, hp in (("rf", {"numTrees": 5}), ("lr", {"maxIter": 10})):
+        model, transform = train_classifier(
+            ds, FEATURE_COLS, LABEL_COL, model_type=model_type, **hp
+        )
+        assert model.hasSummary, model_type
+        metrics = evaluate_classifier(transform(ds), LABEL_COL)
+        assert metrics["accuracy"] > 0.5, (model_type, metrics)
+
+
 def test_medallion_stage_logging_records_bronze_to_gold(spark, sf_dir, tmp_path):
     """Batch-stage logging twin of the reference's PipelineLogger
     (logging_config.py:88-132) + rotating-JSON handler (273-303): a

@@ -1525,3 +1525,177 @@ def test_rfm_features_builds_in_one_job_over_one_scan(spark, sf_dir):
         plan = gold._jdf.queryExecution().executedPlan().toString()
         assert plan.count("FileScan") == 1, plan
         assert gold.count() == per_cust.count()
+
+
+def _rank_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_quantile_buckets_large_input_multi_spec_equal_parity(spark):
+    """The multi-spec NULL/NaN/ties recipe at n = 1500, above the boundary
+    sample's K = 1024 rows (num_partitions=8): the sample cannot hold every
+    row, so the ranked plan (windows over range buckets) runs, and every
+    spec still equals quantile_bucket_parity alone on its column."""
+    from skiliopay_datapipeline_customer_spark.operators.ranks import (
+        quantile_buckets_distributed,
+    )
+
+    n = 1500
+    rows = []
+    for i in range(n):
+        a = None if i % 17 == 0 else (
+            float("nan") if i % 23 == 0 else float((i * 7919) % 13) - 6.5
+        )
+        b = None if i % 29 == 0 else (i * 31) % 41
+        rows.append((i, a, b))
+    df = spark.createDataFrame(rows, "user_id long, a double, b long")
+    up, down = [1, 2, 3, 4, 5], [5, 4, 3, 2, 1]
+    specs = [
+        ("a", up, True, "a_up"),
+        ("a", down, False, "a_down"),
+        ("b", up, False, "b_down"),
+        ("b", down, True, "b_up"),
+    ]
+    got = quantile_buckets_distributed(df, specs, num_partitions=8)
+    rows_out = got.collect()
+    assert "Window" in _rank_plan(got)
+    assert len(rows_out) == n
+    want = _parity_buckets(df, specs, "user_id")
+    for *_, out in specs:
+        assert {r["user_id"]: r[out] for r in rows_out} == want[out], out
+        assert len(set(want[out].values())) == 5, out
+
+
+def test_quantile_buckets_whole_sample_hostile_shapes(spark):
+    """Inputs the boundary sample holds whole, bucketed by one projection
+    (no Window in the plan), equal quantile_bucket_parity: an empty frame,
+    one row, an all-NULL key, NaN/-0.0/0.0 keys whose distinct count
+    (NaN one value, -0.0 == 0.0, NULL excluded) sets the effective q, and
+    a timestamp key."""
+    from skiliopay_datapipeline_customer_spark.operators.ranks import (
+        quantile_buckets_distributed,
+    )
+
+    up, down = [1, 2, 3, 4, 5], [5, 4, 3, 2, 1]
+    specs = [("v", up, True, "up"), ("v", down, False, "down")]
+    nan = float("nan")
+    cycle = [-0.0, 0.0, nan, 1.0, None, nan, 0.0, -0.0, 2.5, -1.0]
+    frames = {
+        "empty": spark.createDataFrame([], "user_id long, v double"),
+        "one row": spark.createDataFrame([(7, 1.5)], "user_id long, v double"),
+        "all null": spark.createDataFrame(
+            [(i, None) for i in range(9)], "user_id long, v double"
+        ),
+        "nan and signed zeros": spark.createDataFrame(
+            [(i, cycle[i % 4]) for i in range(10)], "user_id long, v double"
+        ),
+        "mixed": spark.createDataFrame(
+            [(i, cycle[(i * 7) % len(cycle)]) for i in range(37)],
+            "user_id long, v double",
+        ),
+        "timestamp": spark.range(41).select(
+            F.col("id").alias("user_id"),
+            F.when(F.col("id") % 11 == 0, F.lit(None))
+            .otherwise(F.timestamp_micros((F.col("id") * 7919) % 13 * 3_600_000_000))
+            .alias("v"),
+        ),
+    }
+    for name, df in frames.items():
+        got = quantile_buckets_distributed(df, specs, num_partitions=4)
+        assert "Window" not in _rank_plan(got), name
+        rows = got.collect()
+        want = _parity_buckets(df, specs, "user_id")
+        for *_, out in specs:
+            assert {r["user_id"]: r[out] for r in rows} == want[out], (name, out)
+    # -0.0/0.0 are one value and NaN is one value: 3 distinct, so q = 3
+    assert set(want_nan := _parity_buckets(
+        frames["nan and signed zeros"], specs[:1], "user_id"
+    )["up"].values()) == {1, 2, 3}, want_nan
+
+
+def test_quantile_buckets_rewritten_parquet_path_rebuilds_exactly(spark, tmp_path):
+    """A small input's buckets come from its own rows at construction and
+    are never memoized: the same parquet path rewritten with other values,
+    then rebuilt, still equals quantile_bucket_parity over the new rows."""
+    from skiliopay_datapipeline_customer_spark.operators.ranks import (
+        quantile_buckets_distributed,
+    )
+
+    path = str(tmp_path / "keys")
+    specs = [("v", [1, 2, 3, 4, 5], True, "q")]
+    for mult in (7, 3):
+        spark.createDataFrame(
+            [(i, float((i * mult) % 31)) for i in range(200)], "user_id long, v double"
+        ).write.mode("overwrite").parquet(path)
+        df = spark.read.parquet(path)
+        got = quantile_buckets_distributed(df, specs, num_partitions=4)
+        want = _parity_buckets(df, specs, "user_id")["q"]
+        assert {r["user_id"]: r["q"] for r in got.collect()} == want, mult
+
+
+def test_rfm_features_on_a_small_input_forces_in_one_job(spark, sf_dir):
+    """The daily job's gold shape (about 150 customers at sf0.001) is held
+    whole by the boundary sample: with AQE off, building rfm_features runs
+    one job and forcing it runs one more, and its executed plan has no
+    Window and no exchange beyond the per-customer aggregate's own."""
+    import uuid
+
+    from skiliopay_datapipeline_customer_spark.functions.churn_features import (
+        rfm_features,
+    )
+
+    orders = table(spark, sf_dir, "orders")
+    per_cust = orders.groupBy(F.col("o_custkey").alias("user_id")).agg(
+        F.datediff(F.lit("1998-08-02"), F.max("o_orderdate")).alias("rfm_recency"),
+        F.count("*").alias("rfm_frequency"),
+        F.round(F.sum("o_totalprice"), 2).alias("rfm_monetary"),
+    )
+    with _aqe_off(spark):
+        gold, build_jobs = _jobs_in_group(
+            spark, f"rfm-build-{uuid.uuid4().hex}", lambda: rfm_features(per_cust)
+        )
+        _, force_jobs = _jobs_in_group(
+            spark,
+            f"rfm-force-{uuid.uuid4().hex}",
+            lambda: gold.write.format("noop").mode("overwrite").save(),
+        )
+        plan = _rank_plan(gold)
+        input_exchanges = _rank_plan(per_cust).count("Exchange")
+    assert (build_jobs, force_jobs) == (1, 1)
+    assert "Window" not in plan, plan
+    assert input_exchanges == 1
+    assert plan.count("Exchange") == input_exchanges, plan
+
+
+def test_qcut_edge_value_equals_column_form(spark):
+    """The driver-side qcut edge of the small-input plan is the same
+    double as the Column form the ranked plan evaluates, for every n below
+    1500, every q from 2 to 7 and every effective q up to it."""
+    from skiliopay_datapipeline_customer_spark.operators.ranks import (
+        _qcut_edge,
+        _qcut_edge_value,
+    )
+
+    grid = spark.range(1500).crossJoin(
+        spark.range(2, 8).withColumnRenamed("id", "eq")
+    ).withColumnRenamed("id", "n")
+    n1 = (F.col("n") - F.lit(1)).cast("double")
+    cols = {
+        f"e_{q}_{k}": _qcut_edge(n1, F.least(F.lit(q), F.col("eq")), k, q)
+        for q in range(2, 8)
+        for k in range(1, q)
+    }
+    checked = 0
+    for r in grid.select("n", "eq", *[c.alias(name) for name, c in cols.items()]).collect():
+        for q in range(2, 8):
+            eq = min(q, r["eq"])
+            for k in range(1, q):
+                got = r[f"e_{q}_{k}"]
+                if k >= eq:
+                    assert got is None
+                    continue
+                assert _qcut_edge_value(r["n"], eq, k) == got, (r["n"], q, eq, k)
+                checked += 1
+    assert checked == 1500 * sum(
+        min(q, eq) - 1 for q in range(2, 8) for eq in range(2, 8)
+    )
