@@ -16,6 +16,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from skiliopay_datapipeline_customer_spark.plans.run_record import (  # noqa: E402
+    force,
+    hygiene,
+    measure,
+    warm_page_cache,
+)
 from skiliopay_datapipeline_customer_spark.queries import all_queries  # noqa: E402
 from skiliopay_datapipeline_customer_spark.session import get_spark  # noqa: E402
 
@@ -70,49 +76,6 @@ HEADLINE = [
 _DRIVER_TAIL_BUDGET = 1900
 
 
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def hygiene(spark) -> None:
-    """Inter-query resource hygiene for long-lived sessions.
-
-    The sf1 r11 record measured the warm pass SLOWER than cold (236 s vs
-    189 s): 50 consecutive heavy executions in one JVM accumulate cache
-    blocks + broadcast cleanup debt until GC pressure halves throughput —
-    a real operational finding at the 100 TB posture, not a bench
-    artifact. Between queries: drop the Python-side frame refs
-    (gc.collect lets the ContextCleaner queue their JVM blocks), clear
-    the cache manager (queries persist intermediates they never share
-    across query boundaries), and nudge a JVM GC so the ContextCleaner's
-    weak references actually fire. Cost at sf0.1: ~10 ms/query — noise
-    next to the accumulation it prevents at sf1.
-
-    The explicit persistent-RDD unpersist exists because the gc-based
-    chain CANNOT release the newest localCheckpoint pin (measured r12 via
-    memory-pool MXBeans at sf1: one stored RDD holding ~480 MB of G1 Old
-    Gen survived gc.collect + System.gc through multiple hygiene cycles,
-    old-generation GC time grew 1.5 s → 15.5 s over three identical
-    dedup_clusters runs, and the pin dropped only during the NEXT query's
-    natural GCs). Mechanism: Python's gc only QUEUES the py4j detach
-    (batched, async), so the System.gc right after it fires before the
-    JVM-side reference is released and the ContextCleaner's weak ref
-    never enqueues — a one-cycle-delayed cleanup by construction. Safe
-    here because hygiene runs BETWEEN bench queries, when no live frame
-    depends on a checkpoint; do not call it while holding a
-    localCheckpoint-derived frame (its blocks are unrecoverable — the
-    lineage is truncated).
-    """
-    import gc
-
-    gc.collect()
-    spark.catalog.clearCache()
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().valuesIterator()
-    while it.hasNext():
-        it.next().unpersist(False)
-    spark.sparkContext._jvm.System.gc()
-
-
 def machine_probe(spark) -> dict:
     """Pin the HOST's speed inside every bench record.
 
@@ -157,6 +120,53 @@ def machine_probe(spark) -> dict:
     }
 
 
+def _selected(only: list[str] | None, queries: dict) -> list[str]:
+    """HEADLINE, or the ``--queries`` subset: its headline names in
+    headline order, then the others in the order given."""
+    if not only:
+        return HEADLINE
+    unknown = sorted(set(only) - set(queries))
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
+    # ad-hoc subset timing (iterating on ONE operator without paying the
+    # full headline run); the per-round record always runs the full
+    # headline set, so deltas stay apples-to-apples
+    return [n for n in HEADLINE if n in set(only)] + [
+        n for n in only if n not in set(HEADLINE)
+    ]
+
+
+def _session(app_name: str, sf_dirs: list[str]):
+    """A bench session, warmed with one untimed tiny action, with every
+    fixture's parquet read into the OS page cache."""
+    spark = get_spark(app_name=app_name)
+    spark.range(1).count()
+    for sf_dir in sf_dirs:
+        warm_page_cache(sf_dir)
+    return spark
+
+
+def timed_pass(spark, queries: dict, names: list[str], sf_dir: str) -> dict:
+    """One ``run_record.measure`` of each named query, in order. A query
+    that raises keeps its error in its record and the pass goes on."""
+    return {name: measure(spark, queries[name], sf_dir) for name in names}
+
+
+def _failures(*passes: dict) -> dict[str, str]:
+    return {
+        name: rec["error"]
+        for records in passes
+        for name, rec in records.items()
+        if "error" in rec
+    }
+
+
+def _write(record: str, payload: dict) -> None:
+    repo = os.path.dirname(os.path.abspath(__file__))
+    with open(os.path.join(repo, record), "w") as f:
+        json.dump(payload, f, indent=2)
+
+
 def main(only: list[str] | None = None, record: str | None = None) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -164,35 +174,11 @@ def main(only: list[str] | None = None, record: str | None = None) -> None:
         sf_val = float(sf)
     except ValueError:
         sf_val = sf
-    spark = get_spark(app_name="bench")
+    queries = all_queries()
+    headline = _selected(only, queries)
+    spark = _session("bench", [sf_dir])
     # the core count the timings were taken on: local[N] runs N tasks
     cpus = spark.sparkContext.defaultParallelism
-    queries = all_queries()
-    headline = HEADLINE
-    if only:
-        unknown = sorted(set(only) - set(queries))
-        if unknown:
-            raise SystemExit(f"unknown queries: {unknown}")
-        # ad-hoc subset timing (iterating on ONE operator without paying the
-        # full 22-query run); the driver's official record always runs the
-        # full headline set, so deltas stay apples-to-apples
-        headline = [n for n in HEADLINE if n in set(only)] + [
-            n for n in only if n not in set(HEADLINE)
-        ]
-    timings: dict[str, float] = {}
-    # warm the JVM/session with one untimed tiny action, and the Python
-    # worker pool + Arrow channel with one untimed tiny pandas_udf action —
-    # interpreter fork/init is session overhead, not operator cost
-    spark.range(1).count()
-    # warm the OS page cache over the input parquet (~100 MB at sf0.1): a
-    # cold-disk first read otherwise lands on whichever query scans a table
-    # first, adding up-to-35% run-to-run variance that measures the machine,
-    # not the operators
-    for name in sorted(os.listdir(sf_dir)):
-        if name.endswith(".parquet"):
-            with open(os.path.join(sf_dir, name), "rb") as f:
-                while f.read(1 << 24):
-                    pass
     # JIT-warm the shuffle/join/agg codepaths on synthetic rows (JMH-style
     # warmup iteration): the first timed query otherwise pays ~3 s of JVM
     # compilation that belongs to the session, not the operator
@@ -277,26 +263,20 @@ def main(only: list[str] | None = None, record: str | None = None) -> None:
     # whose end-of-run probe was clean), so a single endpoint sample can
     # miss the burst that inflated the middle. Two samples bound it.
     probe_before = machine_probe(spark)
-    for name in headline:
-        fn = queries[name]
-        t0 = time.perf_counter()
-        force(fn(spark, sf_dir))
-        timings[name] = round(time.perf_counter() - t0, 3)
-        hygiene(spark)
-    total = round(sum(timings.values()), 3)
-    subset = bool(only) and set(headline) != set(HEADLINE)
+    cold = timed_pass(spark, queries, headline, sf_dir)
     # second pass, same session: per-query codegen/JIT now cached, so this
     # measures the data path alone. The headline `value` stays the COLD
     # total (what a fresh session pays, comparable across rounds); the warm
     # block is the apples-to-apples number against the reference's
     # warm-process baseline and is ~10 s less noisy on this VM.
-    warm: dict[str, float] = {}
-    for name in headline:
-        fn = queries[name]
-        t0 = time.perf_counter()
-        force(fn(spark, sf_dir))
-        warm[name] = round(time.perf_counter() - t0, 3)
-        hygiene(spark)
+    warm = timed_pass(spark, queries, headline, sf_dir)
+    # a query that failed in either pass leaves both maps, so the record
+    # times a subset of the headline and is marked as one below
+    failed = _failures(cold, warm)
+    timed = [n for n in headline if n not in failed]
+    timings = {n: cold[n]["s"] for n in timed}
+    warm_times = {n: warm[n]["s"] for n in timed}
+    subset = set(timed) != set(HEADLINE)
     out = {
         # a subset run is marked unmistakably: different metric name + an
         # explicit "subset" field, and _deltas() refuses to treat a partial
@@ -307,11 +287,11 @@ def main(only: list[str] | None = None, record: str | None = None) -> None:
             if subset
             else "headline_queries_total_time"
         ),
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
-        "warm_total": round(sum(warm.values()), 3),
-        "queries_warm": warm,
+        "warm_total": round(sum(warm_times.values()), 3),
+        "queries_warm": warm_times,
         "sf": sf_val,
         # r13 (VERDICT #3): disclose the r12 JMH-style plan warmup in the
         # record itself — "cold" here means first timed execution at the
@@ -323,7 +303,11 @@ def main(only: list[str] | None = None, record: str | None = None) -> None:
         "deltas": _deltas(timings, sf=sf_val, cpus=cpus),
     }
     if subset:
-        out["subset"] = headline
+        out["subset"] = timed
+    # every run's full record (run_record.measure): build/exec split, jobs,
+    # build jobs, pins, plan digest, JVM residue, error. File only:
+    # _fit_line never prints it
+    out["query_records"] = {"cold": cold, "warm": warm}
     # The round driver captures only the LAST 2000 CHARS of stdout and
     # parses the JSON line out of that tail: the r06 line grew to 2063
     # chars (warm block + full ratios map) and the round record degraded
@@ -340,12 +324,18 @@ def main(only: list[str] | None = None, record: str | None = None) -> None:
     #    window — first the ratios map shrinks to outliers only (the
     #    flagged list already carries the signal), then the per-query
     #    warm block drops (warm_total stays).
-    if not subset:
-        repo = os.path.dirname(os.path.abspath(__file__))
-        target = os.path.join(repo, record or "BENCH_FULL.json")
-        with open(target, "w") as f:
-            json.dump(out, f, indent=2)
+    # A subset run is persisted only under an explicit --record name.
+    if record or not subset:
+        _write(record or "BENCH_FULL.json", out)
     print(_fit_line(out, record=record))
+    if failed:
+        raise SystemExit(_failure_report(failed))
+
+
+def _failure_report(failed: dict[str, str]) -> str:
+    return f"{len(failed)} queries failed:\n" + "\n".join(
+        f"  {name}: {err}" for name, err in failed.items()
+    )
 
 
 def _fit_line(out: dict, record: str | None = None) -> str:
@@ -353,13 +343,14 @@ def _fit_line(out: dict, record: str | None = None) -> str:
     2000-char stdout tail, degrading stepwise: full record → outlier-only
     ratios → drop the per-query warm block (warm_total stays). The full
     record always lives in the persisted file (BENCH_FULL.json, or the
-    --record name for builder runs)."""
+    --record name); the per-query records live only there."""
+    out = {k: v for k, v in out.items() if k != "query_records"}
     line = json.dumps(out)
-    # subset runs never persist a full record (the dump is full-run-only),
-    # so their degradation notes must not point at a stale prior record
+    # a subset run persists no record unless --record names one, so its
+    # degradation notes must not point at a stale prior record
     full_ref = (
         "full map not persisted (subset run)"
-        if "subset" in out
+        if "subset" in out and not record
         else f"full map in {record or 'BENCH_FULL.json'}"
     )
     if len(line) > _DRIVER_TAIL_BUDGET:
@@ -490,26 +481,6 @@ def _deltas(
     return out
 
 
-SCALING_QUERIES = [
-    # the shuffle-heavy shapes whose 100×-scale behavior the design argues
-    # for — the scaling curve is the empirical check of those arguments
-    "flagship_revenue_by_nation",
-    "star_revenue_rollup",
-    "minhash_lsh_candidates",
-    "ngram_jaccard_dups",
-    "simhash_near_pairs",
-    "lsh_dup_pairs",
-    "dedup_clusters",
-    "token_stats",
-    "rfm_quintiles",
-    "topn_per_customer",
-    # r9 selection family: the bigram-LM capstone composition and the two
-    # sketch-prefilter-plus-exact-verify shapes
-    "curated_selection_pipeline",
-    "bloom_decontaminated_corpus",
-    "cms_heavy_hitter_tokens",
-]
-
 # derived from the same testdata root convention the rest of bench.py
 # honors — a different data root is a clear failure, not a silent break
 _TESTDATA_ROOT = os.environ.get("SPARK_GRAFT_TESTDATA_ROOT", "/root/testdata")
@@ -546,10 +517,20 @@ def _resolve_sf_dir(s: str) -> str:
     )
 
 
-def scaling(sfs: list[str] | None = None) -> None:
-    """Data-scaling curve: each heavy query timed at sf0.001 / 0.01 / 0.1
-    (100× data end to end) in ONE session, first-run compile absorbed by a
-    double run at the smallest SF. Prints ONE JSON line. ``--sfs
+def _ratio(t: float | None, base: float | None) -> float | None:
+    return round(t / base, 3) if t is not None and base else None
+
+
+def scaling(
+    sfs: list[str] | None = None,
+    only: list[str] | None = None,
+    record: str | None = None,
+) -> None:
+    """Data-scaling curve: each headline query (or the ``--queries``
+    subset) timed at sf0.001 / 0.01 / 0.1 (100× data end to end) in ONE
+    session, first-run compile absorbed by a double run at the smallest
+    SF. Prints ONE JSON line; ``--record NAME.json`` also writes it, with
+    every run's ``run_record`` under ``query_records``. ``--sfs
     0.01,0.1,1`` extends the curve onto locally generated fixtures
     (sf1 = 6M lineitem); the driver's default record stays 0.001→0.1.
 
@@ -569,80 +550,71 @@ def scaling(sfs: list[str] | None = None) -> None:
         )
     sf_dirs = [_resolve_sf_dir(s) for s in sf_list]
     # key by the RESOLVED dir name, not the raw token: _resolve_sf_dir
-    # may normalize ("1.0" → sf1), and rec[] is indexed by these keys
+    # may normalize ("1.0" → sf1), and the per-SF maps use these keys
     sf_list = [os.path.basename(d).replace("sf", "") for d in sf_dirs]
-    spark = get_spark(app_name="bench-scaling")
     queries = all_queries()
-    spark.range(1).count()
-    for sf_d in sf_dirs:
-        for name in sorted(os.listdir(sf_d)):
-            if name.endswith(".parquet"):
-                with open(os.path.join(sf_d, name), "rb") as f:
-                    while f.read(1 << 24):
-                        pass
-    out: dict[str, dict] = {}
+    names = _selected(only, queries)
+    spark = _session("bench-scaling", sf_dirs)
+    probe_before = machine_probe(spark)
     last, prev = sf_list[-1], sf_list[-2]
-    data_ratio = round(float(last) / float(prev), 3)
-    for name in SCALING_QUERIES:
-        fn = queries[name]
-        rec: dict[str, float] = {}
-        for i, sf_d in enumerate(sf_dirs):
-            sf_key = os.path.basename(sf_d).replace("sf", "")
-            if i == 0:
-                force(fn(spark, sf_d))  # absorb codegen/JIT, untimed
-                hygiene(spark)
-            t0 = time.perf_counter()
-            force(fn(spark, sf_d))
-            rec[sf_key] = round(time.perf_counter() - t0, 3)
-            # same inter-query hygiene as main(): 39 heavy executions in
-            # one JVM otherwise accumulate cache/broadcast debt that
-            # inflates the LATER SFs' timings (measured at sf1 — see
-            # hygiene())
-            hygiene(spark)
-        rec["t_ratio_last_step"] = (
-            round(rec[last] / rec[prev], 3) if rec[prev] else None
-        )
-        if set(("0.01", "0.1")) <= set(rec):
+    times: dict[str, dict] = {}
+    records: dict[str, dict] = {}
+    for name in names:
+        # absorb codegen/JIT, untimed
+        measure(spark, queries[name], sf_dirs[0])
+        # measure() runs hygiene after each query: 39 heavy executions in
+        # one JVM otherwise accumulate cache/broadcast debt that inflates
+        # the LATER SFs' timings (measured at sf1 — see run_record.hygiene)
+        runs = {
+            key: measure(spark, queries[name], d)
+            for key, d in zip(sf_list, sf_dirs)
+        }
+        rec = {key: r["s"] for key, r in runs.items() if "error" not in r}
+        rec["t_ratio_last_step"] = _ratio(rec.get(last), rec.get(prev))
+        if "0.01" in rec and "0.1" in rec:
             # the name the r06–r10 records and their readers know
-            rec["t_ratio_10x"] = (
-                round(rec["0.1"] / rec["0.01"], 3) if rec["0.01"] else None
-            )
-        out[name] = rec
-    print(
-        json.dumps(
-            {
-                "metric": "scaling_curve",
-                "unit": "sec",
-                "sfs": [float(s) for s in sf_list],
-                "data_ratio_last_step": data_ratio,
-                # heap matters for cross-record comparability: sf1 needs
-                # ~12g in single-JVM local mode (the 1g default measured
-                # fastest at sf0.1 stays the bench default)
-                "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "1g(default)"),
-                "queries": out,
-            }
-        )
-    )
+            rec["t_ratio_10x"] = _ratio(rec["0.1"], rec["0.01"])
+        times[name] = rec
+        records[name] = runs
+    out = {
+        "metric": "scaling_curve",
+        "unit": "sec",
+        "sfs": [float(s) for s in sf_list],
+        "data_ratio_last_step": round(float(last) / float(prev), 3),
+        # heap matters for cross-record comparability: sf1 needs
+        # ~12g in single-JVM local mode (the 1g default measured
+        # fastest at sf0.1 stays the bench default)
+        "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "1g(default)"),
+        "machine": {"before": probe_before, "after": machine_probe(spark)},
+        "queries": times,
+    }
+    print(json.dumps(out))
+    if record:
+        _write(record, {**out, "query_records": records})
+    failed = {
+        f"{name}@sf{key}": r["error"]
+        for name, runs in records.items()
+        for key, r in runs.items()
+        if "error" in r
+    }
+    if failed:
+        raise SystemExit(_failure_report(failed))
 
 
 if __name__ == "__main__":
     argv = sys.argv[1:]
+    only: list[str] | None = None
+    if "--queries" in argv:
+        only = [q for q in argv[argv.index("--queries") + 1].split(",") if q]
+    record = None
+    if "--record" in argv:
+        # a committed record (e.g. BENCH_IDLE_r11.json) that the per-round
+        # BENCH run can never overwrite
+        record = os.path.basename(argv[argv.index("--record") + 1])
     if "--scaling" in argv:
         sfs = None
         if "--sfs" in argv:
             sfs = [s for s in argv[argv.index("--sfs") + 1].split(",") if s]
-        scaling(sfs=sfs)
+        scaling(sfs=sfs, only=only, record=record)
     else:
-        only: list[str] | None = None
-        if "--queries" in argv:
-            only = [
-                q
-                for q in argv[argv.index("--queries") + 1].split(",")
-                if q
-            ]
-        record = None
-        if "--record" in argv:
-            # a committed builder record (e.g. BENCH_IDLE_r11.json) the
-            # driver's own run can never overwrite
-            record = os.path.basename(argv[argv.index("--record") + 1])
         main(only=only, record=record)

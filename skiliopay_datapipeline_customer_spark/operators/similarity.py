@@ -719,18 +719,31 @@ def pq_encode(vec_col, codebooks: list[list[list[float]]]):
     """m subspace codes as ONE map-side expression (array<int>): for each
     subspace, the argmin-L2 codeword index over k inlined distances. No
     shuffle, no UDF — encoding a 100 TB corpus is a single scan."""
-    m = len(codebooks)
     dsub = len(codebooks[0][0])
-    raw = as_double(vec_col)
-    nrm = norm(raw)
-    # unit-normalize to match the codebook space (zero vectors pass through)
-    v = F.when(nrm > 0, F.transform(raw, lambda x: x / nrm)).otherwise(raw)
-    codes = []
-    for j, book in enumerate(codebooks):
-        sub = F.slice(v, j * dsub + 1, dsub)
-        dists = F.array(*[l2sq(sub, _lit_vec(c)) for c in book])
-        codes.append((F.array_position(dists, F.array_min(dists)) - 1).cast("int"))
-    return F.array(*codes)
+
+    def let(value, body):
+        # evaluate ``value`` once per row and hand it to ``body`` as a
+        # lambda variable: an inlined expression is re-evaluated at every
+        # reference, and the unit vector is referenced once per codeword
+        return F.transform(F.array(value), body)[0]
+
+    def unit(raw, nrm):
+        # unit-normalize to match the codebook space (zero vectors pass
+        # through)
+        return F.when(nrm > 0, F.transform(raw, lambda x: x / nrm)).otherwise(raw)
+
+    def codes(v):
+        out = []
+        for j, book in enumerate(codebooks):
+            sub = F.slice(v, j * dsub + 1, dsub)
+            dists = F.array(*[l2sq(sub, _lit_vec(c)) for c in book])
+            out.append((F.array_position(dists, F.array_min(dists)) - 1).cast("int"))
+        return F.array(*out)
+
+    return let(
+        as_double(vec_col),
+        lambda raw: let(let(norm(raw), lambda nrm: unit(raw, nrm)), codes),
+    )
 
 
 def pq_adc_topk(

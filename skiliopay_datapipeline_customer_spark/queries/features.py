@@ -412,7 +412,9 @@ def churn_features_gold(spark, sf_dir):
     from ..functions.fixtures import synthesize_users_raw
 
     users = synthesize_users_raw(spark, n=1000)
-    gold = churn_feature_pipeline(users)
+    # encode=False: no encoded column is selected below, and the encoder's
+    # distinct-sets job would run over the whole lineage at build time
+    gold = churn_feature_pipeline(users, encode=False)
     return gold.select(
         "user_id",
         "rfm_score",

@@ -30,27 +30,12 @@ def group_jobs(spark):
     DataFrame action runs inside a SQL execution; a schema-less parquet
     read runs its schema-inference (footer) job outside one, while the
     reader is built."""
-    import uuid
-
-    sc = spark.sparkContext
+    from skiliopay_datapipeline_customer_spark.plans import run_record
 
     def run(fn):
-        group = f"group-jobs-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
+        with run_record.job_group(spark, "group-jobs") as group:
             result = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = set(sc.statusTracker().getJobIdsForGroup(group))
-        store = spark._jsparkSession.sharedState().statusStore()
-        n = store.executionsCount()
-        sql_jobs = set()
-        it = store.executionsList(max(0, n - 500), 500).iterator()
-        while it.hasNext():
-            keys = it.next().jobs().keys().iterator()
-            while keys.hasNext():
-                sql_jobs.add(keys.next())
-        return result, jobs, jobs - sql_jobs
+        jobs = run_record.group_jobs(spark, group)
+        return result, jobs, run_record.non_sql_jobs(spark, jobs)
 
     return run

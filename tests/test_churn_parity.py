@@ -149,3 +149,25 @@ def test_zscore_normalize_excludes_reference_columns(spark):
     assert row["m"] == 0.0 and abs(row["s"] - 1.0) < 1e-6
     # excluded columns untouched (labels still {0,1} sum, not centered)
     assert row["labels"] > 0
+
+
+def test_churn_features_gold_builds_with_only_the_rfm_sample_jobs(
+    spark, sf_dir, group_jobs
+):
+    """The gold query selects no encoded column, so its build runs no job
+    beyond the RFM quintiles' boundary sample: with the encoder in place,
+    its distinct-sets job ran over the whole lineage while the frame was
+    being built."""
+    from skiliopay_datapipeline_customer_spark.functions.churn_features import (
+        rfm_features,
+    )
+    from skiliopay_datapipeline_customer_spark.queries import all_queries
+
+    _, rfm_jobs, _ = group_jobs(
+        lambda: rfm_features(synthesize_users_raw(spark, n=1000))
+    )
+    _, gold_jobs, _ = group_jobs(
+        lambda: all_queries()["churn_features_gold"](spark, sf_dir)
+    )
+    assert rfm_jobs
+    assert len(gold_jobs) == len(rfm_jobs)

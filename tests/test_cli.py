@@ -333,17 +333,16 @@ def test_selfcheck_only_requires_distinct_stem(tmp_path):
 
 
 def test_bench_query_lists_resolve_in_registry():
-    """Every name bench.py times — headline set and scaling set — must be a
-    declared registry query: a rename that misses bench would otherwise
-    crash the driver's per-round BENCH run (KeyError at timing, after the
-    expensive warmup)."""
-    from bench import HEADLINE, SCALING_QUERIES
+    """Every name bench.py times (the headline set, which the scaling curve
+    times too) must be a declared registry query: a rename that misses
+    bench would otherwise crash the per-round BENCH run (KeyError
+    at timing, after the expensive warmup)."""
+    from bench import HEADLINE
 
     from skiliopay_datapipeline_customer_spark.queries import all_queries
 
     names = set(all_queries())
     assert set(HEADLINE) <= names, sorted(set(HEADLINE) - names)
-    assert set(SCALING_QUERIES) <= names, sorted(set(SCALING_QUERIES) - names)
 
 
 def test_bench_resolve_sf_dir_normalizes_float_tokens(tmp_path, monkeypatch):

@@ -24,8 +24,24 @@ def test_rows_only_queries_run(spark, sf_dir, name):
     assert len(df.schema.fields) > 0
 
 
+@pytest.fixture(scope="module")
+def built(spark, sf_dir):
+    """``built(name)``: the declared query's frame, built once for this
+    module's schema and plan checks (eager queries run jobs while they
+    are built)."""
+    frames: dict = {}
+
+    def get(name):
+        if name not in frames:
+            frames[name] = QUERIES[name](spark, sf_dir)
+        return frames[name]
+
+    yield get
+    frames.clear()
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_no_container_columns_in_any_declared_query(spark, sf_dir, name):
+def test_no_container_columns_in_any_declared_query(built, name):
     """Driver contract, registry-wide: the driver canonicalizes EVERY
     declared query's output (rows-only included) with a pandas
     sort_values(), which raises TypeError on list/dict cells. The r7 fix
@@ -37,7 +53,7 @@ def test_no_container_columns_in_any_declared_query(spark, sf_dir, name):
     """
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    schema = QUERIES[name](spark, sf_dir).schema
+    schema = built(name).schema
     bad = [
         f.name
         for f in schema.fields
@@ -47,6 +63,16 @@ def test_no_container_columns_in_any_declared_query(spark, sf_dir, name):
         f"{name}: container-typed output columns {bad} would crash the "
         "driver canonicalizer — flatten to scalar columns or a joined string"
     )
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_no_declared_query_plans_a_cartesian_product(built, name):
+    """Repo-wide anti-pattern sweep: no declared query may plan a
+    CartesianProduct (an unconditioned shuffle-side cross join — the
+    O(n·m) cliff at scale). Broadcast nested-loop joins against
+    scalar/metadata-sized frames are legitimate and NOT flagged."""
+    plan = built(name)._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan, name
 
 
 def test_compare_frames_rejects_list_columns():

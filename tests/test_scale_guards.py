@@ -479,30 +479,6 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark, sf_dir):
                 spark.conf.set(k, v)
 
 
-def test_no_declared_query_plans_a_cartesian_product(spark, sf_dir):
-    """Repo-wide anti-pattern sweep: no declared query may plan a
-    CartesianProduct (an unconditioned shuffle-side cross join — the
-    O(n·m) cliff at scale). Broadcast nested-loop joins against
-    scalar/metadata-sized frames are legitimate and NOT flagged."""
-    from skiliopay_datapipeline_customer_spark.queries import all_queries
-
-    offenders = []
-    for name, fn in all_queries().items():
-        try:
-            plan = (
-                fn(spark, sf_dir)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-        except Exception as e:  # noqa: BLE001 — planning must not crash
-            offenders.append((name, f"planning failed: {str(e)[:80]}"))
-            continue
-        if "CartesianProduct" in plan:
-            offenders.append((name, "CartesianProduct"))
-    assert not offenders, offenders
-
-
 def test_multi_column_cumsum_matches_single_window(spark):
     """global_cumsums_distributed: k running sums in ONE range pass equal
     the single-window transcription for every column."""

@@ -402,31 +402,38 @@ def test_ntile_distributed_equals_window_across_n_q_grid(spark):
     shape — including remainder distributions (n % q != 0) where the naive
     floor((r-1)q/n)+1 form diverges (n=6, q=4 puts sizes 2,2,1,1, not
     2,1,2,1), and q > n (bucket = rank)."""
-    from pyspark.sql import Window
+    from functools import reduce
+
+    from pyspark.sql import DataFrame, Window
 
     from skiliopay_datapipeline_customer_spark.operators.ranks import (
         ntile_distributed,
     )
 
+    qs = [1, 2, 3, 4, 10, 30]
+    order = [("v", "desc"), ("id", "asc")]
+    w = Window.orderBy(F.col("v").desc(), F.col("id").asc())
     for n in [1, 2, 3, 5, 6, 7, 10, 23]:
-        for q in [1, 2, 3, 4, 10, 30]:
-            df = spark.createDataFrame(
-                [(i, float((i * 7) % n)) for i in range(n)], "id long, v double"
-            )
-            order = [("v", "desc"), ("id", "asc")]
-            want = {
-                r["id"]: r["t"]
-                for r in df.withColumn(
-                    "t",
-                    F.ntile(q).over(
-                        Window.orderBy(F.col("v").desc(), F.col("id").asc())
-                    ),
-                ).collect()
-            }
-            got = {
-                r["id"]: r["t"]
-                for r in ntile_distributed(df, order, q, out="t").collect()
-            }
+        df = spark.createDataFrame(
+            [(i, float((i * 7) % n)) for i in range(n)], "id long, v double"
+        )
+        # every q in one job per side: one window pass with a column per q,
+        # and the six independent ntile_distributed frames as one union
+        windowed = df.select(
+            "id", *[F.ntile(q).over(w).alias(f"t{q}") for q in qs]
+        ).collect()
+        distributed = reduce(
+            DataFrame.unionByName,
+            [
+                ntile_distributed(df, order, q, out="t").select(
+                    F.lit(q).alias("q"), "id", "t"
+                )
+                for q in qs
+            ],
+        ).collect()
+        for q in qs:
+            want = {r["id"]: r[f"t{q}"] for r in windowed}
+            got = {r["id"]: r["t"] for r in distributed if r["q"] == q}
             assert got == want, f"n={n} q={q}"
 
 

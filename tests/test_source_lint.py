@@ -88,6 +88,40 @@ def test_threads_only_in_the_parallel_helper():
     assert not found, "thread use outside parallel.py:\n" + "\n".join(found)
 
 
+_JOB_READS = ("statusTracker", "getJobIdsForGroup", "getMemoryPoolMXBeans")
+
+
+def test_job_group_reads_only_in_run_record():
+    """``plans/run_record.py`` is the one place that reads job groups, the
+    status tracker and the JVM memory pools: no other file in the package,
+    ``bench.py``, ``selfcheck.py``, ``scripts/`` or ``tests/conftest.py``
+    calls them, so every count comes off one measurement path. The
+    benchmark (``perfbench/``) keeps its own reader."""
+    repo = PKG_DIR.parent
+    paths = [
+        *PKG_DIR.rglob("*.py"),
+        repo / "bench.py",
+        repo / "selfcheck.py",
+        *(repo / "scripts").rglob("*.py"),
+        repo / "tests" / "conftest.py",
+    ]
+    found = []
+    for path in sorted(paths):
+        if path == PKG_DIR / "plans" / "run_record.py":
+            continue
+        tree = ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "attr", getattr(node.func, "id", None))
+                in _JOB_READS
+            ):
+                found.append(f"{path.relative_to(repo)}:{node.lineno}")
+    assert not found, "job-group reads outside run_record.py:\n" + "\n".join(
+        found
+    )
+
+
 def test_parallel_helper_wraps_every_target():
     """Every callable ``parallel.py`` hands to a thread goes through
     ``inheritable_thread_target(...)`` at the submit call itself; without
