@@ -161,9 +161,14 @@ def _failures(*passes: dict) -> dict[str, str]:
     }
 
 
-def _write(record: str, payload: dict) -> None:
+def _write(record: str | None, payload: dict) -> None:
+    """A ``--record`` name lands in ``records/``; without one the full
+    record is the root's ``BENCH_FULL.json`` scratch."""
     repo = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(repo, record), "w") as f:
+    path = os.path.join(repo, "records", record) if record else os.path.join(
+        repo, "BENCH_FULL.json"
+    )
+    with open(path, "w") as f:
         json.dump(payload, f, indent=2)
 
 
@@ -319,14 +324,15 @@ def main(only: list[str] | None = None, record: str | None = None) -> None:
     #    builder's idle-machine runs both land here, and the last writer
     #    wins — that overwrite silently shadowed a committed record in r9
     #    AND r10. Builder-initiated records that should survive go to a
-    #    distinct committed name via --record BENCH_IDLE_r{N}.json.
+    #    distinct committed name via --record BENCH_IDLE_r{N}.json, which
+    #    lands in records/.
     # 2. the printed line degrades stepwise until it fits the capture
     #    window — first the ratios map shrinks to outliers only (the
     #    flagged list already carries the signal), then the per-query
     #    warm block drops (warm_total stays).
     # A subset run is persisted only under an explicit --record name.
     if record or not subset:
-        _write(record or "BENCH_FULL.json", out)
+        _write(record, out)
     print(_fit_line(out, record=record))
     if failed:
         raise SystemExit(_failure_report(failed))
@@ -343,7 +349,7 @@ def _fit_line(out: dict, record: str | None = None) -> str:
     2000-char stdout tail, degrading stepwise: full record → outlier-only
     ratios → drop the per-query warm block (warm_total stays). The full
     record always lives in the persisted file (BENCH_FULL.json, or the
-    --record name); the per-query records live only there."""
+    --record name under records/); the per-query records live only there."""
     out = {k: v for k, v in out.items() if k != "query_records"}
     line = json.dumps(out)
     # a subset run persists no record unless --record names one, so its
@@ -351,7 +357,7 @@ def _fit_line(out: dict, record: str | None = None) -> str:
     full_ref = (
         "full map not persisted (subset run)"
         if "subset" in out and not record
-        else f"full map in {record or 'BENCH_FULL.json'}"
+        else f"full map in {'records/' + record if record else 'BENCH_FULL.json'}"
     )
     if len(line) > _DRIVER_TAIL_BUDGET:
         slim = dict(out)
@@ -608,8 +614,8 @@ if __name__ == "__main__":
         only = [q for q in argv[argv.index("--queries") + 1].split(",") if q]
     record = None
     if "--record" in argv:
-        # a committed record (e.g. BENCH_IDLE_r11.json) that the per-round
-        # BENCH run can never overwrite
+        # a committed record (e.g. records/BENCH_IDLE_r11.json) that the
+        # per-round BENCH run can never overwrite
         record = os.path.basename(argv[argv.index("--record") + 1])
     if "--scaling" in argv:
         sfs = None

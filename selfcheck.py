@@ -5,13 +5,13 @@ of the registry's evidence otherwise lives only inside a 15-minute pytest
 sweep. This script re-runs the driver's exact contract (bare SparkSession,
 sf0.01, row-count + schema + order-insensitive value compare via
 ``parity.compare_frames``) over ALL declared queries and writes
-``SELFCHECK_r{N}.json`` in the same shape as ``CORRECTNESS_r{N}.json`` —
+``records/SELFCHECK_r{N}.json`` in the same shape as ``CORRECTNESS_r{N}.json`` —
 one record per query, rows-only queries recorded as ``err="no_oracle"`` —
 so the judge can diff driver vs self signals file-to-file.
 
-    python selfcheck.py 5                 # writes SELFCHECK_r05.json
+    python selfcheck.py 5                 # writes records/SELFCHECK_r05.json
     python selfcheck.py 5 --sf-dir /root/testdata/sf0.01
-    python selfcheck.py 6 --adversarial   # hostile configs → SELFCHECK_ADV_r06.json
+    python selfcheck.py 6 --adversarial   # hostile configs → records/SELFCHECK_ADV_r06.json
 """
 
 from __future__ import annotations
@@ -163,6 +163,7 @@ def main(argv: list[str] | None = None) -> int:
     stem = args.stem or ("SELFCHECK_ADV" if args.adversarial else "SELFCHECK")
     path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)),
+        "records",
         f"{stem}_r{args.round_num:02d}.json",
     )
     with open(path, "w") as f:

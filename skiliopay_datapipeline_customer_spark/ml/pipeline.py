@@ -44,7 +44,9 @@ def train_classifier(
     **hp,
 ):
     """Returns (pipeline_model_like, transform) — model fit on assembled
-    vectors. hp passes through (maxDepth, maxIter/numTrees, stepSize...)."""
+    vectors. hp passes through (maxDepth, maxIter/numTrees, stepSize...).
+    The fit runs at call time (kept; SCALE.md, "Spark actions at build
+    time"): the model is data, and ``transform`` needs it."""
     asm = _assembler(feature_cols)
     assembled = asm.transform(train)
     if model_type == "gbt":

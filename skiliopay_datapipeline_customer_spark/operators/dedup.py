@@ -31,16 +31,12 @@ def materialize(df: DataFrame, *intermediates: DataFrame) -> DataFrame:
     """Run ``df``'s plan once, pin the (small) result via localCheckpoint,
     and release the persisted intermediates that fed it.
 
-    Cache hygiene for candidate-pair pipelines: their internal persists are
-    needed only while the plan runs (the signature/bucket frames feed a size
-    agg plus both self-join sides), but a caller holding the lazy result
-    would leak that storage for the whole session — a 22-query bench run
-    accumulates gigabytes of dead cache ("Asked to cache already cached
-    data" warnings). The result frames here are pair lists, orders of
-    magnitude smaller than their inputs, so pinning them is cheap; the
-    checkpointed RDD is released by the ContextCleaner when the result is
-    garbage collected, unlike CacheManager entries which live until an
-    explicit unpersist.
+    Only two operators keep this pin (SCALE.md, "Spark actions at build
+    time"): :func:`ngram_jaccard_pairs`, whose caches must be populated
+    before its joins are planned, and the distributed tiers of
+    :func:`connected_components`, whose rounds truncate lineage. Every
+    other operator of the family returns a lazy plan. The checkpointed RDD
+    is released by the ContextCleaner once the result is garbage collected.
     """
     out = df.localCheckpoint(eager=True)
     for d in intermediates:
@@ -209,14 +205,13 @@ def minhash_lsh_candidates(
     band), which runs first in the ladder.
     """
     banded = minhash_band_buckets(df, text_col, id_col, num_hashes, bands, shingle_n)
-    raw, capped = capped_bucket_pairs(banded, id_col, max_bucket_size)
-    pairs = raw.groupBy("id_a", "id_b").agg(F.count("*").alias("n_bands"))
-    return materialize(pairs, capped)
+    raw = capped_bucket_pairs(banded, id_col, max_bucket_size)
+    return raw.groupBy("id_a", "id_b").agg(F.count("*").alias("n_bands"))
 
 
 def capped_bucket_pairs(
     bb: DataFrame, id_col: str, max_bucket_size: int
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """(id, band, bucket) rows → candidate id pairs (``id_a < id_b``), one
     output row per shared bucket — the self-join core both LSH families
     (minhash text dedup here, random-plane embedding dedup in
@@ -224,27 +219,32 @@ def capped_bucket_pairs(
 
     Bucket-size cap as a count window over the self-join key, not a
     groupBy+join-back: ONE exchange on (band, bucket) that the self-join
-    then REUSES (the window leaves both cached sides hash-partitioned on
-    exactly the join key, so the sort-merge join adds no new shuffle) — vs
-    three exchanges for the agg + two join sides. Persisted AFTER the
-    window so the upstream signature/projection pipeline + the exchange run
-    once for both sides. Buckets over ``max_bucket_size`` are dropped
-    before the join (degenerate-mass skew guard). Returns
-    ``(pairs, capped)``; the caller releases the persisted banding frame
-    via ``materialize(result, capped)`` once its plan has run.
+    then REUSES (the window leaves both sides hash-partitioned on exactly
+    the join key, so the sort-merge join adds no new shuffle) — vs three
+    exchanges for the agg + two join sides. Both sides are the same plan,
+    so exchange reuse runs the upstream signature/projection pipeline and
+    the exchange once per action; nothing is persisted. The exchange is an
+    explicit ``repartition`` to the session's shuffle partition count: the
+    banded rows are small, so AQE would coalesce an ordinary exchange to
+    one partition, and the candidate join and everything the caller
+    chains onto it (the cosine verify of ``lsh_dup_pairs``) would then run
+    as ONE task (measured at sf0.1: a 5.8 s single-task verify stage that
+    takes 1.9 s over 8 partitions). Buckets over ``max_bucket_size`` are
+    dropped before the join (degenerate-mass skew guard).
     """
     from pyspark.sql import Window
 
     wb = Window.partitionBy("band", "bucket")
+    nparts = int(bb.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     capped = (
-        bb.withColumn("_bsz", F.count(F.lit(1)).over(wb))
+        bb.repartition(nparts, "band", "bucket")
+        .withColumn("_bsz", F.count(F.lit(1)).over(wb))
         .filter(F.col("_bsz") <= max_bucket_size)
         .drop("_bsz")
-        .persist()
     )
     a = capped.alias("a")
     b = capped.alias("b")
-    pairs = a.join(
+    return a.join(
         b,
         (F.col("a.band") == F.col("b.band"))
         & (F.col("a.bucket") == F.col("b.bucket"))
@@ -253,7 +253,6 @@ def capped_bucket_pairs(
         F.col(f"a.{id_col}").alias("id_a"),
         F.col(f"b.{id_col}").alias("id_b"),
     )
-    return pairs, capped
 
 
 def incremental_lsh_candidates(
@@ -277,7 +276,10 @@ def incremental_lsh_candidates(
     document — same bucket caps, same band counts — while touching only
     O(batch) signature work and a bucket-keyed join against the store
     (partition-pruned on band; historical text is never re-shingled,
-    re-hashed, or re-scanned).
+    re-hashed, or re-scanned). Both frames are lazy and share the batch's
+    signature plan: a caller that runs both persists ``store_additions``
+    first (``streaming.sinks.dedup_ingest`` does), so the signatures are
+    computed once per batch.
 
     This is the batch kernel of streaming dedup-at-ingestion: wrap it in
     ``foreachBatch`` and the store becomes the cross-trigger state,
@@ -299,13 +301,12 @@ def incremental_bucket_candidates(
     store. Split out so the portable-md5 banding tier
     (:func:`minhash_band_buckets_md5` — oracle-checkable) and the xxhash64
     production tier share one combinator."""
-    nb = new_buckets.persist()
-    combined = nb.union(store.select(id_col, "band", "bucket"))
+    combined = new_buckets.union(store.select(id_col, "band", "bucket"))
     # bucket caps must count ALL members (store + batch) or the capped set
     # would diverge from the full-corpus run's
     sizes = combined.groupBy("band", "bucket").agg(F.count("*").alias("_bsz"))
     ok = sizes.filter(F.col("_bsz") <= max_bucket_size)
-    a = nb.join(ok, ["band", "bucket"]).drop("_bsz").alias("a")
+    a = new_buckets.join(ok, ["band", "bucket"]).drop("_bsz").alias("a")
     b = combined.join(ok, ["band", "bucket"]).drop("_bsz").alias("b")
     pairs = (
         a.join(
@@ -323,14 +324,7 @@ def incremental_bucket_candidates(
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_bands"))
     )
-    pairs = materialize(pairs)
-    # store_additions reuses the PERSISTED bucket frame (pinned batch-sized
-    # via localCheckpoint so it survives the unpersist) — rebuilding the
-    # signature pipeline from new_docs would double the dominant per-batch
-    # cost and re-read the batch source
-    additions = nb.localCheckpoint(eager=True)
-    nb.unpersist()
-    return pairs, additions
+    return pairs, new_buckets
 
 
 def ngram_jaccard_pairs(
@@ -364,13 +358,15 @@ def ngram_jaccard_pairs(
     ids. Still the verification tier at 100 TB (run post-LSH); prefix
     filtering is what makes the full-corpus form survive medium scale.
 
-    NOTE — calling this function runs an EAGER Spark job (a count() that
-    materializes the persisted gram/prefix caches before the joins are
-    planned, so actual InMemoryRelation sizes — not Catalyst's
-    under-threshold estimates for lazy HOF frames — drive the
-    broadcast-vs-SMJ choice; the r11 sf1 sweep measured corpus-sized
-    broadcasts OOM without it). Callers that only want to BUILD a plan
-    still pay that job at call time.
+    Build-time actions (kept; SCALE.md, "Spark actions at build time"):
+    calling this runs a count() that populates the persisted gram/prefix
+    caches before the joins are planned, so actual InMemoryRelation sizes
+    — not Catalyst's under-threshold estimates for lazy HOF frames —
+    drive the broadcast-vs-SMJ choice (the r11 sf1 sweep measured
+    corpus-sized broadcasts OOM the 1g heap without it), and then pins
+    the verified pairs with :func:`materialize` so the two caches can be
+    released. This is the one pair operator of the family that is not
+    lazy.
     """
     from pyspark.sql import Window
 
@@ -605,9 +601,8 @@ def minhash_lsh_candidates_md5(
     banded = minhash_band_buckets_md5(
         df, text_col, id_col, num_hashes, bands, shingle_n
     )
-    raw, capped = capped_bucket_pairs(banded, id_col, max_bucket_size)
-    pairs = raw.groupBy("id_a", "id_b").agg(F.count("*").alias("n_bands"))
-    return materialize(pairs, capped)
+    raw = capped_bucket_pairs(banded, id_col, max_bucket_size)
+    return raw.groupBy("id_a", "id_b").agg(F.count("*").alias("n_bands"))
 
 
 def simhash_signatures_md5(
@@ -672,7 +667,8 @@ def _star_components(
     id. Returns ``(star_edges, leftover)`` where star_edges is
     (node, cluster) for every non-root node and leftover is the change
     count at loop exit (0 = converged). The star_edges frame holds a
-    persist/checkpoint pin — callers release it via ``materialize``.
+    checkpoint pin — :func:`connected_components` releases it via
+    ``materialize``.
 
     Each round is two groupBy-min + join passes over the edge list (same
     shuffle key both phases); convergence is an exact set comparison
@@ -755,6 +751,13 @@ def connected_components(
     O(graph diameter) rounds (near-dup clusters are dense, so diameter is
     tiny). Returns (node, cluster) with cluster = min reachable id — the
     canonical-document rule (keep min id, drop the rest).
+
+    Build-time actions (kept; SCALE.md, "Spark actions at build time"):
+    the tier probe below always runs, and the distributed tiers run
+    their rounds at call time — each round's convergence count decides
+    whether another round is planned, and lineage truncation needs the
+    checkpoints — then pin the labels with :func:`materialize`. The
+    small-graph tier returns a driver-built frame and pins nothing.
 
     Scale posture: each round is one join + one groupBy on the edge list
     (both shuffles on node id); the driver only checks a convergence COUNT

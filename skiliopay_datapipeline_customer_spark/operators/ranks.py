@@ -234,7 +234,9 @@ def _sample(df: DataFrame, norms, nparts: int) -> tuple[list[tuple], list]:
     specs' key columns (TakeOrderedAndProject — per-partition top-K then a
     driver merge, no full sort): the sampled key tuples, in
     :func:`_key_union` order, and the key types. Fewer than
-    ``_sample_size(nparts)`` tuples means the frame has no other rows."""
+    ``_sample_size(nparts)`` tuples means the frame has no other rows.
+    A build-time action (kept; SCALE.md, "Spark actions at build time"):
+    the range boundaries are literals of the plan it feeds."""
     exprs, _ = _key_union(norms)
     keys, types = _sample_keys(df, [(c, True) for c in exprs])
     rows = keys.orderBy(F.xxhash64(*keys.columns)).limit(_sample_size(nparts))

@@ -346,6 +346,10 @@ def lsh_dup_pairs(
     column-pruned count() job; the declared ORACLE queries keep the
     pinned 16/4 family because their DuckDB SQL embeds the same plane
     literals (a runtime-derived count can't live in a static oracle).
+    Either way the function runs that one count at call time (kept;
+    SCALE.md, "Spark actions at build time"): it sizes the family or
+    gates the pre-verify distinct below, and the rest of the plan is
+    lazy.
     At 500 rows with ``recall_anchor=0.9`` auto derives exactly the
     pinned 16/4 family (pytest-pinned equal).
 
@@ -421,7 +425,7 @@ def lsh_dup_pairs(
     # would shuffle dim floats per candidate ROW; they re-attach at the
     # verify tier (measured r13: the carried-vector form was SLOWER at
     # sf0.1 — the verify joins broadcast the small vecs frame).
-    cand, capped = capped_bucket_pairs(bb, id_col, max_bucket_size)
+    cand = capped_bucket_pairs(bb, id_col, max_bucket_size)
     # Dedup candidates BEFORE the verify tier when buckets are DEEP (r13
     # — refines the r12 "dedup only after the filter" rule on
     # measurement): multi-band collisions stop being rare once buckets
@@ -470,7 +474,7 @@ def lsh_dup_pairs(
         dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")),
         6,
     )
-    verified = (
+    return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
         .select("id_a", "id_b", sim.alias("cos_sim"))
@@ -481,9 +485,6 @@ def lsh_dup_pairs(
         # pair-list-sized, so the exchange is noise)
         .dropDuplicates(["id_a", "id_b"])
     )
-    from .dedup import materialize
-
-    return materialize(verified, capped)
 
 
 def _band_buckets_udf(planes_by_band: list[list[list[float]]]):

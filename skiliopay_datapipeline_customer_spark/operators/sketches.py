@@ -93,10 +93,10 @@ def cms_heavy_hitters(
 
     1. Build the d×w sketch (bounded shuffle) and COLLECT it — the grid
        is ≤ depth·width rows BY CONSTRUCTION (model-sized at any corpus
-       scale; same discipline as the centroid/codebook collects). NOTE:
-       this makes the call an eager Spark action (the sketch job runs at
-       call time, like ngram_jaccard_pairs' stats materialization) — the
-       returned frame itself stays lazy.
+       scale; same discipline as the centroid/codebook collects). This is
+       a build-time action (kept; SCALE.md, "Spark actions at build
+       time"): the grid becomes literals in the plan, so it must exist
+       before the plan does. The returned frame itself stays lazy.
     2. The grand total and threshold are derived driver-side from row 0
        of the grid (each occurrence increments exactly one bucket per
        row, so any row's bucket counts sum to the total).

@@ -198,20 +198,25 @@ def shared_span_pairs(
     requires that many distinct rare fingerprints per pair (one shared
     8-gram is noise on a small vocabulary; spans share many).
 
-    Shuffle profile: fingerprint agg (per doc) → document-frequency agg →
-    self-join on fingerprint (rare ones only) → pair count agg. All
-    bounded: each rare fingerprint contributes ≤ C(max_df, 2) pairs.
+    Shuffle profile: fingerprint agg (per doc) → document-frequency count
+    window on the fingerprint → self-join on fingerprint (rare ones only;
+    both sides reuse the window's exchange, so the fingerprint pipeline
+    runs once per action) → pair count agg. All bounded: each rare
+    fingerprint contributes ≤ C(max_df, 2) pairs.
     """
-    from .dedup import materialize
+    from pyspark.sql import Window
 
-    fps = rolling_fingerprint_rows(df, text_col, id_col, k=k, w=w).persist()
-    dfreq = fps.groupBy("fingerprint").agg(F.count(F.lit(1)).alias("_df"))
-    rare = fps.join(
-        dfreq.filter(F.col("_df") <= max_df), "fingerprint"
-    ).drop("_df")
+    rare = (
+        rolling_fingerprint_rows(df, text_col, id_col, k=k, w=w)
+        .withColumn(
+            "_df", F.count(F.lit(1)).over(Window.partitionBy("fingerprint"))
+        )
+        .filter(F.col("_df") <= max_df)
+        .drop("_df")
+    )
     a = rare.alias("a")
     b = rare.alias("b")
-    pairs = (
+    return (
         a.join(
             b,
             (F.col("a.fingerprint") == F.col("b.fingerprint"))
@@ -224,7 +229,6 @@ def shared_span_pairs(
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
-    return materialize(pairs, fps)
 
 
 def repetition_metrics(df, text_col: str = "text", id_col: str = "doc_id"):

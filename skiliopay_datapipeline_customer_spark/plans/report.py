@@ -94,8 +94,10 @@ def plan_digest(df: DataFrame) -> dict:
 
     Returns operator counts (see ``_NODES``), `whole_stage_codegen` span
     count, `pushed_filters` (how many scans report a non-empty
-    PushedFilters), and boolean smells: `has_cartesian` (a cross/nested-loop
-    join survived planning) and `single_partition_window` (a window with no
+    PushedFilters), and boolean smells: `has_cartesian` (a CartesianProduct
+    node survived planning — a broadcast nested-loop join, such as a
+    one-row stats frame crossed back onto its input, counts only under
+    `nested_loop_joins`) and `single_partition_window` (a window with no
     PARTITION BY — the funnel-everything-through-one-task shape the
     distributed rank forms exist to avoid).
     """
@@ -135,9 +137,7 @@ def plan_digest(df: DataFrame) -> dict:
             if _has_caller_partition_filter(m)
         ]
     )
-    out["has_cartesian"] = bool(
-        re.search(r"CartesianProduct|BroadcastNestedLoopJoin", text)
-    )
+    out["has_cartesian"] = "CartesianProduct" in text
     # formatted explain renders an un-partitioned window's spec starting
     # directly with the ORDER BY list: "Arguments: [col ASC ..." with no
     # partition expressions before it is the single-task smell; partitioned

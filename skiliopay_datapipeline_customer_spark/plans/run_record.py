@@ -41,30 +41,26 @@ def hygiene(spark) -> None:
     """Inter-query resource hygiene for long-lived sessions.
 
     The sf1 r11 record measured the warm pass SLOWER than cold (236 s vs
-    189 s): 50 consecutive heavy executions in one JVM accumulate cache
-    blocks + broadcast cleanup debt until GC pressure halves throughput —
-    a real operational finding at the 100 TB posture, not a bench
-    artifact. Between queries: drop the Python-side frame refs
-    (gc.collect lets the ContextCleaner queue their JVM blocks), clear
-    the cache manager (queries persist intermediates they never share
-    across query boundaries), and nudge a JVM GC so the ContextCleaner's
-    weak references actually fire. Cost at sf0.1: ~10 ms/query — noise
-    next to the accumulation it prevents at sf1.
+    189 s): consecutive heavy executions in one JVM accumulate cache
+    blocks + broadcast cleanup debt until GC pressure halves throughput.
+    Between queries: drop the Python-side frame refs (gc.collect lets the
+    ContextCleaner queue their JVM blocks), clear the cache manager, and
+    unpersist the persistent RDDs still alive.
 
-    The explicit persistent-RDD unpersist exists because the gc-based
-    chain CANNOT release the newest localCheckpoint pin (measured r12 via
-    memory-pool MXBeans at sf1: one stored RDD holding ~480 MB of G1 Old
-    Gen survived gc.collect + System.gc through multiple hygiene cycles,
-    old-generation GC time grew 1.5 s → 15.5 s over three identical
-    dedup_clusters runs, and the pin dropped only during the NEXT query's
-    natural GCs). Mechanism: Python's gc only QUEUES the py4j detach
-    (batched, async), so the System.gc right after it fires before the
-    JVM-side reference is released and the ContextCleaner's weak ref
-    never enqueues — a one-cycle-delayed cleanup by construction. Safe
-    here because hygiene runs BETWEEN bench queries, when no live frame
-    depends on a checkpoint; do not call it while holding a
-    localCheckpoint-derived frame (its blocks are unrecoverable — the
-    lineage is truncated).
+    Those RDDs are the two result pins SCALE.md's "Spark actions at build
+    time" table keeps (``ngram_jaccard_pairs`` and the distributed
+    connected-components tiers); every other operator is lazy and pins
+    nothing. The gc-based chain cannot release the newest localCheckpoint
+    pin: Python's gc only QUEUES the py4j detach, so the ContextCleaner
+    frees it one query late (measured r12 at sf1: one stored RDD held
+    ~480 MB of old gen across hygiene cycles). Safe here because hygiene
+    runs BETWEEN queries; do not call it while holding a
+    localCheckpoint-derived frame (its lineage is truncated).
+    The closing ``System.gc()`` is a full collection (~180 ms per call)
+    and stays: measured at sf1 (the dedup/similarity/selection queries,
+    4 cpus, 8g heap) without it, old gen after hygiene grew from
+    0.2-1.0 GB to 1.7-2.7 GB and the warm pass was still slower than
+    the cold one (236 s vs 218 s; 246 s vs 216 s with it).
     """
     gc.collect()
     spark.catalog.clearCache()

@@ -563,11 +563,11 @@ def simhash_md5_fingerprints(spark, sf_dir):
     """,
 )
 def simhash_near_pairs(spark, sf_dir):
-    # the fingerprint aggregation feeds BOTH sides of the chunk self-join —
-    # persist it once instead of recomputing the md5+32-sum pipeline twice
+    # the fingerprint aggregation feeds BOTH sides of the chunk self-join;
+    # both sides reuse its exchange, so the md5+32-sum pipeline runs once
     fp = D.simhash_signatures_md5(
         table(spark, sf_dir, "documents"), shingle_n=2
-    ).persist()
+    )
     # posexplode: pos IS the chunk index (same rows as the struct-array
     # explode this replaces), parsed JVM-side in one round trip (r13)
     chunks = fp.select(
@@ -597,12 +597,11 @@ def simhash_near_pairs(spark, sf_dir):
         .distinct()
     )
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    pairs = (
+    return (
         cand.filter(hamming <= 3)
         .select("id_a", "id_b", hamming.cast("int").alias("hamming"))
         .orderBy("id_a", "id_b")
     )
-    return D.materialize(pairs, fp)
 
 
 # Dedup cluster assignment: connected components over the shingle-Jaccard

@@ -51,7 +51,7 @@ def churn_predictions(spark, sf_dir):
 
     ds = stratified_split(
         churn_dataset(spark, sf_dir), LABEL_COL, key_col="c_custkey"
-    ).cache()
+    )
     train = ds.filter(F.col("_split") == 0)
     test = ds.filter(F.col("_split") == 2)
     _, transform = train_classifier(
@@ -59,7 +59,7 @@ def churn_predictions(spark, sf_dir):
     )
     from pyspark.ml.functions import vector_to_array
 
-    pred = (
+    return (
         transform(test)
         .select(
             "c_custkey",
@@ -69,13 +69,6 @@ def churn_predictions(spark, sf_dir):
         )
         .orderBy("c_custkey")
     )
-    # pin the (eval-split-sized) scores and release the cached dataset —
-    # a caller holding the lazy frame would otherwise leak the split cache
-    # for the whole session, one copy per invocation (risk_tier_counts and
-    # calibration_bins both re-enter here)
-    from ..operators.dedup import materialize
-
-    return materialize(pred, ds)
 
 
 # Embedding-space reduction/clustering (LLM-pipeline family). Both fits are

@@ -271,6 +271,9 @@ def dedup_ingest(
         pairs, additions = incremental_lsh_candidates(
             batch_df, store, id_col=id_col, **lsh_kwargs
         )
+        # both writes below read the batch's band buckets: cache them so
+        # the signature pipeline runs once per batch
+        additions = additions.persist()
         # a new doc loses to ANY historical match, or to a smaller batch id
         sides = pairs.select(
             F.col("id_a").alias("x"), F.col("id_b").alias("o")
@@ -291,6 +294,7 @@ def dedup_ingest(
         additions.write.mode("overwrite").partitionBy("band").parquet(
             os.path.join(store_dir, f"batch={batch_id}")
         )
+        additions.unpersist()
         batch_df.unpersist()
 
     return merge

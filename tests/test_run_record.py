@@ -118,3 +118,21 @@ def test_fit_line_leaves_per_query_records_in_the_file():
     assert "query_records" not in parsed
     assert parsed["value"] == 32.084 and parsed["queries"] == times
     assert "query_records" in out  # the caller's record keeps them
+
+
+# The headline queries that still leave a persisted RDD behind: the ones
+# SCALE.md's "Spark actions at build time" table keeps a pin for. Every
+# other headline query must return a lazy plan that pins nothing.
+KEPT_PINS = {"ngram_jaccard_dups", "dedup_clusters"}
+
+
+def test_only_the_kept_pins_survive_a_headline_query(spark, sf_dir):
+    from skiliopay_datapipeline_customer_spark.queries import all_queries
+
+    queries = all_queries()
+    recs = bench.timed_pass(spark, queries, bench.HEADLINE, sf_dir)
+    assert not bench._failures(recs)
+    pinned = {name for name, rec in recs.items() if rec["pins"]}
+    assert pinned == KEPT_PINS
+    # lsh_dup_pairs builds with the occupancy-gate count as its only action
+    assert recs["lsh_dup_pairs"]["build_jobs"] <= 2

@@ -556,7 +556,8 @@ def test_registry_rotation_invariants():
 def test_plan_digest_reports_shapes_and_smells(spark, sf_dir):
     """plan_digest turns .explain('formatted') into assertable counts: the
     flagship broadcasts its dims with no cartesian/smells; an un-partitioned
-    window and a cross join are flagged."""
+    window is flagged, a small broadcast cross join counts as a nested-loop
+    join, and only a CartesianProduct node reads as cartesian."""
     from pyspark.sql import Window
 
     from skiliopay_datapipeline_customer_spark.plans.report import plan_digest
@@ -580,7 +581,16 @@ def test_plan_digest_reports_shapes_and_smells(spark, sf_dir):
         F.row_number().over(Window.partitionBy("user_id").orderBy("event_id")),
     )
     assert not plan_digest(wp)["single_partition_window"]
-    assert plan_digest(ev.limit(3).crossJoin(ev.limit(2)))["has_cartesian"]
+    small_cross = plan_digest(ev.limit(3).crossJoin(ev.limit(2)))
+    assert small_cross["nested_loop_joins"] >= 1
+    assert not small_cross["has_cartesian"]
+    # with broadcasting off, a cross join plans as a real CartesianProduct
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        assert plan_digest(ev.crossJoin(ev.select("event_id")))["has_cartesian"]
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_partition_filter_strip_excludes_dpp_only_lists():
