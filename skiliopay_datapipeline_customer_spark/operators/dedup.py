@@ -31,12 +31,15 @@ def materialize(df: DataFrame, *intermediates: DataFrame) -> DataFrame:
     """Run ``df``'s plan once, pin the (small) result via localCheckpoint,
     and release the persisted intermediates that fed it.
 
-    Only two operators keep this pin (SCALE.md, "Spark actions at build
-    time"): :func:`ngram_jaccard_pairs`, whose caches must be populated
-    before its joins are planned, and the distributed tiers of
-    :func:`connected_components`, whose rounds truncate lineage. Every
-    other operator of the family returns a lazy plan. The checkpointed RDD
-    is released by the ContextCleaner once the result is garbage collected.
+    The callers that keep this pin are listed in SCALE.md, "Spark
+    actions at build time": :func:`ngram_jaccard_pairs`, whose caches
+    must be populated before its joins are planned; the distributed
+    tiers of :func:`connected_components`, whose rounds truncate
+    lineage; and the ones that measured faster pinned than lazy —
+    ``similarity.lsh_dup_pairs``, curated_selection_pipeline, and the
+    bigram LM scorer and DSIR when they build their own occurrence
+    frame. Every other operator of the family returns a lazy plan. The checkpointed RDD is
+    released by the ContextCleaner once the result is garbage collected.
     """
     out = df.localCheckpoint(eager=True)
     for d in intermediates:

@@ -38,7 +38,6 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..io import fan_out
 from .dedup import shingles_from_tokens, tokens
 
 # ---------------------------------------------------------------------------
@@ -79,64 +78,49 @@ def bigram_rows(
     return out
 
 
-def bigram_counts(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, gram, n) — each document's bigram counts: :func:`bigram_rows`
-    aggregated on (id, gram), the one frame every consumer of the corpus
-    bigrams reads. Readers whose plans below their joins stay identical
-    share its exchange within an action, so the interpreted
-    tokenize+zip_with+explode kernel runs once for all of them."""
-    # fan_out: the tokenize+explode kernel is the expensive stage; a
-    # one-row-group scan would otherwise run it on a single core
-    occurrences = bigram_rows(
-        fan_out(df.select(id_col, text_col)), text_col, id_col, with_w1=False
-    )
-    return (
-        occurrences.groupBy(id_col, "gram")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def bigram_lm_doc_scores(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", grams: DataFrame | None = None
 ) -> DataFrame:
     """Per-doc mean add-one-smoothed bigram log-probability.
 
-    Plan: the corpus explodes into the per-doc bigram counts
-    (:func:`bigram_counts`); everything else is model-sized. That one
-    aggregate feeds both the gram-count shuffle (c2, vocab²-bounded) and
-    the scoring join, which share its exchange (nothing is persisted);
-    the vocab count reads c2's grams only, so the optimizer drops its
-    sums and that reader runs the kernel once more. The head counts c1 derive FROM c2 by re-aggregating its
-    grams on their first word — counting bigram occurrences by gram then
-    summing per head ≡ counting by head directly. The unigram vocab size
-    also derives from c2's gram words (every token of a ≥2-token doc
-    appears in some bigram) plus a tokenize-only pass over the <2-token
-    docs (no full-corpus explode; empty/1-token texts still count their
-    token toward V, matching the oracle's unnest-all semantics). The
-    single (gram, n2, n1) model frame broadcasts back onto the count
+    Plan (r12 rewrite — the corpus explodes ONCE, everything else is
+    model-sized): one PERSISTED bigram explode feeds both the gram-count
+    shuffle (c2, partial-aggregated, vocab²-bounded) and the scoring
+    join — without the persist the two subtrees each re-ran the
+    tokenize+zip_with+explode kernel (interpreted higher-order
+    functions, the dominant map cost) inside the same action. The head
+    counts c1 derive FROM c2 by re-aggregating its grams on their first
+    word — counting bigram occurrences by gram then summing per head ≡
+    counting by head directly, so the r11 form's SECOND full corpus
+    explode+shuffle bought nothing. The unigram vocab size also derives
+    from c2's gram words (every token of a ≥2-token doc appears in some
+    bigram) plus a tokenize-only pass over the <2-token docs (no
+    full-corpus explode; empty/1-token texts still count their token
+    toward V, matching the oracle's unnest-all semantics). The single
+    (gram, n2, n1) model frame broadcasts back onto the occurrence
     frame — one join, no per-occurrence w1 split — and the corpus
-    shuffles on ``id_col`` once more, partial-aggregated. Counts stay
-    exact: n1 sums integer-valued doubles well under 2^53.
+    shuffles once, on ``id_col``. Counts stay exact: n1 sums
+    integer-valued doubles well under 2^53.
 
-    ``grams``: an optional pre-built ``bigram_counts`` frame — pipeline
-    capstones that feed the same counts to another stage pass it here so
-    the corpus tokenizes once across stages.
+    ``grams``: an optional pre-built (id_col, gram) occurrence frame
+    (``bigram_rows(..., with_w1=False)`` shape) — pipeline capstones
+    that already hold the exploded frame pass it here so the corpus
+    tokenizes once across stages. When given, the caller owns its
+    lifecycle (persist/release); when omitted this function persists
+    its own and releases it via ``materialize`` (the result is one row
+    per scored doc — the same class of frame the dedup pipelines pin).
+    With ``grams=None`` calling this runs the scoring plan at call time
+    (kept; SCALE.md, "Spark actions at build time"): the lazy form, whose
+    readers could share only some of the kernel's exchanges, measured
+    1.4-1.7x slower at sf0.1.
     """
-    big = bigram_counts(df, text_col, id_col) if grams is None else grams
-    c2 = big.groupBy("gram").agg(F.sum("n").cast("double").alias("n2"))
+    own = grams is None
+    big = bigram_rows(df, text_col, id_col, with_w1=False).persist() if own else grams
+    c2 = big.groupBy("gram").agg(F.count(F.lit(1)).cast("double").alias("n2"))
     w1 = F.split(F.col("gram"), " ").getItem(0).alias("w1")
     c1 = c2.select(w1, "n2").groupBy("w1").agg(F.sum("n2").alias("n1"))
-    # LEFT joins here and below, equal to inner ones (every w1 and gram
-    # of the counts has its c1 and model row): an inner join makes the
-    # optimizer push an inferred not-null filter into the counts side of
-    # that one reader, and the counts' readers then stop sharing their
-    # exchange
     model = (
-        c2.select("gram", w1, "n2")
-        .join(c1, "w1", "left")
-        .select("gram", "n2", "n1")
+        c2.select("gram", w1, "n2").join(c1, "w1").select("gram", "n2", "n1")
     )
     gram_words = c2.select(F.explode(F.split(F.col("gram"), " ")).alias("tok"))
     short_doc_words = (
@@ -148,16 +132,23 @@ def bigram_lm_doc_scores(
         gram_words.unionByName(short_doc_words)
         .agg(F.countDistinct("tok").cast("double").alias("vsz"))
     )
-    logp = F.log((F.col("n2") + 1.0) / (F.col("n1") + F.col("vsz")))
-    return (
-        big.join(F.broadcast(model), "gram", "left")
+    scores = (
+        big.join(F.broadcast(model), "gram")
         .crossJoin(F.broadcast(vocab))
         .groupBy(id_col)
         .agg(
-            F.sum("n").alias("n_bigrams"),
-            (F.sum(F.col("n") * logp) / F.sum("n")).alias("mean_bigram_logprob"),
+            F.count(F.lit(1)).alias("n_bigrams"),
+            (
+                F.sum(F.log((F.col("n2") + 1.0) / (F.col("n1") + F.col("vsz"))))
+                / F.count(F.lit(1))
+            ).alias("mean_bigram_logprob"),
         )
     )
+    if own:
+        from .dedup import materialize
+
+        return materialize(scores, big)
+    return scores
 
 
 # ---------------------------------------------------------------------------
@@ -274,7 +265,7 @@ def nb_score(
 
 def dsir_weights(
     df: DataFrame | None,
-    target_pred=None,
+    target_pred,
     n_buckets: int = 1024,
     shingle_n: int = 2,
     text_col: str = "text",
@@ -285,31 +276,31 @@ def dsir_weights(
     target slice defined by ``target_pred`` (a boolean Column over df).
 
     Both histograms are B-row broadcast frames; the corpus side is one
-    map-side explode + hash into per-(doc, bucket) counts. Those counts
-    feed BOTH the histogram shuffle and the per-doc weight join, which
-    share their exchange, so the interpreted tokenize+shingle explode runs
-    once per action with nothing persisted. At 100 TB the target
-    histogram would train on a sample — the math only needs bucket
-    FREQUENCIES, so a uniform sample is unbiased.
+    map-side explode + hash and one per-doc aggregate. At 100 TB the
+    target histogram would train on a sample — the math only needs
+    bucket FREQUENCIES, so a uniform sample is unbiased.
 
-    ``grams``: an optional pre-built (id_col, _is_target, gram, n) frame
-    of per-doc gram counts — capstones that already hold the 2-gram
-    counts (``bigram_counts`` emits the identical space-joined grams) pass
-    it here so their corpus tokenizes once across pipeline stages;
-    ``df``/``target_pred`` are unused then (pass None).
+    The bucketed occurrence frame feeds BOTH the histogram shuffle and
+    the per-doc weight join. ``grams``: an optional pre-built (id_col,
+    _is_target, gram) occurrence frame — capstones that already hold an
+    exploded 2-gram frame (``bigram_rows`` emits the identical
+    space-joined grams) pass it here so their corpus tokenizes once
+    across pipeline stages; ``df``/``target_pred`` are unused then (pass
+    None), the result is lazy and the caller owns the frame's lifecycle
+    (persist/release). When omitted this function persists its own
+    bucketed occurrences so the interpreted tokenize+shingle explode runs
+    once per action, and releases them via ``materialize`` (the result
+    is one row per doc), so the call runs at call time (kept; SCALE.md,
+    "Spark actions at build time": the lazy form measured 1.4-2.1x
+    slower at sf0.1).
     """
-    if grams is None:
-        # fan_out: the tokenize+shingle kernel is the expensive stage
+    own = grams is None
+    if own:
         grams = (
-            fan_out(
-                df.select(
-                    F.col(id_col), F.col(text_col), target_pred.alias("_is_target")
-                )
-            )
-            .select(
+            df.select(
                 F.col(id_col),
                 tokens(F.col(text_col)).alias("_toks"),
-                F.col("_is_target"),
+                target_pred.alias("_is_target"),
             )
             .select(
                 F.col(id_col),
@@ -317,19 +308,18 @@ def dsir_weights(
                 F.explode(
                     shingles_from_tokens(F.col("_toks"), shingle_n)
                 ).alias("gram"),
-                F.lit(1).alias("n"),
             )
         )
-    counts = grams.groupBy(
-        id_col,
-        "_is_target",
-        F.pmod(F.xxhash64(F.col("gram")), F.lit(n_buckets)).alias("bucket"),
-    ).agg(F.sum("n").alias("n"))
-    hist = counts.groupBy("bucket").agg(
-        F.sum(F.when(F.col("_is_target"), F.col("n")).otherwise(0))
+    grams = grams.withColumn(
+        "bucket", F.pmod(F.xxhash64(F.col("gram")), F.lit(n_buckets))
+    )
+    if own:
+        grams = grams.persist()
+    hist = grams.groupBy("bucket").agg(
+        F.sum(F.when(F.col("_is_target"), 1).otherwise(0))
         .cast("double")
         .alias("n_t"),
-        F.sum("n").cast("double").alias("n_r"),
+        F.count(F.lit(1)).cast("double").alias("n_r"),
     )
     totals = hist.agg(
         F.sum("n_t").alias("tot_t"), F.sum("n_r").alias("tot_r")
@@ -345,18 +335,19 @@ def dsir_weights(
             ).alias("log_ratio"),
         )
     )
-    # a LEFT join, equal to the inner one (every bucket of counts has a
-    # ratio row): an inner join would make the optimizer push an inferred
-    # isnotnull(bucket) filter into this side only, and the two readers of
-    # counts would then no longer share its exchange
-    return (
-        counts.join(F.broadcast(ratio), "bucket", "left")
+    weights = (
+        grams.join(F.broadcast(ratio), "bucket")
         .groupBy(id_col)
         .agg(
-            F.sum("n").alias("n_grams"),
-            F.sum(F.col("n") * F.col("log_ratio")).alias("dsir_weight"),
+            F.count(F.lit(1)).alias("n_grams"),
+            F.sum("log_ratio").alias("dsir_weight"),
         )
     )
+    if own:
+        from .dedup import materialize
+
+        return materialize(weights, grams)
+    return weights
 
 
 # ---------------------------------------------------------------------------
@@ -675,7 +666,6 @@ def doc_perplexity(mean_logprob_col) -> "F.Column":
 
 __all__ = [
     "BroadcastBloom",
-    "bigram_counts",
     "bigram_lm_doc_scores",
     "bigram_rows",
     "bloom_decontaminate",

@@ -348,8 +348,8 @@ def lsh_dup_pairs(
     literals (a runtime-derived count can't live in a static oracle).
     Either way the function runs that one count at call time (kept;
     SCALE.md, "Spark actions at build time"): it sizes the family or
-    gates the pre-verify distinct below, and the rest of the plan is
-    lazy.
+    gates the pre-verify distinct below. The verified pairs are then
+    pinned at call time too (same table: faster than the lazy plan).
     At 500 rows with ``recall_anchor=0.9`` auto derives exactly the
     pinned 16/4 family (pytest-pinned equal).
 
@@ -418,8 +418,12 @@ def lsh_dup_pairs(
             base.withColumn("_bks", buckets_udf(F.col(vec_col)))
             .select(id_col, F.posexplode("_bks").alias("band", "bucket"))
         )
-    from .dedup import capped_bucket_pairs
+    from .dedup import capped_bucket_pairs, materialize
 
+    # the band buckets are persisted and the verified pairs pinned (kept;
+    # SCALE.md, "Spark actions at build time"): at sf1 the lazy plan ran
+    # slower than this pin
+    bb = bb.persist()
     # shared self-join core (cap window + one reused exchange — see
     # capped_bucket_pairs). IDs ONLY through the join: carrying the vectors
     # would shuffle dim floats per candidate ROW; they re-attach at the
@@ -474,7 +478,7 @@ def lsh_dup_pairs(
         dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")),
         6,
     )
-    return (
+    pairs = (
         cand.join(va, "id_a")
         .join(vb, "id_b")
         .select("id_a", "id_b", sim.alias("cos_sim"))
@@ -485,6 +489,7 @@ def lsh_dup_pairs(
         # pair-list-sized, so the exchange is noise)
         .dropDuplicates(["id_a", "id_b"])
     )
+    return materialize(pairs, bb)
 
 
 def _band_buckets_udf(planes_by_band: list[list[list[float]]]):

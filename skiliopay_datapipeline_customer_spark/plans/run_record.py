@@ -47,9 +47,11 @@ def hygiene(spark) -> None:
     ContextCleaner queue their JVM blocks), clear the cache manager, and
     unpersist the persistent RDDs still alive.
 
-    Those RDDs are the two result pins SCALE.md's "Spark actions at build
-    time" table keeps (``ngram_jaccard_pairs`` and the distributed
-    connected-components tiers); every other operator is lazy and pins
+    Those RDDs are the result pins SCALE.md's "Spark actions at build
+    time" table keeps (``ngram_jaccard_pairs``, the distributed
+    connected-components tiers, ``lsh_dup_pairs``,
+    curated_selection_pipeline, and the bigram LM scorer and DSIR
+    without a ``grams`` frame); every other operator is lazy and pins
     nothing. The gc-based chain cannot release the newest localCheckpoint
     pin: Python's gc only QUEUES the py4j detach, so the ContextCleaner
     frees it one query late (measured r12 at sf1: one stored RDD held

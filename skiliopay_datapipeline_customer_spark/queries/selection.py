@@ -449,39 +449,52 @@ def bloom_decontaminated_corpus(spark, sf_dir):
     """,
 )
 def curated_selection_pipeline(spark, sf_dir):
+    from ..operators.dedup import materialize
+
     docs = table(spark, sf_dir, "documents")
-    # ONE per-doc bigram count frame feeds BOTH pipeline stages: the LM
-    # scoring pass consumes it whole, and the DSIR stage consumes it
-    # filtered to the quality survivors (its 2-gram shingles are the
+    # ONE persisted bigram-occurrence frame feeds BOTH pipeline stages:
+    # the LM scoring pass consumes it whole, and the DSIR stage consumes
+    # it filtered to the quality survivors (its 2-gram shingles are the
     # identical space-joined bigrams — shingles_from_tokens(n=2) ≡
-    # bigram_rows). Nothing is persisted: its readers join it on
-    # different keys, so the optimizer pushes a different inferred
-    # not-null filter into each and their exchanges are not all shared —
-    # the tokenize kernel runs up to three times, on every core
-    # (bigram_counts fans out). Persisting this frame measured slower at
-    # sf0.1 (13 s against 6.5 s lazy: 81 stages against 30).
-    counts = S.bigram_counts(docs)
-    scores = S.bigram_lm_doc_scores(docs, grams=counts).join(
+    # bigram_rows), so the corpus text is tokenized once. keep (doc-level)
+    # is persisted too: it feeds the DSIR gram filter AND the final join,
+    # and recomputing it replays the whole LM stage; the DSIR occurrences
+    # feed its histogram and its weight join. Each frame's readers join
+    # it on different keys, so exchange reuse cannot stand in for these
+    # persists: one terminal pin runs the whole LM→keep→DSIR→decile plan
+    # and releases all three (kept; SCALE.md, "Spark actions at build
+    # time").
+    big = S.bigram_rows(docs, with_w1=False).persist()
+    scores = S.bigram_lm_doc_scores(docs, grams=big).join(
         docs.select("doc_id", "lang"), "doc_id"
     )
-    keep = S.quality_buckets(
-        scores, "mean_bigram_logprob", "lang", n_buckets=3, round_digits=4
-    ).filter(F.col("quality_bucket") != "tail")
-    dsir_grams = counts.join(
-        keep.select("doc_id", (F.col("lang") == "en").alias("_is_target")),
-        "doc_id",
+    keep = (
+        S.quality_buckets(
+            scores, "mean_bigram_logprob", "lang", n_buckets=3, round_digits=4
+        )
+        .filter(F.col("quality_bucket") != "tail")
+        .persist()
     )
-    weights = S.dsir_weights(None, n_buckets=1024, grams=dsir_grams)
+    dsir_grams = (
+        big.join(
+            keep.select("doc_id", (F.col("lang") == "en").alias("_is_target")),
+            "doc_id",
+        )
+        .select("doc_id", "_is_target", "gram")
+        .persist()
+    )
+    weights = S.dsir_weights(None, None, n_buckets=1024, grams=dsir_grams)
     ranked = weights.select(
         "doc_id", F.round("dsir_weight", 4).alias("dsir_weight")
     ).join(keep.select("doc_id", "lang", "quality_bucket"), "doc_id")
     w = Window.orderBy(F.col("dsir_weight").desc(), F.col("doc_id"))
-    return (
+    result = (
         ranked.withColumn("decile", F.ntile(10).over(w).cast("int"))
         .filter(F.col("decile") <= 5)
         .select("doc_id", "lang", "quality_bucket", "dsir_weight", "decile")
         .orderBy("doc_id")
     )
+    return materialize(result, big, keep, dsir_grams)
 
 
 # ---------------------------------------------------------------------------

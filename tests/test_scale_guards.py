@@ -593,6 +593,52 @@ def test_plan_digest_reports_shapes_and_smells(spark, sf_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
+def _reused_exchanges(spark, run) -> int:
+    """ReusedExchange nodes in the final adaptive plans of the SQL
+    executions ``run()`` starts, read from the SQL status store after they
+    ran (the pre-execution explain shows no reuse)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def recent():
+        n = store.executionsCount()
+        it = store.executionsList(max(0, n - 50), 50).iterator()
+        while it.hasNext():
+            yield it.next()
+
+    first = max((e.executionId() for e in recent()), default=-1)
+    run()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return sum(
+        e.physicalPlanDescription().split("== Initial Plan ==")[0].count(
+            "ReusedExchange"
+        )
+        for e in recent()
+        if e.executionId() > first
+    )
+
+
+@pytest.mark.parametrize(
+    "name, reused",
+    [
+        ("minhash_lsh_candidates", 1),
+        ("simhash_near_pairs", 1),
+        ("shared_span_pairs", 1),
+    ],
+)
+def test_self_join_sides_share_one_exchange(spark, sf_dir, name, reused):
+    """The lazy self-joins persist nothing: both sides are one plan, and
+    exchange reuse runs the signature pipeline once per action. A reader
+    whose plan drifts from the other's (an inner join's inferred not-null
+    filter is enough) loses the ReusedExchange and re-runs the kernel."""
+    from skiliopay_datapipeline_customer_spark.plans import run_record
+    from skiliopay_datapipeline_customer_spark.queries import all_queries
+
+    fn = all_queries()[name]
+    assert _reused_exchanges(
+        spark, lambda: run_record.force(fn(spark, sf_dir))
+    ) == reused
+
+
 def test_partition_filter_strip_excludes_dpp_only_lists():
     """A PartitionFilters list holding ONLY dynamic-partition-pruning noise
     (isnotnull + dynamicpruningexpression(...) — nested parens included)

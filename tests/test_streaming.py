@@ -407,6 +407,39 @@ def test_dedup_ingest_replay_is_idempotent(spark, sf_dir, tmp_path):
     assert first == second and 0 < len(first) < docs.count()
 
 
+def test_dedup_ingest_signs_each_batch_once(spark, sf_dir, tmp_path, monkeypatch):
+    """Both writes of a batch (survivors, store additions) read its band
+    buckets; the signature pipeline must run once per batch, not once per
+    reader. A counting UDF on the buckets' output tallies every row the
+    pipeline produces."""
+    from skiliopay_datapipeline_customer_spark.operators import dedup
+    from skiliopay_datapipeline_customer_spark.streaming.sinks import dedup_ingest
+
+    docs = table(spark, sf_dir, "documents")
+    batch_a = docs.filter(F.col("doc_id") % 2 == 0)
+    batch_b = docs.filter(F.col("doc_id") % 2 == 1)
+    rows_a = dedup.minhash_band_buckets(batch_a).count()
+    rows_b = dedup.minhash_band_buckets(batch_b).count()
+
+    signed = spark.sparkContext.accumulator(0)
+    real = dedup.minhash_band_buckets
+
+    def counted(*args, **kwargs):
+        def tick(i):
+            signed.add(1)
+            return i
+
+        out = real(*args, **kwargs)
+        return out.withColumn("doc_id", F.udf(tick, "long")("doc_id"))
+
+    monkeypatch.setattr(dedup, "minhash_band_buckets", counted)
+    sink = dedup_ingest(str(tmp_path / "store"), str(tmp_path / "out"))
+    sink(batch_a, 0)
+    assert signed.value == rows_a
+    sink(batch_b, 1)  # dedups against batch 0's store
+    assert signed.value == rows_a + rows_b
+
+
 def test_transform_with_state_matches_batch_totals(spark, sf_dir, tmp_path):
     """Spark 4 transformWithStateInPandas tier: same lifetime-totals
     contract as the applyInPandasWithState operator — state carries across
