@@ -42,18 +42,13 @@ HEADLINE = [
     "simhash_near_pairs",          # banded hamming self-join
     "dedup_clusters",              # connected components over dup pairs
     "cosine_topk",                 # embedding similarity
-    # r12: the PRODUCTION LSH tier (lsh_dup_pairs_fast — Arrow-batched
-    # BLAS bucket projection) joins the headline set: timing only the
-    # interpreted expr fold misstated the engine's actual speed by ~1.5x
-    # (min-of-3 at sf0.1: 4.33 s expr vs 2.66 s fast). The expr
-    # verification tier KEEPS its headline slot next to it — the bench
-    # contract allows ADDING query entries, never removing or renaming
-    # one, so lsh_dup_pairs' r6→r12 timing history stays unbroken in the
-    # same record (an earlier r12 session had swapped the slot; reverted
-    # — see OPTIMIZATION_r12.md). Both are declared queries under the
-    # SAME oracle and pytest-pinned frame-equal on the driver corpora.
-    "lsh_dup_pairs",               # tiered LSH near-dup pairs (expr tier)
-    "lsh_dup_pairs_fast",          # tiered LSH near-dup pairs (BLAS tier)
+    # Two slots, one query body: the LSH near-dup pairs once ran an expr
+    # verification tier and a BLAS production tier, and both names carry
+    # their timing history since r12 (the bench contract allows adding
+    # entries, never removing or renaming one). Both now run the one
+    # exact numpy kernel under the same oracle.
+    "lsh_dup_pairs",               # tiered LSH near-dup pairs
+    "lsh_dup_pairs_fast",          # tiered LSH near-dup pairs (same body)
     "token_stats",                 # text analysis
     "token_pack_assignments",      # distributed cumsum sequence packing
     "png_roundtrip_decode",        # real codec round-trip (mapInPandas)

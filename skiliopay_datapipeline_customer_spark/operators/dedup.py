@@ -36,10 +36,10 @@ def materialize(df: DataFrame, *intermediates: DataFrame) -> DataFrame:
     must be populated before its joins are planned; the distributed
     tiers of :func:`connected_components`, whose rounds truncate
     lineage; and the ones that measured faster pinned than lazy —
-    ``similarity.lsh_dup_pairs``, curated_selection_pipeline, and the
-    bigram LM scorer and DSIR when they build their own occurrence
-    frame. Every other operator of the family returns a lazy plan. The checkpointed RDD is
-    released by the ContextCleaner once the result is garbage collected.
+    curated_selection_pipeline, and the bigram LM scorer and DSIR when
+    they build their own occurrence frame. Every other operator of the
+    family returns a lazy plan. The checkpointed RDD is released by the
+    ContextCleaner once the result is garbage collected.
     """
     out = df.localCheckpoint(eager=True)
     for d in intermediates:
@@ -216,9 +216,10 @@ def capped_bucket_pairs(
     bb: DataFrame, id_col: str, max_bucket_size: int
 ) -> DataFrame:
     """(id, band, bucket) rows → candidate id pairs (``id_a < id_b``), one
-    output row per shared bucket — the self-join core both LSH families
-    (minhash text dedup here, random-plane embedding dedup in
-    ``similarity.lsh_dup_pairs``) build on.
+    output row per shared bucket — the self-join core of the minhash
+    text-dedup tiers. (The random-plane embedding tier,
+    ``similarity.lsh_dup_pairs``, verifies each bucket in place and
+    needs no self-join.)
 
     Bucket-size cap as a count window over the self-join key, not a
     groupBy+join-back: ONE exchange on (band, bucket) that the self-join
@@ -230,8 +231,8 @@ def capped_bucket_pairs(
     explicit ``repartition`` to the session's shuffle partition count: the
     banded rows are small, so AQE would coalesce an ordinary exchange to
     one partition, and the candidate join and everything the caller
-    chains onto it (the cosine verify of ``lsh_dup_pairs``) would then run
-    as ONE task (measured at sf0.1: a 5.8 s single-task verify stage that
+    chains onto it would then run as ONE task (measured at sf0.1 on the
+    embedding tier's former cosine verify: a 5.8 s single-task stage that
     takes 1.9 s over 8 partitions). Buckets over ``max_bucket_size`` are
     dropped before the join (degenerate-mass skew guard).
     """

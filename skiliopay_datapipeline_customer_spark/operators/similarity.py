@@ -302,15 +302,14 @@ def lsh_dup_pairs(
     num_planes: int | str = 16,
     bands: int = 4,
     max_bucket_size: int = 10_000,
-    kernel: str = "numpy",
     recall_anchor: float | None = None,
     dim: int | None = None,
 ) -> DataFrame:
     """Distributed tiered near-dup pairs: banded hyperplane-LSH candidate
     generation + exact cosine verify. The corpus-scale public API — unlike
     the all-pairs kernel (`cosine_dup_pairs`, guarded), pairs only form
-    within an LSH (band, bucket), so cost is bounded by bucket sizes and the
-    whole plan is shuffles + joins (nothing driver-side).
+    within an LSH (band, bucket), so cost is bounded by bucket sizes and
+    nothing reaches the driver.
 
     `num_planes` split into `bands` independent plane families; a pair is a
     candidate if ANY band bucket matches (recall grows with bands, candidate
@@ -320,13 +319,30 @@ def lsh_dup_pairs(
     exact verify keeps precision at 1. Buckets over `max_bucket_size` are
     dropped (degenerate mass, e.g. zero vectors — the skew guard at 100 TB).
 
-    ``kernel`` picks the bucket-projection implementation: ``"numpy"`` (the
-    production tier — one Arrow-batched batch × planesᵀ BLAS multiply) or
-    ``"expr"`` (sequential left-fold Column expressions whose IEEE add order
-    an ANSI-SQL oracle can replicate term by term — the verification tier;
-    BLAS reorders the sum, so a projection landing near 0 could flip sign
-    vs the oracle's fold). Identical plane family (md5-derived literals),
-    identical downstream plan.
+    One exact numpy kernel in two Python stages of one lazy plan:
+
+    - bucketing (``mapInPandas`` over a fanned-out scan) emits
+      ``(id, band, bucket, _vd)`` rows; every projection is the left fold
+      ``acc = acc + x[d] * h[d]`` from 0.0 in element order, vectorised
+      over rows — the IEEE add order of :func:`_bucket_fold_sql`, so the
+      buckets are bit-identical to that SQL form and to the DuckDB oracle;
+    - verify (``applyInPandas`` per (band, bucket), one explicit exchange
+      to the session's shuffle partition count so AQE cannot coalesce the
+      verify into one task) skips groups over the cap and folds norms and
+      dots the same way, so each raw cosine is bit-identical to Spark's
+      ``dot / (norm * norm)``. Pairs with ``id_a < id_b`` and a raw cosine
+      of at least ``threshold - 1e-6`` leave the group; Spark rounds to 6
+      dp, filters on ``threshold`` and drops multi-band duplicates.
+
+    Hostile input keeps the SQL semantics: a row with a null id never
+    pairs, and a null vector, a null element or ``size != dim`` gives a
+    null bucket, so these rows are dropped up front (a null-id row thus
+    no longer counts toward its bucket's cap); NaN orders above every
+    number in Spark and DuckDB, so a NaN projection is bit 1 and a NaN
+    cosine passes the filter; a zero denominator in a verified group
+    raises, as ANSI ``DIVIDE_BY_ZERO`` does; a duplicated id is verified
+    with the copy that shared the bucket. A group is buffered whole in
+    the Python worker before the cap check.
 
     **Scale note — size the plane count to the corpus.** Expected
     candidate volume is ~bands · N² / 2^(planes/bands): a FIXED plane
@@ -342,16 +358,14 @@ def lsh_dup_pairs(
     floored at the caller's value) — deepening buckets WITHOUT more
     bands silently decays recall as the corpus grows (measured at sf1:
     4 bands @ 7 planes/band found 26% fewer verified 0.8-pairs than the
-    pinned family; 8 derived bands restore the anchor). Costs one
-    column-pruned count() job; the declared ORACLE queries keep the
-    pinned 16/4 family because their DuckDB SQL embeds the same plane
-    literals (a runtime-derived count can't live in a static oracle).
-    Either way the function runs that one count at call time (kept;
-    SCALE.md, "Spark actions at build time"): it sizes the family or
-    gates the pre-verify distinct below. The verified pairs are then
-    pinned at call time too (same table: faster than the lazy plan).
-    At 500 rows with ``recall_anchor=0.9`` auto derives exactly the
-    pinned 16/4 family (pytest-pinned equal).
+    pinned family; 8 derived bands restore the anchor). Auto costs one
+    column-pruned count() job at call time (kept; SCALE.md, "Spark
+    actions at build time"); the pinned family runs no action at build
+    time. The declared ORACLE queries keep the pinned 16/4 family because
+    their DuckDB SQL embeds the same plane literals (a runtime-derived
+    count can't live in a static oracle). At 500 rows with
+    ``recall_anchor=0.9`` auto derives exactly the pinned 16/4 family
+    (pytest-pinned equal).
 
     ``recall_anchor`` is the cosine at which auto provisions recall; it
     defaults to the caller's ``threshold`` — the r11 form pinned it at
@@ -363,7 +377,6 @@ def lsh_dup_pairs(
     adds bands: at equal ppb its verified pairs are a SUPERSET of any
     higher-anchor family's (pytest-pinned vs the pinned 16/4).
     """
-    n_rows = None
     if num_planes == "auto":
         n_rows = df.select(id_col).count()
         ppb = max(4, math.ceil(math.log2(max(n_rows, 1) / 64)) if n_rows > 64 else 4)
@@ -378,7 +391,6 @@ def lsh_dup_pairs(
         raise ValueError(
             f"num_planes ({num_planes}) must be divisible by bands ({bands})"
         )
-    ppb = num_planes // bands
     # the declared queries pass `dim` (their oracle SQL embeds dim-sized
     # plane literals, so the fixture dim is pinned anyway) — skips one
     # metadata .first() job per call; default None probes one row
@@ -386,135 +398,119 @@ def lsh_dup_pairs(
         dim = _probe_dim(df, vec_col)
     from ..io import fan_out
 
-    # the plane-projection kernel is the expensive map stage; a one-row-group
-    # embedding dump would otherwise project every vector on a single core
-    base = fan_out(df.select(id_col, vec_col))
-    planes_by_band = [
-        make_planes(ppb, dim, plane_offset=band * ppb) for band in range(bands)
-    ]
-    if kernel == "expr":
-        # hoist the float→double cast to a projected attribute: every
-        # band×plane dot references the vector, and an inline cast re-ran
-        # the interpreted array transform num_planes× per row, while a
-        # projected attribute casts once per row (CollapseProject keeps
-        # the boundary: a lambda transform referenced many times is not
-        # collapse-cheap). The cast is exact, so the fold sees
-        # bit-identical doubles either way.
-        bd = base.select(id_col, F.expr(_double_vec_sql(vec_col)).alias("_vd"))
-        buckets_sql = "array(" + ",".join(
-            _bucket_fold_sql("_vd", planes_by_band[band])
-            for band in range(bands)
-        ) + ")"
-        bb = bd.select(
-            id_col, F.expr(f"posexplode({buckets_sql})").alias("band", "bucket")
+    buckets, verify = _lsh_kernel(
+        num_planes, bands, dim, threshold, max_bucket_size, id_col, vec_col
+    )
+    id_type = df.schema[id_col].dataType.simpleString()
+    nparts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    clean = df.select(id_col, vec_col).filter(
+        F.col(id_col).isNotNull()
+        & (F.size(vec_col) == dim)
+        & F.forall(vec_col, lambda v: v.isNotNull())
+    )
+    bb = fan_out(clean).mapInPandas(
+        buckets,
+        schema=f"{id_col} {id_type}, band int, bucket long, _vd array<double>",
+    )
+    return (
+        bb.repartition(nparts, "band", "bucket")
+        .groupBy("band", "bucket")
+        .applyInPandas(verify, schema=f"id_a {id_type}, id_b {id_type}, _cos double")
+        # pandas→Arrow writes a NaN cosine as null, and verify emits
+        # no other null, so the coalesce restores it
+        .select(
+            "id_a",
+            "id_b",
+            F.round(F.coalesce("_cos", F.lit(float("nan"))), 6).alias("cos_sim"),
         )
-    else:
-        # all band buckets in ONE Arrow-batched numpy matmul per batch: the
-        # expression-tree form evaluates planes × dims multiply-adds per row
-        # in the interpreter (higher-order fns don't codegen) — the
-        # vectorized UDF is the sanctioned fast path for this dense math
-        buckets_udf = _band_buckets_udf(planes_by_band)
-        bb = (
-            base.withColumn("_bks", buckets_udf(F.col(vec_col)))
-            .select(id_col, F.posexplode("_bks").alias("band", "bucket"))
-        )
-    from .dedup import capped_bucket_pairs, materialize
-
-    # the band buckets are persisted and the verified pairs pinned (kept;
-    # SCALE.md, "Spark actions at build time"): at sf1 the lazy plan ran
-    # slower than this pin
-    bb = bb.persist()
-    # shared self-join core (cap window + one reused exchange — see
-    # capped_bucket_pairs). IDs ONLY through the join: carrying the vectors
-    # would shuffle dim floats per candidate ROW; they re-attach at the
-    # verify tier (measured r13: the carried-vector form was SLOWER at
-    # sf0.1 — the verify joins broadcast the small vecs frame).
-    cand = capped_bucket_pairs(bb, id_col, max_bucket_size)
-    # Dedup candidates BEFORE the verify tier when buckets are DEEP (r13
-    # — refines the r12 "dedup only after the filter" rule on
-    # measurement): multi-band collisions stop being rare once buckets
-    # deepen (sf1's occupancy-500 pinned family: 23.4% of 12.1M candidate
-    # pairs are duplicates, each paying two vector-join probes plus a
-    # dim-length interpreted dot — pre-distinct measured 13.9 → 7.2 s
-    # there), but the distinct's exchange is pure overhead while buckets
-    # are shallow (sf0.1: occupancy 125, 10% duplicates, +0.7 s — the
-    # verify joins broadcast the vecs frame, so this would be the
-    # pipeline's ONLY candidate-sized shuffle). Gate on expected bucket
-    # occupancy n/2^ppb — the quantity that drives the duplicate rate —
-    # with the crossover pinned between the two measured points; the
-    # count is column-pruned and reuses the auto family's (which, sizing
-    # ppb to occupancy ~64, never dedups — its collision rate stays low
-    # by construction). Output unchanged either way: verify is
-    # deterministic per pair and the post-filter dropDuplicates collapses
-    # multi-band survivors; this only moves WHERE the collapse happens.
-    if n_rows is None:
-        n_rows = df.select(id_col).count()
-    if n_rows / float(1 << ppb) >= 256:
-        cand = cand.distinct()
-    # verify tier: norms fold ONCE PER DOC here, not per pair — the same
-    # left fold over the same list produces the identical double, so oracle
-    # bit-compatibility is preserved while the per-pair work drops to the
-    # dot product. The float→double cast is ALSO hoisted per doc: casting
-    # is exact, so the fold sees bit-identical doubles, while the per-pair
-    # interpreted work drops two transform passes (candidates ≥ docs in any
-    # dup-bearing corpus; the wider shuffled array — 4 extra bytes/element
-    # on the verify join sides — is the cheaper side of that trade). Plain
-    # joins (no broadcast hint): the vector frame is corpus-sized at
-    # 100 TB, AQE picks broadcast when it actually fits.
-    vecs = df.select(
-        F.col(id_col), as_double(F.col(vec_col)).alias("_vd")
-    ).withColumn("_n", norm(F.col("_vd")))
-    va = vecs.select(
-        F.col(id_col).alias("id_a"),
-        F.col("_vd").alias("_va"),
-        F.col("_n").alias("_na"),
-    )
-    vb = vecs.select(
-        F.col(id_col).alias("id_b"),
-        F.col("_vd").alias("_vb"),
-        F.col("_n").alias("_nb"),
-    )
-    sim = F.round(
-        dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")),
-        6,
-    )
-    pairs = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", sim.alias("cos_sim"))
         .filter(F.col("cos_sim") >= threshold)
-        # the ONE pair-dedup of the pipeline, on the post-threshold frame:
-        # collapses multi-band candidate collisions AND endpoint-count
-        # multiplication from a duplicated id in df (this frame is
-        # pair-list-sized, so the exchange is noise)
+        # collapses multi-band candidate collisions; the frame is
+        # pair-list-sized, so the exchange is noise
         .dropDuplicates(["id_a", "id_b"])
     )
-    return materialize(pairs, bb)
 
 
-def _band_buckets_udf(planes_by_band: list[list[list[float]]]):
-    """Arrow-batched bucket assignment: for each row vector, the packed sign
-    bits of its projections onto every band's plane family — one
-    batch × planesᵀ BLAS multiply per Arrow batch, returning
-    ``array<long>`` indexed by band."""
+def _lsh_kernel(
+    num_planes: int,
+    bands: int,
+    dim: int,
+    threshold: float,
+    max_bucket_size: int,
+    id_col: str,
+    vec_col: str,
+):
+    """The two Python stages of :func:`lsh_dup_pairs`: ``buckets`` (the
+    ``mapInPandas`` body) and ``verify`` (the ``applyInPandas`` body of
+    one (band, bucket) group). Both are nested closures, which cloudpickle
+    ships by value, so executors never import this package."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
 
-    mats = [np.array(p, dtype=np.float64) for p in planes_by_band]
-    weights = [(2 ** np.arange(m.shape[0])).astype(np.int64) for m in mats]
+    ppb = num_planes // bands
+    # band b's planes are rows [b·ppb, (b+1)·ppb) of one family, stored
+    # dim-major like the vectors below so each fold step reads a row
+    planes_t = np.array(make_planes(num_planes, dim)).T
+    weights = np.tile(1 << np.arange(ppb, dtype=np.int64), bands)
+    cut = threshold - 1e-6
 
-    def band_buckets(vecs):
-        x = np.array(vecs.tolist(), dtype=np.float64)
-        per_band = [((x @ m.T) > 0) @ w for m, w in zip(mats, weights)]
-        stacked = np.stack(per_band, axis=1)
-        return pd.Series([row.tolist() for row in stacked])
+    def fold(a, b):
+        # sum over d of a[d] * b[d] as a left fold from 0.0 in d order
+        # (dim-major operands, numpy broadcasting over the rest)
+        acc = 0.0
+        for d in range(a.shape[0]):
+            acc = acc + a[d] * b[d]
+        return acc
 
-    # real-object annotations: the module's `from __future__ import
-    # annotations` would stringify inline hints, and pandas_udf's eval-type
-    # inference can't resolve strings against locally-imported names
-    band_buckets.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
-    return pandas_udf(band_buckets, "array<long>")
+    def buckets(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            xt = np.ascontiguousarray(x.T)
+            with np.errstate(all="ignore"):
+                proj = fold(xt[:, :, None], planes_t[:, None, :])
+            # NaN orders above every number in Spark and DuckDB
+            bits = (proj > 0) | np.isnan(proj)
+            packed = (bits * weights).reshape(len(pdf), bands, ppb).sum(axis=2)
+            yield pd.DataFrame(
+                {
+                    id_col: np.repeat(pdf[id_col].to_numpy(), bands),
+                    "band": np.tile(np.arange(bands, dtype=np.int32), len(pdf)),
+                    "bucket": packed.ravel(),
+                    "_vd": pd.Series(list(np.repeat(x, bands, axis=0))),
+                }
+            )
+
+    def verify(pdf):
+        import pandas as pd
+
+        pdf = pdf.sort_values(id_col, kind="stable")
+        ids = pdf[id_col].to_numpy()
+        n = len(ids)
+        out = [(ids[:0], ids[:0], np.empty(0))]  # typed, for an empty group
+        if n <= max_bucket_size:
+            xt = np.ascontiguousarray(np.stack(pdf["_vd"].to_numpy()).T)
+            step = max(1, (1 << 20) // n)
+            with np.errstate(all="ignore"):
+                norms = np.sqrt(fold(xt, xt))
+                for s in range(0, n, step):
+                    e = min(n, s + step)
+                    dots = fold(xt[:, s:e, None], xt[:, None, s:])
+                    denom = norms[s:e, None] * norms[None, s:]
+                    pair = ids[s:e, None] < ids[None, s:]
+                    if (pair & (denom == 0)).any():
+                        raise ZeroDivisionError(
+                            "DIVIDE_BY_ZERO: zero-norm vector in a verified "
+                            "LSH bucket"
+                        )
+                    cos = dots / denom
+                    i, j = np.nonzero(pair & ((cos >= cut) | np.isnan(cos)))
+                    out.append((ids[s + i], ids[s + j], cos[i, j]))
+        a, b, c = (np.concatenate(col) for col in zip(*out))
+        return pd.DataFrame({"id_a": a, "id_b": b, "_cos": c})
+
+    return buckets, verify
 
 
 def hamming_ball_masks(num_planes: int, radius: int) -> list[int]:

@@ -49,13 +49,13 @@ def hygiene(spark) -> None:
 
     Those RDDs are the result pins SCALE.md's "Spark actions at build
     time" table keeps (``ngram_jaccard_pairs``, the distributed
-    connected-components tiers, ``lsh_dup_pairs``,
-    curated_selection_pipeline, and the bigram LM scorer and DSIR
-    without a ``grams`` frame); every other operator is lazy and pins
-    nothing. The gc-based chain cannot release the newest localCheckpoint
-    pin: Python's gc only QUEUES the py4j detach, so the ContextCleaner
-    frees it one query late (measured r12 at sf1: one stored RDD held
-    ~480 MB of old gen across hygiene cycles). Safe here because hygiene
+    connected-components tiers, curated_selection_pipeline, and the
+    bigram LM scorer and DSIR without a ``grams`` frame); every other
+    operator is lazy and pins nothing. The gc-based chain cannot release
+    the newest localCheckpoint pin: Python's gc only QUEUES the py4j
+    detach, so the ContextCleaner frees it one query late (measured r12
+    at sf1: one stored RDD held ~480 MB of old gen across hygiene
+    cycles). Safe here because hygiene
     runs BETWEEN queries; do not call it while holding a
     localCheckpoint-derived frame (its lineage is truncated).
     The closing ``System.gc()`` is a full collection (~180 ms per call)

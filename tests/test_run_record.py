@@ -126,8 +126,6 @@ def test_fit_line_leaves_per_query_records_in_the_file():
 KEPT_PINS = {
     "ngram_jaccard_dups",
     "dedup_clusters",
-    "lsh_dup_pairs",
-    "lsh_dup_pairs_fast",
     "curated_selection_pipeline",
 }
 
@@ -140,6 +138,24 @@ def test_only_the_kept_pins_survive_a_headline_query(spark, sf_dir):
     assert not bench._failures(recs)
     pinned = {name for name, rec in recs.items() if rec["pins"]}
     assert pinned == KEPT_PINS
-    # lsh_dup_pairs builds with the occupancy-gate count and its pin's
-    # stages as its only actions (11 jobs measured at sf0.001)
-    assert recs["lsh_dup_pairs"]["build_jobs"] <= 11, recs["lsh_dup_pairs"]
+    # the pinned-family LSH queries run no action while they are built
+    for name in ("lsh_dup_pairs", "lsh_dup_pairs_fast"):
+        assert recs[name]["build_jobs"] == 0, recs[name]
+
+
+def test_lsh_dup_pairs_runs_one_map_and_one_group_python_stage(spark, sf_dir):
+    """The executed plan of the LSH query holds one bucketing MapInPandas
+    and one verify FlatMapGroupsInPandas, and no scalar Python UDF (a
+    pushed-down filter over one ran the bucket kernel twice per vector)."""
+    import re
+
+    from skiliopay_datapipeline_customer_spark.queries import all_queries
+
+    df = all_queries()["lsh_dup_pairs_fast"](spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert "ArrowEvalPython" not in final, final
+    assert len(re.findall(r"\bMapInPandas\b", final)) == 1, final
+    assert len(re.findall(r"\bFlatMapGroupsInPandas\b", final)) == 1, final

@@ -206,51 +206,116 @@ def test_lsh_dup_pairs_one_row_per_pair_with_duplicate_ids(spark):
     assert len(pairs) == len(set(pairs)) > 0
 
 
-def test_lsh_fast_blas_tier_matches_expr_tier_with_measured_margin(spark, sf_dir):
-    """ADVICE r8: lsh_dup_pairs_fast carries a hard hash oracle over a BLAS
-    kernel that could in theory bucket differently when a projection lands
-    within float error of a hyperplane. Two defenses, both asserted here so
-    a numpy/BLAS/threading change fails pytest BEFORE the driver sweep:
+def test_lsh_dup_pairs_hostile_vectors_keep_sql_semantics(spark):
+    """Hostile rows get the semantics of the sequential-fold SQL form (the
+    one the DuckDB oracle replays); the expected rows are that form's
+    output. NaN orders above every number, so a NaN projection is bit 1
+    (rows 0 and 1 land in bucket 15 of every band, as does row 8 and
+    the first copy of id 9 in band 3) and a NaN cosine passes the
+    threshold. A null vector, a null element or a size other than dim
+    gives no bucket (rows 4-7 never pair). Id 9 appears twice: the
+    near copy shares every bucket with row 8, the negated copy none, so
+    (8, 9) is verified with the near copy only. A zero-norm vector in a
+    verified bucket raises, as ANSI DIVIDE_BY_ZERO does."""
+    import math
 
-    1. the BLAS tier's full output frame equals the expr tier's (the frame
-       the DuckDB oracle replicates bit-for-bit) on the driver corpus;
-    2. the smallest |projection| across every (vector, plane) pair is
-       orders of magnitude above the worst-case summation-reorder error
-       (dim * eps * max|term-product|), so NO sign can flip on this corpus
-       regardless of BLAS accumulation order — the caveat is a measured
-       margin, not a hope.
-    """
-    import numpy as np
+    import pytest
 
-    from skiliopay_datapipeline_customer_spark.io import table
-    from skiliopay_datapipeline_customer_spark.queries import QUERIES, load_all
-    from skiliopay_datapipeline_customer_spark.operators import similarity as S
-
-    load_all()
-    fast = [
-        tuple(r)
-        for r in QUERIES["lsh_dup_pairs_fast"](spark, sf_dir).collect()
+    nan = float("nan")
+    v8 = [0.3, -1.2, 0.7, 2.0, -0.4, 0.9, -1.5, 0.2]
+    rows = [
+        (0, [nan] + [1.0] * 7),
+        (1, [nan] + [2.0] * 7),
+        (2, [1.0] * 8),
+        (3, [1.0, 2.0] * 4),
+        (4, None),
+        (5, [1.0, None] + [1.0] * 6),
+        (6, [1.0] * 7),
+        (7, [1.0] * 9),
+        (8, v8),
+        (9, [x + 0.01 for x in v8]),
+        (9, [-x for x in v8]),
     ]
-    expr = [tuple(r) for r in QUERIES["lsh_dup_pairs"](spark, sf_dir).collect()]
-    assert fast == expr and len(fast) > 0
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = sorted(
+        (r.id_a, r.id_b, None if math.isnan(r.cos_sim) else r.cos_sim)
+        for r in S.lsh_dup_pairs(df, threshold=0.45).collect()
+    )
+    assert got == [
+        (0, 1, None),
+        (0, 8, None),
+        (0, 9, None),
+        (1, 8, None),
+        (1, 9, None),
+        (2, 3, 0.948683),
+        (8, 9, 0.999958),
+    ]
 
-    emb = np.array(
-        [
-            r["embedding"]
-            for r in table(spark, sf_dir, "embeddings").collect()
-        ],
-        dtype=np.float64,
+    zero = spark.createDataFrame(
+        [(0, [0.0] * 8), (1, [0.0] * 8), (2, [1.0] * 8)],
+        "vec_id long, embedding array<double>",
     )
-    planes = np.array(S.make_planes(16, emb.shape[1]), dtype=np.float64)
-    proj = emb @ planes.T
-    min_margin = float(np.abs(proj).min())
-    # worst-case reorder error of a dim-term dot product
-    worst_err = (
-        emb.shape[1]
-        * np.finfo(np.float64).eps
-        * float(np.max(np.abs(emb)) * np.max(np.abs(planes)))
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        S.lsh_dup_pairs(zero, threshold=0.45).collect()
+
+
+def test_lsh_kernel_cosine_equals_spark_fold_bit_for_bit(spark, sf_dir):
+    """The verify stage's raw cosine is Spark's dot / (norm * norm) over
+    the same left folds, bit for bit, on every pair of the first 400
+    fixture vectors (one group). A group over 1,024 rows verifies in row
+    blocks; the blocks must cover exactly the id_a < id_b pairs of one
+    unblocked fold."""
+    import numpy as np
+    import pandas as pd
+
+    emb = table(spark, sf_dir, "embeddings").orderBy("vec_id").limit(400)
+    vecs = emb.select("vec_id", S.as_double(F.col("embedding")).alias("v"))
+    want = {
+        (r[0], r[1]): r[2]
+        for r in vecs.alias("a")
+        .crossJoin(vecs.alias("b"))
+        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
+        .select(
+            "a.vec_id",
+            "b.vec_id",
+            S.cosine(F.col("a.v"), F.col("b.v")),
+        )
+        .collect()
+    }
+    assert len(want) == 400 * 399 // 2
+    rows = vecs.collect()
+    _, verify = S._lsh_kernel(16, 4, 64, -2.0, 10_000, "vec_id", "embedding")
+    out = verify(
+        pd.DataFrame(
+            {
+                "vec_id": [r[0] for r in rows],
+                "band": 0,
+                "bucket": 0,
+                "_vd": [np.array(r[1]) for r in rows],
+            }
+        )
     )
-    assert min_margin > 1e4 * worst_err, (min_margin, worst_err)
+    got = {(a, b): c for a, b, c in zip(out.id_a, out.id_b, out._cos)}
+    assert got == want
+
+    rng = np.random.default_rng(11)
+    n = 1500
+    ids = rng.permutation(n) // 2 * 3  # unsorted, every id twice
+    x = rng.normal(size=(n, 16))
+    out = verify(
+        pd.DataFrame({"vec_id": ids, "band": 0, "bucket": 0, "_vd": list(x)})
+    )
+    order = np.argsort(ids, kind="stable")
+    ids, x = ids[order], x[order]
+    dots = np.zeros((n, n))
+    for d in range(16):
+        dots = dots + x[:, d, None] * x[None, :, d]
+    norms = np.sqrt(np.diagonal(dots))
+    i, j = np.nonzero(ids[:, None] < ids[None, :])
+    want_block = sorted(
+        zip(ids[i], ids[j], (dots / (norms[:, None] * norms[None, :]))[i, j])
+    )
+    assert sorted(zip(out.id_a, out.id_b, out._cos)) == want_block
 
 
 def test_ivf_topk_exact_full_probe_equals_brute_force(spark, sf_dir):
@@ -385,14 +450,16 @@ def test_lsh_dup_pairs_auto_planes_scale_with_corpus(spark, sf_dir):
     out.limit(1).collect()
 
 
-def test_bucket_fold_sql_equals_python_left_fold(spark):
+def test_bucket_fold_sql_equals_python_left_fold(spark, sf_dir):
     """The LSH banding builder (`_bucket_fold_sql`) must equal its
     definition, computed locally: per plane a sequential left fold
     acc = acc + x·h from 0.0 in element order (the IEEE add order the
     DuckDB oracles replicate), sign bit = acc > 0, bits packed
     little-endian. Vectors include the zero vector, -0.0 components
     (projection exactly ±0 → bit 0) and the float→double cast of an
-    array<float> column."""
+    array<float> column. The `lsh_dup_pairs` bucketing stage must give
+    the same bucket per (vector, band), on these vectors and on the
+    fixture corpus plus zero and -0.0 vectors."""
     planes = S.make_planes(6, 8)
     vecs = [
         [0.0] * 8,
@@ -429,3 +496,38 @@ def test_bucket_fold_sql_equals_python_left_fold(spark):
     }
     assert got[0][1] == got[1][1] == got[2][1] == 0
     assert len({b for _, b in got.values()}) > 8
+
+    def kernel_equals_sql(frame, dim):
+        buckets, _ = S._lsh_kernel(16, 4, dim, 0.0, 10_000, "id", "vec")
+        kernel = frame.mapInPandas(
+            buckets, "id long, band int, bucket long, _vd array<double>"
+        ).select("id", "band", "bucket")
+        sql = frame.select(
+            "id",
+            F.posexplode(
+                F.array(
+                    *[
+                        F.expr(
+                            S._bucket_fold_sql(
+                                S._double_vec_sql("vec"),
+                                S.make_planes(4, dim, plane_offset=4 * band),
+                            )
+                        )
+                        for band in range(4)
+                    ]
+                )
+            ).alias("band", "bucket"),
+        )
+        k = sorted(map(tuple, kernel.collect()))
+        assert k == sorted(map(tuple, sql.collect()))
+        assert len(k) == 4 * frame.count()
+
+    kernel_equals_sql(df, 8)
+    emb = table(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
+    )
+    signed_zeros = spark.createDataFrame(
+        [(-1, [0.0] * 64), (-2, [-0.0] * 64), (-3, [-0.0, 0.0] * 32)],
+        "id long, vec array<float>",
+    )
+    kernel_equals_sql(emb.unionByName(signed_zeros), 64)
